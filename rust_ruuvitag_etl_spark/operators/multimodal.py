@@ -2,39 +2,35 @@
 processed with Arrow-batched ``mapInPandas`` (the pattern the reference's
 24-byte BLE payload decode B2 scales up to — SURVEY.md §2.1).
 
-The Spark-side plumbing (schemas, batch iteration, partitioning) is
-real and tested. SIX real codecs run on genuine byte formats via pure
-stdlib (``struct``/``zlib``) + numpy: WAV/PCM16 audio
-(:func:`decode_wav` — RIFF chunk-tree walk, padding rule, sign-correct
-LE sample decode), uncompressed 24-bit BMP (:func:`decode_bmp` —
-header parse, 4-byte row stride, BGR→RGB, bottom-up un-flip),
-COMPRESSED PNG (:func:`decode_png` — chunk CRCs, zlib inflate, all
-five scanline filters), COMPRESSED GIF (:func:`decode_gif` — a full
-variable-width LZW engine), ENTROPY-CODED baseline JPEG
-(:func:`decode_jpeg` — canonical Huffman from DHT, byte-unstuffing,
-restart resync, dequantize/de-zigzag, matrix IDCT, JFIF YCbCr→RGB),
-and COMPRESSED-AUDIO FLAC (:func:`decode_flac` — CRC-verified frames,
-constant/verbatim/fixed-predictor subframes with partitioned-Rice
-residuals, all three side-channel stereo modes). Each is
-oracle-checked end-to-end by a registry query on payloads packed
-in-engine (``multimodal_audio_stats``, ``multimodal_image_stats``,
-``multimodal_png_stats``, ``multimodal_gif_stats``,
-``multimodal_jpeg_stats``, ``multimodal_flac_stats``). Only the lossy
-psychoacoustic audio codecs (mp3/ogg) remain STUBBED (they genuinely
-need real media libraries): ``decode_image``/``decode_audio`` on
-unknown bytes raise NotImplementedError unless ``fake=True``, in which
-case a deterministic byte-statistics "decode" stands in so the
-dataflow can be exercised end-to-end.
-
-Scale posture: mapInPandas streams Arrow record batches — constant
-memory per task regardless of corpus size; binary columns never pass
-through Python row-at-a-time. Batch size is bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` for large blobs.
+Every codec operator is one :func:`decode_map` call: a per-blob
+decoder plus a batch-level emitter. EIGHT real codecs run on genuine
+byte formats via pure stdlib (``struct``/``zlib``) + numpy: WAV/PCM16
+audio (:func:`decode_wav` — RIFF chunk-tree walk, padding rule,
+sign-correct LE sample decode), uncompressed 24-bit BMP
+(:func:`decode_bmp` — header parse, 4-byte row stride, BGR→RGB,
+bottom-up un-flip), COMPRESSED PNG (:func:`decode_png` — chunk CRCs,
+zlib inflate, all five scanline filters), COMPRESSED GIF
+(:func:`decode_gif` — a full variable-width LZW engine), ENTROPY-CODED
+baseline JPEG (:func:`decode_jpeg` — canonical Huffman from DHT,
+byte-unstuffing, restart resync, dequantize/de-zigzag, matrix IDCT,
+JFIF YCbCr→RGB), COMPRESSED-AUDIO FLAC (:func:`decode_flac` —
+CRC-verified frames, constant/verbatim/fixed/LPC subframes with
+partitioned-Rice residuals, all three side-channel stereo modes),
+uncompressed AVI video (:func:`decode_avi` — RIFF container walk with
+idx1 verification) and baseline TIFF (:func:`decode_tiff_array` — IFD
+walk, strip assembly). The mp3 and Ogg CONTAINERS walk for real
+(:func:`decode_mp3_frames`, :func:`decode_ogg_pages`); only their
+psychoacoustic sample decode stays STUBBED (it genuinely needs media
+libraries). Each is oracle-checked end-to-end by a registry query on
+payloads packed in-engine (``multimodal_*_stats``,
+``multimodal_ogg_pages``, ``multimodal_mp3_frames``).
+``decode_image``/``decode_audio`` on unknown bytes raise
+NotImplementedError unless ``fake=True``, in which case a
+deterministic byte-statistics "decode" stands in so the dataflow can be
+exercised end-to-end.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +43,41 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = (
     "media_id long, n_bytes long, digest string, first_byte int, mean_byte double"
 )
+
+
+def decode_map(df: DataFrame, decode, emit, schema: str) -> DataFrame:
+    """The one Arrow decode loop every codec operator runs through.
+
+    ``df``'s first column is the row key. With a binary ``content``
+    column, ``decode`` gets each row's payload as ``bytes``; without
+    one (pack-then-decode callers over bare ids), it gets the key as an
+    ``int``. ``decode`` returns the row's decoded items — zero or more,
+    so AVI frames and planted copies fit — and is called exactly once
+    per row. ``emit(keys, items)`` receives every item of one Arrow
+    batch, each with its row's key, and returns the output columns as a
+    dict; batches with no items emit nothing.
+
+    Scale posture: mapInPandas streams Arrow record batches — constant
+    memory per task regardless of corpus size; the payload bytes stay
+    in Arrow buffers until the decode, which touches each blob exactly
+    once, and emitters vectorize at batch granularity. Batch size is
+    bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``."""
+    import pandas as pd
+
+    cols = df.columns
+    col, to_payload = ("content", bytes) if "content" in cols else (cols[0], int)
+
+    def batches(it):
+        for pdf in it:
+            keys, items = [], []
+            for key, payload in zip(pdf.iloc[:, 0], pdf[col]):
+                for item in decode(to_payload(payload)):
+                    keys.append(key)
+                    items.append(item)
+            if keys:
+                yield pd.DataFrame(emit(keys, items))
+
+    return df.mapInPandas(batches, schema=schema)
 
 
 def _total_decoder(fn):
@@ -427,45 +458,39 @@ def decode_audio(content: bytes, fake: bool = False) -> dict:
     return {"sample_rate": 16000, "n_samples": len(content) * 2}
 
 
-WAV_STATS_SCHEMA = (
+PCM_STATS_SCHEMA = (
     "media_id long, sample_rate int, n_channels int, n_samples long, "
     "sum_samples long, max_abs int, mean_sample double"
 )
 
 
-def wav_audio_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction over REAL WAV payloads:
-    each batch decodes its binary column with the stdlib RIFF/PCM16
-    parser (:func:`decode_wav`) and emits integer-exact sample stats
-    (sum, peak) plus the mean as ONE IEEE division of exact integers —
-    engine-reproducible, so the registry query's DuckDB oracle can
-    assert the whole pack→decode→aggregate chain arithmetically.
+def pcm_audio_stats(media: DataFrame, decode) -> DataFrame:
+    """Audio feature extraction over REAL PCM-producing payloads:
+    ``decode`` (:func:`decode_wav` or :func:`decode_flac`) turns each
+    blob into interleaved integer samples, and the emitter reports
+    integer-exact sample stats (sum, peak) plus the mean as ONE IEEE
+    division of exact integers — engine-reproducible, so the registry
+    queries' DuckDB oracles can assert the whole pack→decode→aggregate
+    chain arithmetically."""
+    return decode_map(
+        media, lambda b: (decode(b),), _pcm_stats, PCM_STATS_SCHEMA
+    )
 
-    Scale posture: mapInPandas streams record batches — constant memory
-    per task; the payload bytes stay in Arrow buffers until the decode,
-    which touches each blob exactly once."""
-    import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "sample_rate", "n_channels", "n_samples",
-                "sum_samples", "max_abs", "mean_sample",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_wav(bytes(content))
-                s = d["samples"]
-                total = int(sum(s))
-                out["media_id"].append(mid)
-                out["sample_rate"].append(d["sample_rate"])
-                out["n_channels"].append(d["n_channels"])
-                out["n_samples"].append(len(s))
-                out["sum_samples"].append(total)
-                out["max_abs"].append(max((abs(x) for x in s), default=0))
-                out["mean_sample"].append(total / len(s) if s else 0.0)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=WAV_STATS_SCHEMA)
+def _pcm_stats(keys, items) -> dict:
+    ns = [len(d["samples"]) for d in items]
+    sums = [int(sum(d["samples"])) for d in items]
+    return {
+        "media_id": keys,
+        "sample_rate": [d["sample_rate"] for d in items],
+        "n_channels": [d["n_channels"] for d in items],
+        "n_samples": ns,
+        "sum_samples": sums,
+        "max_abs": [
+            max((abs(x) for x in d["samples"]), default=0) for d in items
+        ],
+        "mean_sample": [t / n if n else 0.0 for t, n in zip(sums, ns)],
+    }
 
 
 def wav_pcm_samples(media: DataFrame) -> DataFrame:
@@ -473,46 +498,42 @@ def wav_pcm_samples(media: DataFrame) -> DataFrame:
     RIFF/WAVE payload decodes with the stdlib PCM16 parser
     (:func:`decode_wav`) and emits its raw signed samples as
     ``array<int>`` — the representation the gain-invariant energy-
-    envelope fingerprint consumes. Same Arrow mapInPandas scale posture
-    as :func:`wav_audio_stats`: streaming record batches, one decode
-    per blob, constant memory per task."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, smp = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_wav(bytes(content))
-                mids.append(mid)
-                smp.append(list(d["samples"]))  # already Python ints
-            yield pd.DataFrame({"media_id": mids, "samples": smp})
-
-    return media.mapInPandas(
-        batches, schema="media_id long, samples array<int>"
+    envelope fingerprint consumes."""
+    return decode_map(
+        media,
+        lambda b: (decode_wav(b)["samples"],),
+        lambda keys, smp: {
+            "media_id": keys,
+            "samples": [list(s) for s in smp],  # already Python ints
+        },
+        "media_id long, samples array<int>",
     )
 
 
-BMP_STATS_SCHEMA = (
+IMAGE_STATS_SCHEMA = (
     "media_id long, width int, height int, n_pixels long, "
     "sum_r long, sum_g long, sum_b long, max_channel int, "
     "topleft_r int, mean_luma double"
 )
 
 
-def bmp_image_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched image feature extraction over REAL BMP payloads:
-    each batch decodes its binary column with the stdlib BI_RGB parser
-    (:func:`decode_bmp`) and emits integer-exact channel stats plus the
-    top-left pixel's red channel (order-SENSITIVE — proves the
-    bottom-up row un-flip and BGR→RGB swap, which sums alone cannot)
-    and the mean luma as ONE IEEE division of exact integers.
+def image_stats(media: DataFrame, decode_array) -> DataFrame:
+    """Image feature extraction over REAL payloads: ``decode_array``
+    (:func:`decode_bmp_array`, :func:`decode_png_array`,
+    :func:`decode_gif_array`, :func:`decode_jpeg_array` or
+    :func:`decode_tiff_array`) turns each blob into an (h, w, 3) uint8
+    view, and the emitter reports integer-exact channel stats, the
+    top-left pixel's red channel and the mean luma as ONE IEEE division
+    of exact integers.
 
-    Scale posture: mapInPandas streams record batches — constant memory
-    per task; each blob is decoded exactly once. The per-pixel work is
-    vectorized at BATCH granularity, not per image: every image's pixel
-    view (:func:`decode_bmp_array`) is concatenated into one
+    ``topleft_r`` is order-SENSITIVE: for BMP it proves the bottom-up
+    row un-flip and BGR→RGB swap, which sums alone cannot; for PNG,
+    with per-row Sub/Up/Average/Paeth filters, it only matches the
+    oracle if filter reconstruction walks scanlines top-to-bottom with
+    the correct left/up/up-left neighbors.
+
+    The per-pixel work is vectorized at BATCH granularity, not per
+    image: every image's pixel view is concatenated into one
     (Σpixels, 3) array and the per-image channel sums / maxima come
     from single ``np.add.reduceat`` / ``np.maximum.reduceat`` sweeps.
     Per-image numpy reductions would be overhead-bound on small images
@@ -520,74 +541,37 @@ def bmp_image_stats(media: DataFrame) -> DataFrame:
     ~µs of setup regardless of size); reduceat amortizes that setup
     across the whole Arrow batch while still handling mixed image
     sizes, so throughput is flat from icons to photographs."""
-    return media.mapInPandas(
-        _image_stats_batches(decode_bmp_array), schema=BMP_STATS_SCHEMA
+    return decode_map(
+        media, lambda b: (decode_array(b),), _image_stats, IMAGE_STATS_SCHEMA
     )
 
 
-def _image_stats_batches(decode_array):
-    """Shared batch processor for the image-stat operators: decode each
-    payload to an (h, w, 3) uint8 view with ``decode_array``, then
-    compute all per-image reductions with batch-wide ``reduceat``
-    sweeps over one concatenated (Σpixels, 3) array."""
+def _image_stats(keys, items) -> dict:
     import numpy as np
-    import pandas as pd
 
-    def batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, widths, heights, views = [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_array(bytes(content))
-                mids.append(mid)
-                widths.append(d["width"])
-                heights.append(d["height"])
-                views.append(d["rgb"].reshape(-1, 3))
-            counts = np.multiply(widths, heights)
-            offsets = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offsets[1:])
-            flat = np.concatenate(views, axis=0).astype(np.int64)
-            sums = np.add.reduceat(flat, offsets, axis=0)
-            maxs = np.maximum.reduceat(flat.max(axis=1), offsets)
-            luma = sums.sum(axis=1) / (3 * counts)
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "width": widths,
-                    "height": heights,
-                    "n_pixels": counts,
-                    "sum_r": sums[:, 0],
-                    "sum_g": sums[:, 1],
-                    "sum_b": sums[:, 2],
-                    "max_channel": maxs,
-                    "topleft_r": flat[offsets, 0],
-                    "mean_luma": luma,
-                }
-            )
-
-    return batches
-
-
-PNG_STATS_SCHEMA = BMP_STATS_SCHEMA
-
-
-def png_image_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched image feature extraction over REAL PNG payloads:
-    each batch inflates and unfilters its binary column with the stdlib
-    zlib decoder (:func:`decode_png_array`) and emits the same
-    integer-exact stat vector as :func:`bmp_image_stats`. ``topleft_r``
-    is order-SENSITIVE: with per-row Sub/Up/Average/Paeth filters it
-    only matches the oracle if filter reconstruction walks scanlines
-    top-to-bottom with the correct left/up/up-left neighbors.
-
-    Scale posture: mapInPandas streams record batches — constant memory
-    per task; inflation is C-side ``zlib``, per-pixel reductions are
-    batch-amortized ``reduceat`` sweeps exactly as in
-    :func:`bmp_image_stats`."""
-    return media.mapInPandas(
-        _image_stats_batches(decode_png_array), schema=PNG_STATS_SCHEMA
-    )
+    widths = [d["width"] for d in items]
+    heights = [d["height"] for d in items]
+    counts = np.multiply(widths, heights)
+    offsets = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=offsets[1:])
+    flat = np.concatenate(
+        [d["rgb"].reshape(-1, 3) for d in items], axis=0
+    ).astype(np.int64)
+    sums = np.add.reduceat(flat, offsets, axis=0)
+    maxs = np.maximum.reduceat(flat.max(axis=1), offsets)
+    luma = sums.sum(axis=1) / (3 * counts)
+    return {
+        "media_id": keys,
+        "width": widths,
+        "height": heights,
+        "n_pixels": counts,
+        "sum_r": sums[:, 0],
+        "sum_g": sums[:, 1],
+        "sum_b": sums[:, 2],
+        "max_channel": maxs,
+        "topleft_r": flat[offsets, 0],
+        "mean_luma": luma,
+    }
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -610,55 +594,48 @@ def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column:
     byte-level statistics + md5 digest (deterministic, codec-free — the
     md5 doubles as the oracle hook since DuckDB computes the same
-    digest). Swap the body for a real decode when codecs exist; the
-    dataflow shape stays identical."""
+    digest). Swap the identity decode for a real one when codecs exist;
+    the dataflow shape stays identical."""
     import hashlib
 
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            content = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": content.map(len).astype("int64"),
-                    "digest": content.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "first_byte": content.map(
-                        lambda b: b[0] if len(b) else -1
-                    ).astype("int32"),
-                    "mean_byte": content.map(
-                        lambda b: round(sum(b) / len(b), 4) if len(b) else 0.0
-                    ).astype("float64"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return decode_map(
+        media,
+        lambda b: (b,),
+        lambda keys, blobs: {
+            "media_id": keys,
+            "n_bytes": [len(b) for b in blobs],
+            "digest": [hashlib.md5(b).hexdigest() for b in blobs],
+            "first_byte": [b[0] if len(b) else -1 for b in blobs],
+            "mean_byte": [
+                round(sum(b) / len(b), 4) if len(b) else 0.0 for b in blobs
+            ],
+        },
+        FEATURE_SCHEMA,
+    )
 
 
 def sample_frames(media: DataFrame, every_nth: int = 10) -> DataFrame:
     """Frame-sampling plumbing for video payloads: chunk the binary into
     fixed-size pseudo-frames and keep every n-th — the partition/batch
     shape of real frame extraction, with a byte-slicing stand-in."""
-    import pandas as pd
-
     frame_bytes = 256
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "frame_no": [], "frame": []}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                n = max(1, len(content) // frame_bytes)
-                for f in range(0, n, every_nth):
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(f)
-                    out["frame"].append(
-                        bytes(content[f * frame_bytes : (f + 1) * frame_bytes])
-                    )
-            yield pd.DataFrame(out)
+    def frames(b: bytes) -> list:
+        n = max(1, len(b) // frame_bytes)
+        return [
+            (f, b[f * frame_bytes : (f + 1) * frame_bytes])
+            for f in range(0, n, every_nth)
+        ]
 
-    return media.mapInPandas(
-        batches, schema="media_id long, frame_no int, frame binary"
+    return decode_map(
+        media,
+        frames,
+        lambda keys, items: {
+            "media_id": keys,
+            "frame_no": [f for f, _ in items],
+            "frame": [chunk for _, chunk in items],
+        },
+        "media_id long, frame_no int, frame binary",
     )
 
 
@@ -671,7 +648,7 @@ def resize_media(media: DataFrame, factor: int = 4) -> DataFrame:
     row-at-a-time."""
     import pandas as pd
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batches(it):
         for pdf in it:
             yield pd.DataFrame(
                 {
@@ -843,18 +820,6 @@ def decode_gif_array(content: bytes) -> dict:
         else:
             raise ValueError(f"unexpected GIF block 0x{b:02x}")
     raise ValueError("no image data in GIF payload")
-
-
-GIF_STATS_SCHEMA = BMP_STATS_SCHEMA
-
-
-def gif_image_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched image feature extraction over REAL GIF payloads —
-    LZW-decompressed by :func:`decode_gif_array`, reduced by the same
-    batch-wide reduceat sweeps as the BMP/PNG stat operators."""
-    return media.mapInPandas(
-        _image_stats_batches(decode_gif_array), schema=GIF_STATS_SCHEMA
-    )
 
 
 def decode_jpeg(content: bytes) -> dict:
@@ -1188,24 +1153,6 @@ def decode_jpeg_array(content: bytes) -> dict:
             axis=2,
         )
     return {"width": w, "height": h, "rgb": rgb}
-
-
-JPEG_STATS_SCHEMA = BMP_STATS_SCHEMA
-
-
-def jpeg_image_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched image feature extraction over REAL JPEG payloads:
-    each batch entropy-decodes its binary column with the baseline
-    Huffman+IDCT decoder (:func:`decode_jpeg_array`) and emits the same
-    integer-exact stat vector as :func:`bmp_image_stats` /
-    :func:`png_image_stats`.
-
-    Scale posture: mapInPandas streams record batches — constant memory
-    per task; per-pixel reductions are batch-amortized ``reduceat``
-    sweeps shared with the other image codecs."""
-    return media.mapInPandas(
-        _image_stats_batches(decode_jpeg_array), schema=JPEG_STATS_SCHEMA
-    )
 
 
 # --- FLAC codec -----------------------------------------------------------
@@ -1684,38 +1631,35 @@ AVI_STATS_SCHEMA = (
 )
 
 
-def avi_video_stats(media: DataFrame, every_nth: int = 1) -> DataFrame:
-    """Arrow-batched per-frame feature extraction over REAL AVI
-    payloads: decode the container (:func:`decode_avi`), keep every
-    ``every_nth``-th frame, and emit per-frame channel sums plus the
-    order-sensitive top-left red byte (which only matches the oracle if
-    the bottom-up un-flip AND the BGR→RGB swap both happened). Same
-    mapInPandas record-batch streaming as the other codecs: constant
-    memory per task, per-frame reductions as numpy sums."""
-    import pandas as pd
+def avi_video_stats(media: DataFrame) -> DataFrame:
+    """Per-frame feature extraction over REAL AVI payloads: decode the
+    container (:func:`decode_avi`) into one item per frame and emit
+    per-frame channel sums plus the order-sensitive top-left red byte
+    (which only matches the oracle if the bottom-up un-flip AND the
+    BGR→RGB swap both happened)."""
+    return decode_map(media, _avi_frames, _avi_frame_stats, AVI_STATS_SCHEMA)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "frame_no", "width", "height", "n_frames",
-                "sum_r", "sum_g", "sum_b", "topleft_r",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_avi(bytes(content))
-                for fno in range(0, d["n_frames"], every_nth):
-                    rgb = d["frames"][fno].astype("int64")
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(fno)
-                    out["width"].append(d["width"])
-                    out["height"].append(d["height"])
-                    out["n_frames"].append(d["n_frames"])
-                    out["sum_r"].append(int(rgb[:, :, 0].sum()))
-                    out["sum_g"].append(int(rgb[:, :, 1].sum()))
-                    out["sum_b"].append(int(rgb[:, :, 2].sum()))
-                    out["topleft_r"].append(int(rgb[0, 0, 0]))
-            yield pd.DataFrame(out)
 
-    return media.mapInPandas(batches, schema=AVI_STATS_SCHEMA)
+def _avi_frames(content: bytes) -> list:
+    d = decode_avi(content)
+    return [(fno, d["n_frames"], rgb) for fno, rgb in enumerate(d["frames"])]
+
+
+def _avi_frame_stats(keys, items) -> dict:
+    sums = [
+        rgb.reshape(-1, 3).sum(axis=0, dtype="int64") for _, _, rgb in items
+    ]
+    return {
+        "media_id": keys,
+        "frame_no": [fno for fno, _, _ in items],
+        "width": [rgb.shape[1] for _, _, rgb in items],
+        "height": [rgb.shape[0] for _, _, rgb in items],
+        "n_frames": [nf for _, nf, _ in items],
+        "sum_r": [int(s[0]) for s in sums],
+        "sum_g": [int(s[1]) for s in sums],
+        "sum_b": [int(s[2]) for s in sums],
+        "topleft_r": [int(rgb[0, 0, 0]) for _, _, rgb in items],
+    }
 
 
 # --- TIFF (baseline, uncompressed) ------------------------------------------
@@ -1847,16 +1791,6 @@ def decode_tiff_array(content: bytes) -> dict:
     px = np.frombuffer(bytes(data), dtype=np.uint8).reshape(h, w, spp)
     rgb = np.repeat(px, 3, axis=2) if spp == 1 else px
     return {"width": w, "height": h, "rgb": rgb}
-
-
-def tiff_image_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched image feature extraction over REAL TIFF payloads:
-    identical stat vector and batch-wide reduceat sweeps as
-    :func:`bmp_image_stats`, decoded by the stdlib IFD walker
-    (:func:`decode_tiff_array`)."""
-    return media.mapInPandas(
-        _image_stats_batches(decode_tiff_array), schema=BMP_STATS_SCHEMA
-    )
 
 
 # --- MPEG audio (mp3) frame container --------------------------------------
@@ -2011,36 +1945,33 @@ MP3_FRAMES_SCHEMA = (
 
 
 def mp3_frame_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched container-level feature extraction over REAL mp3
-    payloads: walk every frame (:func:`decode_mp3_frames` — sync,
-    table lookups, length arithmetic, side-info CRC-16 all verified)
-    and emit the stream facts plus ``tail_word``, the final frame's
-    last ≤4 main-data bytes folded little-endian — order-sensitive, so
-    a hash match proves byte-exact frame segmentation."""
-    import pandas as pd
+    """Container-level feature extraction over REAL mp3 payloads: walk
+    every frame (:func:`decode_mp3_frames` — sync, table lookups,
+    length arithmetic, side-info CRC-16 all verified) and emit the
+    stream facts plus ``tail_word``, the final frame's last ≤4
+    main-data bytes folded little-endian — order-sensitive, so a hash
+    match proves byte-exact frame segmentation."""
+    return decode_map(
+        media,
+        lambda b: (decode_mp3_frames(b),),
+        lambda keys, items: {
+            "media_id": keys,
+            "n_frames": [d["n_frames"] for d in items],
+            "sample_rate": [d["sample_rate"] for d in items],
+            "channels": [d["channels"] for d in items],
+            "bitrate_kbps": [max(d["bitrates_kbps"]) for d in items],
+            "main_bytes": [sum(map(len, d["frames_main"])) for d in items],
+            "tail_word": [_tail_word(d["frames_main"]) for d in items],
+        },
+        MP3_FRAMES_SCHEMA,
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "n_frames", "sample_rate", "channels",
-                "bitrate_kbps", "main_bytes", "tail_word",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_mp3_frames(bytes(content))
-                tail = d["frames_main"][-1][-4:]
-                word = sum(b << (8 * i) for i, b in enumerate(tail))
-                out["media_id"].append(mid)
-                out["n_frames"].append(d["n_frames"])
-                out["sample_rate"].append(d["sample_rate"])
-                out["channels"].append(d["channels"])
-                out["bitrate_kbps"].append(max(d["bitrates_kbps"]))
-                out["main_bytes"].append(
-                    sum(len(m) for m in d["frames_main"])
-                )
-                out["tail_word"].append(word)
-            yield pd.DataFrame(out)
 
-    return media.mapInPandas(batches, schema=MP3_FRAMES_SCHEMA)
+def _tail_word(chunks: list) -> int:
+    """The last chunk's final ≤4 bytes folded little-endian (0 if no
+    chunk)."""
+    tail = chunks[-1][-4:] if chunks else b""
+    return sum(b << (8 * i) for i, b in enumerate(tail))
 
 
 # --- Ogg container (RFC 3533) ---------------------------------------------
@@ -2180,136 +2111,25 @@ OGG_PAGES_SCHEMA = (
 
 
 def ogg_page_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched container-level feature extraction over REAL Ogg
-    payloads: decode every page (:func:`decode_ogg_pages` — CRC-32,
-    sequence, BOS/EOS, lacing assembly all verified) and emit the
-    container facts plus ``tail_word``, the final packet's last ≤4
-    bytes folded little-endian — order-sensitive, so a hash match
-    proves byte-exact packet reassembly through the segment table."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "n_pages", "n_packets", "serial",
-                "last_granule", "payload_bytes", "tail_word",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_ogg_pages(bytes(content))
-                tail = d["packets"][-1][-4:] if d["packets"] else b""
-                word = sum(b << (8 * i) for i, b in enumerate(tail))
-                out["media_id"].append(mid)
-                out["n_pages"].append(d["n_pages"])
-                out["n_packets"].append(d["n_packets"])
-                out["serial"].append(d["serial"])
-                out["last_granule"].append(d["last_granule"])
-                out["payload_bytes"].append(d["payload_bytes"])
-                out["tail_word"].append(word)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=OGG_PAGES_SCHEMA)
-
-
-FLAC_STATS_SCHEMA = WAV_STATS_SCHEMA
-
-
-def flac_audio_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched audio feature extraction over REAL FLAC payloads:
-    identical stat vector to :func:`wav_audio_stats`, decoded by the
-    pure-stdlib FLAC parser (:func:`decode_flac`)."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "media_id", "sample_rate", "n_channels", "n_samples",
-                "sum_samples", "max_abs", "mean_sample",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_flac(bytes(content))
-                s = d["samples"]
-                total = int(sum(s))
-                out["media_id"].append(mid)
-                out["sample_rate"].append(d["sample_rate"])
-                out["n_channels"].append(d["n_channels"])
-                out["n_samples"].append(len(s))
-                out["sum_samples"].append(total)
-                out["max_abs"].append(max((abs(x) for x in s), default=0))
-                out["mean_sample"].append(total / len(s) if s else 0.0)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=FLAC_STATS_SCHEMA)
-
-
-def bmp_pixel_channels(media: DataFrame) -> DataFrame:
-    """REAL-decode feature extraction for the image-dedup family: each
-    BMP payload decodes with the stdlib BI_RGB parser
-    (:func:`decode_bmp_array`) and emits its flattened channel vector
-    (row-major top-to-bottom, RGB per pixel) as ``array<int>`` — the
-    raw representation the quantization-band blocker and the exact L1
-    verifier consume. Same Arrow mapInPandas scale posture as
-    :func:`bmp_image_stats`: streaming record batches, one decode per
-    blob, constant memory per task."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, chans = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_bmp_array(bytes(content))
-                mids.append(mid)
-                # .tolist() flattens at C speed (12x the per-element
-                # comprehension) and yields Python ints as Arrow needs
-                chans.append(d["rgb"].reshape(-1).tolist())
-            yield pd.DataFrame({"media_id": mids, "channels": chans})
-
-    return media.mapInPandas(
-        batches, schema="media_id long, channels array<int>"
-    )
-
-
-def avi_frame_channels(media: DataFrame) -> DataFrame:
-    """REAL-decode feature extraction for the VIDEO-dedup family: each
-    AVI payload decodes with the stdlib RIFF container parser
-    (:func:`decode_avi`) and emits one row PER FRAME carrying the
-    frame's flattened channel vector (row-major top-to-bottom, RGB per
-    pixel) as ``array<int>`` plus the clip's frame count — the raw
-    representation the per-frame perceptual-hash blocker and the
-    frame-sequence verifier consume. Same Arrow mapInPandas scale
-    posture as :func:`bmp_pixel_channels`: streaming record batches,
-    one container decode per blob, constant memory per task (frames
-    stream out of the batch as plain int lists)."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, fnos, nfs, chans = [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_avi(bytes(content))
-                for fno, rgb in enumerate(d["frames"]):
-                    mids.append(mid)
-                    fnos.append(fno)
-                    nfs.append(d["n_frames"])
-                    chans.append(rgb.reshape(-1).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "frame_no": fnos,
-                    "n_frames": nfs,
-                    "channels": chans,
-                }
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, frame_no int, n_frames int,"
-            " channels array<int>"
-        ),
+    """Container-level feature extraction over REAL Ogg payloads:
+    decode every page (:func:`decode_ogg_pages` — CRC-32, sequence,
+    BOS/EOS, lacing assembly all verified) and emit the container facts
+    plus ``tail_word``, the final packet's last ≤4 bytes folded
+    little-endian — order-sensitive, so a hash match proves byte-exact
+    packet reassembly through the segment table."""
+    return decode_map(
+        media,
+        lambda b: (decode_ogg_pages(b),),
+        lambda keys, items: {
+            "media_id": keys,
+            "n_pages": [d["n_pages"] for d in items],
+            "n_packets": [d["n_packets"] for d in items],
+            "serial": [d["serial"] for d in items],
+            "last_granule": [d["last_granule"] for d in items],
+            "payload_bytes": [d["payload_bytes"] for d in items],
+            "tail_word": [_tail_word(d["packets"]) for d in items],
+        },
+        OGG_PAGES_SCHEMA,
     )
 
 
@@ -2325,63 +2145,3 @@ def _ahash32(rgb) -> int:
     lums = rgb.reshape(-1, 3).sum(axis=1, dtype=np.int64)
     bits = (lums * lums.size > int(lums.sum())).astype(np.int64)
     return int((bits << np.arange(lums.size, dtype=np.int64)).sum())
-
-
-def bmp_ahash32(media: DataFrame) -> DataFrame:
-    """REAL-decode + perceptual hash in ONE Arrow pass: decode each BMP
-    with the stdlib BI_RGB parser (:func:`decode_bmp_array`) and emit
-    the 32-bit aHash computed from the decoded pixels (:func:`_ahash32`)
-    — the fused form of ``bmp_pixel_channels`` + the SQL
-    transform/aggregate chain. The higher-order-function chain this
-    replaces ran INTERPRETED per row (lambda expressions don't
-    participate in whole-stage codegen) and measured 20 ↔ 280 s of
-    executor CPU for the same 111k-image input across back-to-back
-    runs (JIT/GC-sensitive); the numpy form is a few vector ops per
-    image inside the worker that already holds the decoded array, and
-    shrinks the Arrow return column from ``array<int>`` (96 ints) to
-    one long. Streaming record batches, one decode per blob, constant
-    memory per task."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, hs = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                mids.append(mid)
-                hs.append(_ahash32(decode_bmp_array(bytes(content))["rgb"]))
-            yield pd.DataFrame({"media_id": mids, "fh": hs})
-
-    return media.mapInPandas(batches, schema="media_id long, fh long")
-
-
-def avi_frame_ahash32(media: DataFrame) -> DataFrame:
-    """REAL container decode + per-frame perceptual hash in ONE Arrow
-    pass: decode each AVI with the stdlib RIFF parser
-    (:func:`decode_avi`) and emit one row per frame with its 32-bit
-    aHash (:func:`_ahash32`) — the fused form of
-    ``avi_frame_channels`` + the SQL transform/aggregate chain, for
-    the same reasons as :func:`bmp_ahash32` (interpreted
-    higher-order functions off the hot path, one long across Arrow
-    instead of a 96-int array per frame)."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, fnos, hs = [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                d = decode_avi(bytes(content))
-                for fno, rgb in enumerate(d["frames"]):
-                    mids.append(mid)
-                    fnos.append(fno)
-                    hs.append(_ahash32(rgb))
-            yield pd.DataFrame(
-                {"media_id": mids, "frame_no": fnos, "fh": hs}
-            )
-
-    return media.mapInPandas(
-        batches, schema="media_id long, frame_no int, fh long"
-    )

@@ -403,7 +403,7 @@ def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(bmp_payload_hex(F.col("event_id"))).alias("content"),
     )
-    return mm.bmp_image_stats(media)
+    return mm.image_stats(media, mm.decode_bmp_array)
 
 
 def bmp_payload_hex(e):
@@ -667,7 +667,7 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.png_image_stats(media)
+    return mm.image_stats(media, mm.decode_png_array)
 
 
 @query(

@@ -502,7 +502,7 @@ def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit(_JPEG_HEAD_HEX), entropy_hex, F.lit("ffd9"))
         ).alias("content"),
     )
-    return mm.jpeg_image_stats(media)
+    return mm.image_stats(media, mm.decode_jpeg_array)
 
 
 # --- FLAC codec query -----------------------------------------------------
@@ -626,7 +626,7 @@ def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.flac_audio_stats(media)
+    return mm.pcm_audio_stats(media, mm.decode_flac)
 
 
 # --- robust outliers (median / MAD) ---------------------------------------

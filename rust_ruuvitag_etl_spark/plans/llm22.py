@@ -157,9 +157,7 @@ def _img_feats(ev: DataFrame) -> DataFrame:
     the HOF/codegen mix behind this query's 3.0 <-> 5.1 s bench swing.
     One Arrow pass ships 8 bytes of id in and (channels, 2 longs) out,
     with no interpreted JVM lambda anywhere on the corpus path."""
-    import pandas as pd
-
-    from ..operators.multimodal import decode_bmp_array
+    from ..operators.multimodal import decode_bmp_array, decode_map
 
     def _key(qs) -> int:
         import hashlib
@@ -177,23 +175,20 @@ def _img_feats(ev: DataFrame) -> DataFrame:
             _key([(c + 2) // 4 for c in ch]),
         )
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rows = []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows.append(_row(e, e, False))
-                if e % _IMG_COPY_MOD == 0:
-                    rows.append(_row(e, -(e + 1), True))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "channels", "bk0", "bk1"]
-            )
+    def decode(e: int) -> list:
+        rows = [_row(e, e, False)]
+        if e % _IMG_COPY_MOD == 0:
+            rows.append(_row(e, -(e + 1), True))
+        return rows
 
-    return ev.mapInPandas(
-        batches,
-        schema="media_id long, channels array<int>, bk0 long, bk1 long",
+    def emit(_keys, rows) -> dict:
+        return dict(zip(("media_id", "channels", "bk0", "bk1"), zip(*rows)))
+
+    return decode_map(
+        ev,
+        decode,
+        emit,
+        "media_id long, channels array<int>, bk0 long, bk1 long",
     )
 
 

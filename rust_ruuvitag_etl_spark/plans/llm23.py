@@ -130,33 +130,21 @@ def _ah_feats(ev: DataFrame) -> DataFrame:
     Arrow instead of a 150-byte blob, and leaves nothing for C2 to
     deoptimize. Byte parity with the SQL packer is pinned by
     tests/test_r13_fused_pack.py."""
-    import pandas as pd
+    from ..operators.multimodal import _ahash32, decode_bmp_array, decode_map
 
-    from ..operators.multimodal import _ahash32, decode_bmp_array
+    def _fh(e: int, bump: int) -> int:
+        return _ahash32(decode_bmp_array(_ah_pack_bytes(e, bump))["rgb"])
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, hs = [], []
-            for e in pdf["event_id"]:
-                e = int(e)
-                mids.append(e)
-                hs.append(
-                    _ahash32(decode_bmp_array(_ah_pack_bytes(e, 0))["rgb"])
-                )
-                if e % _AH_COPY_MOD == 0:
-                    mids.append(-(e + 1))
-                    hs.append(
-                        _ahash32(
-                            decode_bmp_array(
-                                _ah_pack_bytes(e, _AH_BRIGHT)
-                            )["rgb"]
-                        )
-                    )
-            yield pd.DataFrame({"media_id": mids, "fh": hs})
+    def decode(e: int) -> list:
+        rows = [(e, _fh(e, 0))]
+        if e % _AH_COPY_MOD == 0:
+            rows.append((-(e + 1), _fh(e, _AH_BRIGHT)))
+        return rows
 
-    return ev.mapInPandas(batches, schema="media_id long, fh long")
+    def emit(_keys, rows) -> dict:
+        return dict(zip(("media_id", "fh"), zip(*rows)))
+
+    return decode_map(ev, decode, emit, "media_id long, fh long")
 
 
 def _ah_media(ev: DataFrame, mid, bump: int) -> DataFrame:

@@ -212,38 +212,24 @@ def _vid_feats(ev: DataFrame) -> DataFrame:
     and 11.2 s in the next on the same inputs. See llm23._ah_feats for
     the identical image-side rationale; byte parity is pinned by
     tests/test_r13_fused_pack.py."""
-    import pandas as pd
+    from ..operators.multimodal import _ahash32, decode_avi, decode_map
 
-    from ..operators.multimodal import _ahash32, decode_avi
-
-    def _rows(e: int, mid: int, bump: int, f0: int, nf: int):
+    def _rows(e: int, mid: int, bump: int, f0: int, nf: int) -> list:
         d = decode_avi(_vid_pack_bytes(e, bump, f0, nf))
-        for fno, rgb in enumerate(d["frames"]):
-            yield mid, fno, _ahash32(rgb)
+        return [
+            (mid, fno, _ahash32(rgb)) for fno, rgb in enumerate(d["frames"])
+        ]
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            mids, fnos, hs = [], [], []
-            for e in pdf["event_id"]:
-                e = int(e)
-                rows = list(_rows(e, e, 0, 0, _VID_FRAMES))
-                if e % _VID_COPY_MOD == 0:
-                    rows += _rows(
-                        e, -(e + 1), _VID_BRIGHT, 1, _VID_FRAMES - 1
-                    )
-                for mid, fno, fh in rows:
-                    mids.append(mid)
-                    fnos.append(fno)
-                    hs.append(fh)
-            yield pd.DataFrame(
-                {"media_id": mids, "frame_no": fnos, "fh": hs}
-            )
+    def decode(e: int) -> list:
+        rows = _rows(e, e, 0, 0, _VID_FRAMES)
+        if e % _VID_COPY_MOD == 0:
+            rows += _rows(e, -(e + 1), _VID_BRIGHT, 1, _VID_FRAMES - 1)
+        return rows
 
-    return ev.mapInPandas(
-        batches, schema="media_id long, frame_no int, fh long"
-    )
+    def emit(_keys, rows) -> dict:
+        return dict(zip(("media_id", "frame_no", "fh"), zip(*rows)))
+
+    return decode_map(ev, decode, emit, "media_id long, frame_no int, fh long")
 
 
 def _vid_oracle() -> str:

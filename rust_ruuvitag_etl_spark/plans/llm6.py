@@ -617,7 +617,7 @@ def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.gif_image_stats(media)
+    return mm.image_stats(media, mm.decode_gif_array)
 
 
 # --- quality classifier inference ------------------------------------------

@@ -149,7 +149,7 @@ def multimodal_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.avi_video_stats(media, every_nth=1)
+    return mm.avi_video_stats(media)
 
 
 # --- real audio container: Ogg (round 6) -----------------------------------
@@ -480,7 +480,7 @@ def multimodal_tiff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.tiff_image_stats(media)
+    return mm.image_stats(media, mm.decode_tiff_array)
 
 
 # --- content-defined chunking dedup (round 6) -------------------------------

@@ -420,7 +420,7 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("media_id"),
         F.unhex(payload_hex).alias("content"),
     )
-    return mm.wav_audio_stats(media)
+    return mm.pcm_audio_stats(media, mm.decode_wav)
 
 
 @query(

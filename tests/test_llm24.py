@@ -2,10 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from rust_ruuvitag_etl_spark.operators.multimodal import (
-    avi_frame_channels,
-    decode_avi,
-)
+from rust_ruuvitag_etl_spark.operators.multimodal import decode_avi
 from rust_ruuvitag_etl_spark.plans.llm24 import (
     _VID_BRIGHT,
     _VID_COPY_MOD,
@@ -68,18 +65,6 @@ class TestVideoPacker:
                     cd["frames"][g].astype(int)
                     == bd["frames"][g + 1].astype(int) + _VID_BRIGHT
                 ).all()
-
-    def test_frame_channels_operator_order(self, spark):
-        ev = load(spark, SF_SMALL, "events").select("event_id").limit(2)
-        media = _vid_media(ev, F.col("event_id"), 0, 0, _VID_FRAMES)
-        rows = avi_frame_channels(media).collect()
-        assert len(rows) == 2 * _VID_FRAMES
-        raw = {r["media_id"]: decode_avi(bytes(r["content"]))
-               for r in media.collect()}
-        for r in rows:
-            want = raw[r["media_id"]]["frames"][r["frame_no"]]
-            assert r["channels"] == want.reshape(-1).tolist()
-            assert r["n_frames"] == _VID_FRAMES
 
 
 class TestVideoDedup:

@@ -1,15 +1,15 @@
-"""Round-12 optimization: fused decode+aHash operators must be
-bit-identical to the channel-vector path they replaced (the plans'
-old transform/aggregate SQL chain, replayed here as plain integer
-arithmetic over the channel operators' output)."""
+"""The vectorized aHash (operators/multimodal.py:_ahash32) the fused
+image/video dedup packers run must be bit-identical to the plans' old
+transform/aggregate SQL chain, replayed here as plain integer
+arithmetic over the channel vectors of payloads packed by the SQL
+packers and decoded on the driver."""
 
 from pyspark.sql import functions as F
 
 from rust_ruuvitag_etl_spark.operators.multimodal import (
-    avi_frame_ahash32,
-    avi_frame_channels,
-    bmp_ahash32,
-    bmp_pixel_channels,
+    _ahash32,
+    decode_avi,
+    decode_bmp_array,
 )
 from rust_ruuvitag_etl_spark.plans.llm23 import _AH_BRIGHT, _ah_media
 from rust_ruuvitag_etl_spark.plans.llm24 import _VID_FRAMES, _vid_media
@@ -34,25 +34,24 @@ def _ahash_from_channels(channels):
 class TestFusedAhashParity:
     def test_bmp_ahash32_matches_channel_path(self, spark):
         ev = load(spark, SF_SMALL, "events").select("event_id").limit(16)
-        media = _ah_media(ev, F.col("event_id"), _AH_BRIGHT)
-        want = {
-            r["media_id"]: _ahash_from_channels(r["channels"])
-            for r in bmp_pixel_channels(media).collect()
-        }
-        got = {r["media_id"]: r["fh"] for r in bmp_ahash32(media).collect()}
-        assert got == want and len(got) == 16
+        rows = _ah_media(ev, F.col("event_id"), _AH_BRIGHT).collect()
+        assert len(rows) == 16
+        for r in rows:
+            rgb = decode_bmp_array(bytes(r["content"]))["rgb"]
+            assert _ahash32(rgb) == _ahash_from_channels(
+                rgb.reshape(-1).tolist()
+            )
 
     def test_avi_frame_ahash32_matches_channel_path(self, spark):
         ev = load(spark, SF_SMALL, "events").select("event_id").limit(4)
-        media = _vid_media(ev, F.col("event_id"), 0, 0, _VID_FRAMES)
-        want = {
-            (r["media_id"], r["frame_no"]): _ahash_from_channels(
-                r["channels"]
+        rows = _vid_media(ev, F.col("event_id"), 0, 0, _VID_FRAMES).collect()
+        frames = [
+            rgb
+            for r in rows
+            for rgb in decode_avi(bytes(r["content"]))["frames"]
+        ]
+        assert len(frames) == 4 * _VID_FRAMES
+        for rgb in frames:
+            assert _ahash32(rgb) == _ahash_from_channels(
+                rgb.reshape(-1).tolist()
             )
-            for r in avi_frame_channels(media).collect()
-        }
-        got = {
-            (r["media_id"], r["frame_no"]): r["fh"]
-            for r in avi_frame_ahash32(media).collect()
-        }
-        assert got == want and len(got) == 4 * _VID_FRAMES

@@ -11,7 +11,9 @@ the two claims the queries' correctness rests on:
    variants.
 2. FEATURE parity — the fused operators emit exactly the rows the old
    pack→transfer→decode chains emitted (ids, per-frame hashes, channel
-   vectors), including the in-pass planted-copy generation.
+   vectors), including the in-pass planted-copy generation. The old
+   chain's values come from decoding the SQL-packed payloads on the
+   driver with the same stdlib parsers.
 
 The band keys of _img_feats intentionally have NO old-path twin (any
 deterministic hash works; the query re-checks true quantized equality),
@@ -69,8 +71,10 @@ class TestAhFused:
             _AH_BRIGHT,
         )
         old = {
-            r["media_id"]: r["fh"]
-            for r in mm.bmp_ahash32(base.unionAll(copies)).collect()
+            r["media_id"]: mm._ahash32(
+                mm.decode_bmp_array(bytes(r["content"]))["rgb"]
+            )
+            for r in base.unionAll(copies).collect()
         }
         new = {r["media_id"]: r["fh"] for r in _ah_feats(ev).collect()}
         assert new == old
@@ -96,8 +100,11 @@ class TestVidFused:
             _VID_FRAMES - 1,
         )
         old = {
-            (r["media_id"], r["frame_no"]): r["fh"]
-            for r in mm.avi_frame_ahash32(base.unionAll(copies)).collect()
+            (r["media_id"], fno): mm._ahash32(rgb)
+            for r in base.unionAll(copies).collect()
+            for fno, rgb in enumerate(
+                mm.decode_avi(bytes(r["content"]))["frames"]
+            )
         }
         new = {
             (r["media_id"], r["frame_no"]): r["fh"]
@@ -122,8 +129,10 @@ class TestImgFused:
             bump=True,
         )
         old = {
-            r["media_id"]: list(r["channels"])
-            for r in mm.bmp_pixel_channels(base.unionAll(copies)).collect()
+            r["media_id"]: mm.decode_bmp_array(bytes(r["content"]))["rgb"]
+            .reshape(-1)
+            .tolist()
+            for r in base.unionAll(copies).collect()
         }
         rows = _img_feats(ev).collect()
         new = {r["media_id"]: list(r["channels"]) for r in rows}

@@ -161,7 +161,7 @@ class TestWavCodec:
             [(1, bytearray(self._wav_bytes(samples)))],
             "media_id long, content binary",
         )
-        row = mm.wav_audio_stats(df).collect()[0]
+        row = mm.pcm_audio_stats(df, mm.decode_wav).collect()[0]
         assert row["n_samples"] == 4
         assert row["sum_samples"] == -20
         assert row["max_abs"] == 40
@@ -233,7 +233,7 @@ class TestBmpCodec:
             [(1, bytearray(self._bmp_bytes(self.PIXELS)))],
             "media_id long, content binary",
         )
-        row = mm.bmp_image_stats(df).collect()[0]
+        row = mm.image_stats(df, mm.decode_bmp_array).collect()[0]
         assert (row["width"], row["height"], row["n_pixels"]) == (3, 2, 6)
         assert row["sum_r"] == 255 + 10 + 40 + 70
         assert row["sum_g"] == 255 + 20 + 50 + 80
