@@ -1,336 +1,28 @@
 """Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+(default /root/testdata/sf0.1) on local[N] — N is $SPARK_GRAFT_CPUS,
+else the usable core count (session.DEFAULT_CPUS) — and prints ONE
+JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``value`` is the total wall-clock of the headline suite (one warm-up of
-the session JVM excluded). Each query is forced with a count() so the
-full plan executes; results stay distributed (no driver collect).
+``value`` is the sum of the per-query medians. Each query runs its
+production builder (plans/registry.py), one untimed warm pass and then
+three timed reps (tools/harness.py:time_query); each run is forced with
+a count() so the full plan executes and results stay distributed (no
+driver collect).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from rust_ruuvitag_etl_spark.operators import dedup as dd
-from rust_ruuvitag_etl_spark.plans import REGISTRY
 from rust_ruuvitag_etl_spark.session import get_spark
-from rust_ruuvitag_etl_spark.sources import load
-
-# Headline suite: the flagship pipeline + representative heavy hitters
-# from each operator family (join-heavy, agg-heavy, window, LLM ops,
-# retrieval, the composed corpus-prep flagship, approximate ANN).
-HEADLINE = [
-    "ruuvi_flagship",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q18_large_volume_orders",
-    "window_topk_orders_per_customer",
-    "window_rolling_avg",
-    "sliding_window_user_value",
-    "dedup_exact_documents",
-    "dedup_minhash_lsh_pairs",
-    "dedup_minhash_verified",
-    "similarity_bruteforce_topk",
-    "similarity_ivf_topk",
-    "text_quality_scores",
-    "text_langid_trigram",
-    "text_tfidf_scores",
-    "text_bm25_ranking",
-    "text_inverted_index",
-    "contamination_ngram_eval",
-    "multimodal_audio_stats",
-    "multimodal_image_stats",
-    "multimodal_png_stats",
-    "multimodal_gif_stats",
-    "dedup_exact_lines",
-    "similarity_ivf_pq_topk",
-    "corpus_prep_end_to_end",
-    "timeseries_ohlc_downsample",
-    "funnel_view_click_purchase",
-    "retention_weekly_cohorts",
-    "graph_pagerank_bipartite",
-    "similarity_sq8_topk",
-    "dedup_semantic_clusters",
-    "dq_constraint_checks",
-    "timeseries_ewma_smooth",
-    "incremental_rollup_merge",
-    "text_keyword_pagerank",
-    "bitmap_user_activity",
-    "multimodal_jpeg_stats",
-    "multimodal_flac_stats",
-    "similarity_knn_join",
-    "multimodal_avi_stats",
-    "multimodal_ogg_pages",
-    "multimodal_mp3_frames",
-    "multimodal_tiff_stats",
-    "dedup_cdc_shifted",
-    "embedding_random_projection",
-    "dedup_ssjoin_prefix",
-    "similarity_bq_topk",
-    "timeseries_seasonal_decompose",
-    "timeseries_holt_winters",
-    # round 7: the registry's slowest pair queries enter the headline
-    # so their cost is measured every round — dedup_ngram_jaccard_pairs
-    # re-planned through the prefix filter (was an unmeasured 12 s+
-    # within-block theta join), dedup_embedding_cosine_pairs kept as
-    # the documented spec-level exact-recall reference for the LSH twin
-    "dedup_ngram_jaccard_pairs",
-    "dedup_embedding_cosine_pairs",
-    # round 7 wave 2: iterative training + the containment pair join —
-    # both shuffle-heavy shapes that must stay measured
-    "cluster_kmeans_lloyd",
-    "dedup_containment_pairs",
-    "embedding_pca_power_iteration",
-    # the two retrieval compositions: each is corpus-scan + constant-
-    # size fusion/greedy stages — measured so the scan share stays honest
-    "retrieval_rrf_fusion",
-    "retrieval_mmr_rerank",
-    # round 8: keep the headline tracking the slowest registry entries —
-    # winnowing substring dedup (3.5 s) and the Gopher repetition gates
-    # (3.0 s) were both heavier than half the round-7 headline. Their
-    # inclusion RAISES the expected total vs r7; that's coverage, not a
-    # regression.
-    "dedup_substring_spans",
-    "text_gopher_repetition",
-    # round 8 wave 2: a sweep of ENGINE-ONLY timings over the whole
-    # registry (oracle cost excluded) surfaced two heavy non-headline
-    # plans — the blocked edit-distance join (15 s even with the banded
-    # threshold form; the corpus's shared-prefix names defeat segment
-    # filters, see the query docstring) and degree-oriented triangle
-    # counting (7 s, dominated by co-purchase edge construction). The
-    # headline exists to keep exactly these visible.
-    "fuzzy_match_levenshtein",
-    "graph_triangle_count",
-    # round 9: the registry-wide engine sweep surfaced (and this round
-    # fixed) three hidden hot spots — the embedding pair queries'
-    # one-split serialization (16.3 s -> 4.1 s) and the stream-stream
-    # state-store fan-out (9.2 s -> 3.5 s). The survivors plus the
-    # heaviest still-unmeasured plans enter the headline so they stay
-    # visible: the LSH pair query WITH its in-query exact recall gate,
-    # the stream-stream interval join (first streaming entry in the
-    # headline — it times a real availableNow job), the bloom-filter
-    # delta dedup, the full dedup endgame (LSH -> verify -> connected
-    # components -> keep-best), and round 9's co-purchase CC.
-    "dedup_embedding_lsh_pairs",
-    "streaming_interval_join",
-    "dedup_bloom_delta",
-    "dedup_keep_best_canonical",
-    "graph_connected_components",
-    # round 10: per the round-9 verdict's task 7, the fresh-JVM
-    # engine-only re-rank admitted every remaining plan >1.5 s at
-    # sf0.1 — the two-rater kappa (2.9 s), the winnowing scrub twin
-    # (3.2 s), and the new five-artifact deletion-propagation audit
-    # (5.0 s). timeseries_gap_fill was triaged as requested and stays
-    # OUT: its engine share is 1.1 s; the 44 s full-artifact row is
-    # DuckDB-oracle cost (dense-grid reconstruction), noted in
-    # PLANS.md.
-    "eval_cohens_kappa",
-    "dedup_substring_scrub",
-    "governance_deletion_propagate",
-    # round 10 wave 2: the post-wave full-registry engine sweep +
-    # fresh-JVM confirmation admitted every remaining plan >=2.5 s at
-    # sf0.1, closing the "top-N with no gaps" criterion: the streaming
-    # k-means scorer (5.7 s), the Arrow applyInPandas movement-delta
-    # twin (4.2 s), the MinHash-vs-exact estimator audit (3.0 s), the
-    # salted skew join (3.0 s), the k-means inertia descent gate
-    # (3.1 s), and four 2.5-3.0 s entries including two round-10
-    # additions (assortativity, Bradley-Terry).
-    "streaming_kmeans_assign",
-    "ruuvi_movement_delta_pandas",
-    "eval_minhash_estimate",
-    "skew_salted_join",
-    "cluster_kmeans_inertia",
-    "graph_degree_assortativity",
-    "eval_bradley_terry_strength",
-    "streaming_interval_join_left",
-    "streaming_late_data_discard",
-    "dedup_simhash_candidates",
-    # round 10 wave 8: image near-dup with the real BMP codec in the
-    # loop (3.7 s engine-only at sf0.1) joins the headline under the
-    # same >=2.5 s gap-free rule.
-    "dedup_image_bands",
-    # round 11: the three new real-codec / maintenance queries all
-    # clear the >=2.5 s gap-free rule in the round-11 engine sweep
-    # (phash 5.1 s, maintained-probe measured via its production
-    # override, audio envelope 3.4 s).
-    "dedup_image_phash",
-    "dedup_audio_envelope",
-    "similarity_ivf_append_maintain",
-    # round 12: the registry sweep + fresh-JVM confirmation admits the
-    # two new heavy plans under the >=2.5 s gap-free rule — the video
-    # near-dup with the real AVI codec in the loop (6.1 s fresh-JVM
-    # median) and the end-to-end incremental corpus refresh (9.0 s —
-    # a 4-stage composition whose cost is sequential fixed overhead,
-    # not data volume; see its SCALING exponent). The LR trainer pair
-    # measured 1.6/1.35 s and stays out.
-    "dedup_video_frames",
-    "corpus_refresh_incremental",
-]
-
-
-def _calibration_s(reps: int = 3) -> float:
-    """Contention sentinel: median wall-clock of a fixed pure-Python CPU
-    loop (no Spark, no IO). On idle hardware this reads a stable
-    machine-specific constant; a reading >1.3x the recorded idle value
-    means the box is contended and every suite timing in this run is
-    inflated — rerun before treating a per-query delta as a regression
-    (three rounds running, a contended bench manufactured a phantom
-    regression: r3 langid, r4 corpus_prep, r5 the whole suite at 44.7 s
-    vs 34.5 s idle). Interpretation notes live in PLANS.md."""
-    samples = []
-    for _ in range(reps):
-        t0 = time.time()
-        acc = 0
-        for i in range(2_000_000):
-            acc += i * i & 0xFFFF
-        samples.append(time.time() - t0)
-    return round(sorted(samples)[reps // 2], 3)
-
-
-def _ivf_probe_only(spark, sf_dir):
-    # The production ANN path: bucketed-index probe without the
-    # brute-force recall twin the registry query carries for the
-    # correctness gate (the twin alone is ~a full corpus scan).
-    from rust_ruuvitag_etl_spark.plans.llm import _ivf_probe
-
-    return _ivf_probe(spark, sf_dir)
-
-
-def _pq_probe_only(spark, sf_dir):
-    # Same probe-only convention for IVF-PQ: ADC over the persisted
-    # compressed codes + exact shortlist re-rank, without the
-    # brute-force recall twin.
-    from rust_ruuvitag_etl_spark.plans.llm6 import _pq_probe
-
-    return _pq_probe(spark, sf_dir)
-
-
-def _sq8_probe_only(spark, sf_dir):
-    # Probe-only convention for SQ8: quantized scan + exact re-rank,
-    # without the brute-force recall twin.
-    from rust_ruuvitag_etl_spark.plans.llm7 import _sq8_probe
-
-    return _sq8_probe(spark, sf_dir)
-
-
-def _semdedup_prod(spark, sf_dir):
-    # The cluster-scoped production path, without the all-pairs exact
-    # twin the registry query carries for the correctness gate.
-    from rust_ruuvitag_etl_spark.plans.llm7 import _semdedup_pairs
-
-    return _semdedup_pairs(spark, sf_dir)
-
-
-def _minhash_lsh_fast(spark, sf_dir):
-    return dd.minhash_lsh_candidates(load(spark, sf_dir, "documents"))
-
-
-def _minhash_verified_fast(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    cands = dd.minhash_lsh_candidates(docs)
-    return dd.jaccard_pairs(docs, cands, threshold=0.2)
-
-
-# The bench measures the PRODUCTION path. For the MinHash family that
-# means hash_family='fast' (xxhash64 — the operators' default); the
-# registry twins pin hash_family='portable' (md5-derived) solely so the
-# DuckDB oracle can reproduce signatures bit-for-bit in the correctness
-# gate. Same plan shape, same verified-pair semantics (pinned by
-# tests/test_llm_ops.py), different per-shingle hash cost.
-def _bq_probe_only(spark, sf_dir):
-    # The production BQ path: ADC shortlist over the 1-bit codes +
-    # exact re-rank of shortlist members — without the brute-force
-    # exact twin the registry query carries for the correctness gate.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from rust_ruuvitag_etl_spark.functions import vectors as vf
-    from rust_ruuvitag_etl_spark.plans.llm9 import _bq_shortlist
-
-    em = load(spark, sf_dir, "embeddings")
-    short = _bq_shortlist(spark, sf_dir)
-    queries_df = em.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
-    )
-    rescored = (
-        short.join(em, "vec_id")
-        .join(F.broadcast(queries_df), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                vf.cosine(F.col("embedding"), F.col("_qvec")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-    )
-
-
-def _ivfm_probe_only(spark, sf_dir):
-    # The production path of incremental index maintenance: probe the
-    # segment-maintained (base ∪ delta) index — without the exact
-    # brute-force twin and the rebuild-parity gate the registry query
-    # carries for the correctness check (the rebuild IS a scheduled
-    # compaction, not a per-probe cost).
-    from pyspark.sql import functions as F
-
-    from rust_ruuvitag_etl_spark.operators import similarity as sim
-    from rust_ruuvitag_etl_spark.plans.llm23 import ensure_ivfm_tables
-
-    em = load(spark, sf_dir, "embeddings")
-    cents, base_idx, delta_seg = ensure_ivfm_tables(spark, sf_dir)
-    queries_df = em.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return sim.ivf_probe_topk(
-        base_idx.unionAll(delta_seg), cents, queries_df, k=10, nprobe=5
-    )
-
-
-def _ssjoin_fast(spark, sf_dir):
-    from rust_ruuvitag_etl_spark.operators.dedup import spread, ssjoin_prefix_pairs
-
-    return ssjoin_prefix_pairs(spread(load(spark, sf_dir, "documents")))
-
-
-OVERRIDES = {
-    "dedup_minhash_lsh_pairs": _minhash_lsh_fast,
-    "dedup_ssjoin_prefix": _ssjoin_fast,
-    "similarity_bq_topk": _bq_probe_only,
-    "dedup_minhash_verified": _minhash_verified_fast,
-    "similarity_ivf_topk": _ivf_probe_only,
-    "similarity_ivf_pq_topk": _pq_probe_only,
-    "similarity_sq8_topk": _sq8_probe_only,
-    "dedup_semantic_clusters": _semdedup_prod,
-    "similarity_ivf_append_maintain": _ivfm_probe_only,
-}
-
-
-def _reclaim(spark) -> None:
-    """Steady-state isolation, run OUTSIDE every timed region: drop
-    storage blocks a previous query leaked and ask the JVM to collect.
-    Eager ``localCheckpoint`` queries (jaccard prefix, ANN builds) pin
-    executor blocks until their RDDs are JVM-GC'd, and a warm pass
-    over the whole suite accumulates enough of them to inflate every
-    LATER query's timing by 30-50% (measured: dedup_semantic_clusters
-    2.6 s isolated vs 4.7-5.6 s timed after the round-7 pair queries
-    entered the warm pass). Each query's number must measure ITS plan,
-    not the previous query's garbage."""
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(True)
-    spark._jvm.System.gc()
+from tools.harness import HEADLINE, calibration_s, time_query, timed_builder
 
 
 # The driver captures only the LAST ~2000 bytes of bench output before
@@ -369,42 +61,25 @@ def _emit_line(full: dict) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    calibration = _calibration_s()
+    calibration = calibration_s()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up: one untimed pass over the whole suite so the timed pass
-    # measures steady-state query execution, not one-time session costs
-    # (parquet footer/schema reads, codegen compilation, broadcast
-    # thread-pool spin-up) that would otherwise all land on whichever
-    # query happens to run first.
     spark.range(1000).count()
-    for name in HEADLINE:
-        OVERRIDES.get(name, REGISTRY[name].fn)(spark, sf_dir).count()
-    _reclaim(spark)
 
-    # MEDIAN of three timed reps per query: a single measurement on a
-    # shared box intermittently reads 3-4x high (GC pause, co-tenant
-    # burst) and one spike misprices a whole query family (observed:
-    # corpus_prep_end_to_end 2.2 s vs an 8.4 s one-off in back-to-back
-    # runs). The reported total is the sum of medians.
+    # One untimed warm run per query so the timed reps measure
+    # steady-state execution, not one-time costs (parquet footer/schema
+    # reads, codegen compilation, broadcast thread-pool spin-up). MEDIAN
+    # of three timed reps: one spike misprices a whole query family
+    # (observed: corpus_prep_end_to_end 2.2 s vs an 8.4 s one-off in
+    # back-to-back runs). The reported total is the sum of medians.
     timings: dict[str, float] = {}
-    total = 0.0
     for name in HEADLINE:
-        fn = OVERRIDES.get(name, REGISTRY[name].fn)
-        reps = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            reps.append(time.time() - t0)
-        dt = round(sorted(reps)[1], 3)
-        timings[name] = dt
-        total += dt
-        _reclaim(spark)  # untimed: next query starts from a clean JVM
+        reps = time_query(spark, timed_builder(name), sf_dir, warm=1, reps=3)
+        timings[name] = round(statistics.median(reps), 3)
 
     full = {
         "metric": "headline_suite_wall_clock",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

@@ -201,7 +201,19 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", rhash.alias("rhash"))
 
 
-@query("dedup_minhash_verified", oracle=dor.MINHASH_VERIFIED_SQL)
+def _minhash_verified_fast(spark, sf_dir):
+    # Production path on the fast hash family (see _minhash_lsh_fast in
+    # plans/llm.py for why the registry query pins 'portable').
+    docs = load(spark, sf_dir, "documents")
+    cands = dd.minhash_lsh_candidates(docs)
+    return dd.jaccard_pairs(docs, cands, threshold=0.2)
+
+
+@query(
+    "dedup_minhash_verified",
+    oracle=dor.MINHASH_VERIFIED_SQL,
+    production=_minhash_verified_fast,
+)
 def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline: MinHash-LSH candidate generation
     (banded equi-join, no cross join) followed by exact 3-gram Jaccard

@@ -197,7 +197,8 @@ def _pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF-PQ probe: coarse nprobe bucket pruning → ADC
     over the compressed codes (broadcast per-query LUT; the float
     corpus is untouched) → exact re-rank of the 200-candidate
-    shortlist. This probe-only path is what bench.py times."""
+    shortlist. This probe-only path is what the timing harnesses
+    measure."""
     from ..operators import similarity as sim
 
     em = load(spark, sf_dir, "embeddings")
@@ -220,7 +221,14 @@ _PQ_ORACLE = _EXACT_TOPK_ORACLE.replace(
 )
 
 
-@query("similarity_ivf_pq_topk", oracle=_PQ_ORACLE)
+@query(
+    "similarity_ivf_pq_topk",
+    oracle=_PQ_ORACLE,
+    # Same probe-only convention for IVF-PQ: ADC over the persisted
+    # compressed codes + exact shortlist re-rank, without the
+    # brute-force recall twin.
+    production=_pq_probe,
+)
 def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (the compressed-index leg of the ANN
     family, after brute-force and IVF — PAPERS.md ANN literature) with

@@ -93,6 +93,9 @@ def _sq8_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT query_id, vec_id, cosine, rank, TRUE AS recall_ok,"
         " 4.0 AS compression_ratio FROM ranked",
     ),
+    # Probe-only convention for SQ8: quantized scan + exact re-rank,
+    # without the brute-force recall twin.
+    production=_sq8_probe,
 )
 def similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-quantized (SQ8) ANN with the recall floor enforced
@@ -301,6 +304,9 @@ scored AS (
 SELECT id_a, id_b, ROUND(c, 6) AS cosine, TRUE AS recall_ok
 FROM scored WHERE c >= {_SEM_TAU}
 """,
+    # The cluster-scoped production path, without the all-pairs exact
+    # twin the registry query carries for the correctness gate.
+    production=_semdedup_pairs,
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (cluster-scoped semantic dedup) with the recall floor

@@ -81,7 +81,11 @@ FROM v WHERE 3 * i >= na + nb
 """
 
 
-@query("dedup_ssjoin_prefix", oracle=_SSJOIN_ORACLE)
+def _ssjoin_fast(spark, sf_dir):
+    return dd.ssjoin_prefix_pairs(spread(load(spark, sf_dir, "documents")))
+
+
+@query("dedup_ssjoin_prefix", oracle=_SSJOIN_ORACLE, production=_ssjoin_fast)
 def dedup_ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Jaccard >= 0.5 near-dup self-join over distinct 3-gram
     shingles, full corpus, NO blocking key and NO cross join — the
@@ -111,9 +115,10 @@ def dedup_ssjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     PPJoin's positional filter would prune candidates further by a
     constant factor; it is omitted because the numeric-array verify is
     already cheap (long-compare intersects over candidate pairs only).
-    The portable hash family pins the oracle bit-for-bit; production
-    callers (bench OVERRIDES) run hash_family='fast' = xxhash64, the
-    same swap the MinHash family documents.
+    The portable hash family pins the oracle bit-for-bit; the
+    registered production builder (``_ssjoin_fast``) runs
+    hash_family='fast' = xxhash64, the same swap the MinHash family
+    documents.
     Reference analog: the dedup discipline of ``main.rs:118-126``
     (last-wins per key) generalized to near-duplicate sets."""
     docs = spread(load(spark, sf_dir, "documents"))
@@ -213,6 +218,35 @@ def _bq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bq_probe_only(spark, sf_dir):
+    # The production BQ path: ADC shortlist over the 1-bit codes +
+    # exact re-rank of shortlist members — without the brute-force
+    # exact twin the registry query carries for the correctness gate.
+    from ..functions import vectors as vf
+
+    em = load(spark, sf_dir, "embeddings")
+    short = _bq_shortlist(spark, sf_dir)
+    queries_df = em.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
+    )
+    rescored = (
+        short.join(em, "vec_id")
+        .join(F.broadcast(queries_df), "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(
+                vf.cosine(F.col("embedding"), F.col("_qvec")), 6
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        rescored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 10)
+    )
+
+
 @query(
     "similarity_bq_topk",
     oracle=_SIM_ORACLE.replace(
@@ -220,6 +254,7 @@ def _bq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT query_id, vec_id, cosine, rank, TRUE AS recall_ok,"
         " 32.0 AS compression_ratio FROM ranked",
     ),
+    production=_bq_probe_only,
 )
 def similarity_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantization (1-bit) ANN with the recall floor enforced

@@ -23,7 +23,11 @@ from pyspark.sql import SparkSession
 # Shuffle partitions: local[32] testing wants ~2x cores; on a real
 # cluster this is overridden per-deployment (AQE coalesces down anyway).
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local cores: the cores this process may run on, unless
+# SPARK_GRAFT_CPUS pins a count.
+DEFAULT_CPUS = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
 # Driver heap: local mode runs ALL 32 executor threads inside the one
 # driver JVM, and Spark's 1g default starves them (observed: the
 # scaling probe's x16-corpus k-means OOMed the default heap). The

@@ -6,6 +6,7 @@ Pure-Python tests: no Spark session."""
 import json
 
 import bench
+from rust_ruuvitag_etl_spark.plans import REGISTRY
 
 
 def _full(n_queries: int) -> dict:
@@ -62,3 +63,8 @@ def test_current_headline_would_fit():
     line = bench._emit_line(full)
     assert len(line.encode()) <= bench._LINE_BUDGET_BYTES
     assert json.loads(line)["n_queries"] == len(bench.HEADLINE)
+
+
+def test_headline_names_are_registered():
+    missing = [name for name in bench.HEADLINE if name not in REGISTRY]
+    assert not missing, missing

@@ -234,8 +234,8 @@ class TestShuffleByteBudget:
         (pq 1.8 MB incl. index build / tfidf 0.47 MB / bm25 0.34 MB) —
         loose enough for data drift, tight enough that a lost broadcast
         or a corpus-wide re-shuffle (10×+) trips them. Runs in a
-        subprocess because stage metrics need a UI-enabled
-        SparkContext, and the test session's context (ui disabled) is
+        subprocess because the audit measures on its own bench-configured
+        session (``get_spark``), and the test session's context is
         process-global."""
         import json
         import os

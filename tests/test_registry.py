@@ -37,6 +37,17 @@ def test_query_runs(spark, name):
     assert len(df.columns) > 0
 
 
+@pytest.mark.parametrize(
+    "name", sorted(n for n, q in REGISTRY.items() if q.production)
+)
+def test_production_builder_runs(spark, name):
+    """The builders the bench times (not the oracle-gated ones) build
+    and execute too."""
+    df = REGISTRY[name].production(spark, SF_SMALL)
+    assert df.count() >= 0
+    assert len(df.columns) > 0
+
+
 def test_full_differential_sf0001(spark):
     """Every oracle-paired query matches DuckDB exactly at sf0.001."""
     con = duckdb.connect()

@@ -3,8 +3,9 @@
 The full-artifact differential times (CORRECTNESS_full_r*.json) conflate
 the Spark plan with its DuckDB oracle — an expensive oracle (brute-force
 pair joins, recursive CTEs) hides a cheap plan and vice versa. This
-sweep times ONLY the Spark side (1 warm run + 1 timed run per query,
-bench's reclaim discipline between queries) and prints the slowest N,
+sweep times ONLY the Spark side of each query's production builder (1
+warm run + 1 timed run per query through tools/harness.py:time_query,
+reclaim after every run) and prints the slowest N,
 so each round's "is any engine plan silently heavy?" question is a
 command, not a guess. Round-8 finding that motivated it:
 fuzzy_match_levenshtein was the registry's slowest engine plan (22 s at
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,22 +27,18 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     top_n = int(sys.argv[2]) if len(sys.argv) > 2 else 25
 
-    from bench import _reclaim
     from rust_ruuvitag_etl_spark.plans import REGISTRY
     from rust_ruuvitag_etl_spark.session import get_spark
+    from tools.harness import time_query, timed_builder
 
     spark = get_spark("engine-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, float] = {}
     for name in sorted(REGISTRY):
-        fn = REGISTRY[name].fn
         try:
-            fn(spark, sf_dir).count()  # warm: codegen, footers, builds
-            _reclaim(spark)
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            out[name] = time.time() - t0
-            _reclaim(spark)
+            [out[name]] = time_query(
+                spark, timed_builder(name), sf_dir, warm=1, reps=1
+            )
         except Exception as exc:  # pragma: no cover - sweep robustness
             out[name] = -1.0
             print(f"ERR {name}: {str(exc)[:100]}", flush=True)

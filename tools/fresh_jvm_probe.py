@@ -7,13 +7,13 @@ an idle box showed the suite TAIL reading 20-30% above fresh-JVM
 medians and one run mispricing a mid-suite entry 3x. Suite numbers
 BOUND a query's cost; a suite-to-suite delta is only a regression if
 this protocol reproduces it: each query gets its OWN JVM (subprocess),
-a warm pass, then the median of N timed reps with bench's reclaim
-discipline between reps. The parent also reports bench's contention
-sentinel before and after — readings taken at calibration_s > ~0.2
-(1.3x the ~0.15 idle reference) are themselves suspect.
+warm passes, then the median of N timed reps through the bench's own
+timing loop (tools/harness.py:time_query, reclaim after every run).
+The parent also reports the contention sentinel before and after —
+readings taken at calibration_s > ~0.2 (1.3x the ~0.15 idle reference)
+are themselves suspect.
 
-Uses the same OVERRIDES map as bench.py so probe-only ANN paths are
-measured exactly as the headline measures them.
+Times each query's production builder, exactly as the headline does.
 
 Usage: python tools/fresh_jvm_probe.py [sf_dir] query [query ...]
 Output: one "<median>s  <query>  reps=[...]" line per query, plus
@@ -24,43 +24,37 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+from tools.harness import calibration_s, time_query, timed_builder  # noqa: E402
 
 _REPS = 3
 # CPU-bound plans (md5-hash shingling, codec decode) ride a long C2
 # JIT warm-up curve in a fresh JVM: measured on contamination_ngram_
 # eval at sf0.1, rep0 12.4 s -> rep1 2.5 -> rep3 1.65 -> steady 1.6 s.
 # ONE warm rep lands mid-curve and over-reads the query ~2x; three
-# warm reps reach steady state. Override with PROBE_WARM if needed.
-_WARM = int(os.environ.get("PROBE_WARM", "3"))
+# warm reps reach steady state.
+_WARM = 3
 
 
 def _child(sf_dir: str, name: str) -> None:
-    from bench import OVERRIDES, _reclaim
-    from rust_ruuvitag_etl_spark.plans import REGISTRY
     from rust_ruuvitag_etl_spark.session import get_spark
 
     spark = get_spark(f"probe-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    fn = OVERRIDES.get(name, REGISTRY[name].fn)
     spark.range(1000).count()
-    for _ in range(_WARM):  # codegen, footers, plan build, C2 JIT
-        fn(spark, sf_dir).count()
-        _reclaim(spark)
-    reps = []
-    for _ in range(_REPS):
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        reps.append(round(time.time() - t0, 3))
-        _reclaim(spark)
+    reps = [
+        round(t, 3)
+        for t in time_query(spark, timed_builder(name), sf_dir, _WARM, _REPS)
+    ]
     print(
         "CHILD_RESULT "
-        + json.dumps({"name": name, "median": sorted(reps)[len(reps) // 2],
+        + json.dumps({"name": name, "median": statistics.median(reps),
                       "reps": reps})
     )
     spark.stop()
@@ -88,9 +82,7 @@ def main() -> None:
         print("usage: fresh_jvm_probe.py [sf_dir] query [query ...]")
         sys.exit(2)
 
-    from bench import _calibration_s
-
-    print(f"calibration_s(before) = {_calibration_s()}", flush=True)
+    print(f"calibration_s(before) = {calibration_s()}", flush=True)
     results = {}
     for name in args:
         proc = subprocess.run(
@@ -109,7 +101,7 @@ def main() -> None:
         r = json.loads(line[len("CHILD_RESULT "):])
         results[name] = r
         print(f"{r['median']:7.2f}s  {name}  reps={r['reps']}", flush=True)
-    print(f"calibration_s(after) = {_calibration_s()}", flush=True)
+    print(f"calibration_s(after) = {calibration_s()}", flush=True)
     print(json.dumps({n: r["median"] for n, r in results.items()}))
 
 

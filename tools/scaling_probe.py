@@ -2,7 +2,13 @@
 scale factor and write SCALING.md with per-query times and the
 0.01→0.1 scaling exponent (log10 time ratio per 10x data).
 
-Usage: python tools/scaling_probe.py
+Usage: python tools/scaling_probe.py            # every axis -> SCALING.md
+       python tools/scaling_probe.py q [q ...]  # re-time star-axis rows
+
+The second form re-times only the named queries on the star axis (same
+methodology) and replaces each one's row in SCALING.md's star table, or
+appends the row there if the query has none yet — the way to refresh a
+plan change's scaling posture without the full multi-axis run.
 
 An exponent near 0 means the query is dominated by fixed costs at these
 sizes; near 1 means linear in the data; above 1 flags super-linear work
@@ -29,16 +35,17 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, OVERRIDES
-from rust_ruuvitag_etl_spark.plans import REGISTRY
 from rust_ruuvitag_etl_spark.session import get_spark
+from tools.harness import HEADLINE, time_query, timed_builder
 
 SFS = ["0.001", "0.01", "0.1"]
+STAR_DIRS = {sf: f"/root/testdata/sf{sf}" for sf in SFS}
 
 # Shuffle-heaviest registry queries beyond the headline suite (round-1
 # verdict #6): the full LSH→verify dedup composition and the rewritten
@@ -272,30 +279,66 @@ def gen_zipf_corpora(spark, out_root: str) -> dict[int, str]:
 
 
 def _time_queries(spark, names, sf_dirs) -> dict[str, dict[str, float]]:
-    # Production-path overrides (bench.py): dedup on the fast hash
+    # Production builders (plans/registry.py): dedup on the fast hash
     # family, IVF probe-only — the probe grades the plans users run,
-    # not the oracle-gate twins.
-    fns = {n: OVERRIDES.get(n, REGISTRY[n].fn) for n in names}
-    # Warm-up pass at every scale so timings are steady-state.
-    for key, d in sf_dirs.items():
-        for name in names:
-            fns[name](spark, d).count()
-    # MEDIAN of three timed reps: single measurements on a shared box
-    # intermittently read 3-4x high (GC pause, a co-tenant burst) and a
-    # one-off spike in the numerator of a log-ratio fabricates a
-    # super-linear exponent where none exists (observed twice:
-    # q3 +0.92 and dedup_minhash_verified +0.91 star exponents that a
+    # not the oracle-gate twins. One untimed warm run per query and
+    # scale so timings are steady-state, then the MEDIAN of three timed
+    # reps: single measurements on a shared box intermittently read
+    # 3-4x high (GC pause, a co-tenant burst) and a one-off spike in
+    # the numerator of a log-ratio fabricates a super-linear exponent
+    # where none exists (observed twice: q3 +0.92 and
+    # dedup_minhash_verified +0.91 star exponents that a
     # re-measurement minutes later put back at ~+0.3).
     times: dict[str, dict[str, float]] = {n: {} for n in names}
     for key, d in sf_dirs.items():
         for name in names:
-            reps = []
-            for _ in range(3):
-                t0 = time.time()
-                fns[name](spark, d).count()
-                reps.append(time.time() - t0)
-            times[name][key] = round(sorted(reps)[1], 3)
+            reps = time_query(spark, timed_builder(name), d, warm=1, reps=3)
+            times[name][key] = round(statistics.median(reps), 3)
     return times
+
+
+def _star_row(name: str, t: dict[str, float]) -> tuple[str, float]:
+    """SCALING.md star-table row for ``name`` and its exponent."""
+    t1, t2, t3 = (t[sf] for sf in SFS)
+    exp = math.log10(t3 / t2) if t2 > 0 else float("nan")
+    return f"| {name} | {t1} | {t2} | {t3} | {exp:+.2f} |", exp
+
+
+def _step_exp(t1: float, t4: float, t16: float) -> float:
+    """Mean per-4x-step exponent log(t_next/t_prev)/log(4)."""
+    steps = [
+        math.log(b / a) / math.log(4) for a, b in ((t1, t4), (t4, t16)) if a > 0
+    ]
+    return sum(steps) / len(steps) if steps else float("nan")
+
+
+def update_star_rows(path: str, names: list[str]) -> None:
+    """Re-time ``names`` on the star axis; replace each one's row in the
+    star table of the SCALING.md at ``path``, or append it to the table."""
+    spark = get_spark("scaling-probe")
+    spark.sparkContext.setLogLevel("ERROR")
+    star = _time_queries(spark, names, STAR_DIRS)
+    spark.stop()
+    with open(path) as f:
+        lines = f.read().splitlines()
+    start = next(i for i, ln in enumerate(lines) if ln.startswith("## Star-schema"))
+    for name in names:
+        # the star table ends one blank line above its summary line
+        end = next(
+            i for i, ln in enumerate(lines) if ln.startswith("Worst star-axis")
+        ) - 1
+        row, _ = _star_row(name, star[name])
+        at = next(
+            (i for i in range(start, end) if lines[i].startswith(f"| {name} | ")),
+            None,
+        )
+        if at is None:
+            lines.insert(end, row)
+        else:
+            lines[at] = row
+        print(row, flush=True)
+    with open(path, "w") as f:
+        f.write("\n".join(lines) + "\n")
 
 
 def _time_assignment(spark, corpus_dirs) -> dict[str, dict[int, float]]:
@@ -354,12 +397,14 @@ def _time_assignment(spark, corpus_dirs) -> dict[str, dict[int, float]]:
 def main() -> None:
     root = _repo_root()
     out_md = os.path.join(root, "SCALING.md")
+    if sys.argv[1:]:
+        update_star_rows(out_md, sys.argv[1:])
+        return
     spark = get_spark("scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     star_names = list(dict.fromkeys(HEADLINE + EXTRA))
-    star_dirs = {sf: f"/root/testdata/sf{sf}" for sf in SFS}
-    star = _time_queries(spark, star_names, star_dirs)
+    star = _time_queries(spark, star_names, STAR_DIRS)
 
     corpus_dirs = gen_corpora(
         spark, "/root/testdata/sf0.1", os.path.join(root, ".scaling_corpus")
@@ -402,10 +447,9 @@ def main() -> None:
     ]
     worst = 0.0
     for name in star_names:
-        t1, t2, t3 = (star[name][sf] for sf in SFS)
-        exp = math.log10(t3 / t2) if t2 > 0 else float("nan")
+        row, exp = _star_row(name, star[name])
         worst = max(worst, exp)
-        lines.append(f"| {name} | {t1} | {t2} | {t3} | {exp:+.2f} |")
+        lines.append(row)
     lines += [
         "",
         f"Worst star-axis exponent this run: **{worst:+.2f}** (linear = +1.00).",
@@ -423,12 +467,7 @@ def main() -> None:
     worst_c = 0.0
     for name in CORPUS_QUERIES:
         t1, t4, t16 = (corpus[name][str(m)] for m in CORPUS_MULTS)
-        steps = []
-        if t1 > 0:
-            steps.append(math.log(t4 / t1) / math.log(4))
-        if t4 > 0:
-            steps.append(math.log(t16 / t4) / math.log(4))
-        exp = sum(steps) / len(steps) if steps else float("nan")
+        exp = _step_exp(t1, t4, t16)
         worst_c = max(worst_c, exp)
         lines.append(f"| {name} | {t1} | {t4} | {t16} | {exp:+.2f} |")
     lines += [
@@ -486,12 +525,7 @@ def main() -> None:
     worst_s = 0.0
     for name in SKEW_QUERIES:
         t1, t4, t16 = (skew[name][str(m)] for m in SKEW_MULTS)
-        steps = []
-        if t1 > 0:
-            steps.append(math.log(t4 / t1) / math.log(4))
-        if t4 > 0:
-            steps.append(math.log(t16 / t4) / math.log(4))
-        exp = sum(steps) / len(steps) if steps else float("nan")
+        exp = _step_exp(t1, t4, t16)
         worst_s = max(worst_s, exp)
         lines.append(f"| {name} | {t1} | {t4} | {t16} | {exp:+.2f} |")
     lines += [
@@ -520,12 +554,7 @@ def main() -> None:
     ]
     for name in GRAPH_QUERIES:
         t1, t4, t16 = (graph[name][str(m)] for m in GRAPH_MULTS)
-        steps = []
-        if t1 > 0:
-            steps.append(math.log(t4 / t1) / math.log(4))
-        if t4 > 0:
-            steps.append(math.log(t16 / t4) / math.log(4))
-        exp = sum(steps) / len(steps) if steps else float("nan")
+        exp = _step_exp(t1, t4, t16)
         lines.append(f"| {name} | {t1} | {t4} | {t16} | {exp:+.2f} |")
     lines += [
         "",
@@ -546,12 +575,7 @@ def main() -> None:
     ]
     for key in ("flat", "two_level"):
         t1, t4, t16 = (assign[key][m] for m in CORPUS_MULTS)
-        steps = []
-        if t1 > 0:
-            steps.append(math.log(t4 / t1) / math.log(4))
-        if t4 > 0:
-            steps.append(math.log(t16 / t4) / math.log(4))
-        exp = sum(steps) / len(steps) if steps else float("nan")
+        exp = _step_exp(t1, t4, t16)
         lines.append(f"| {key} | {t1} | {t4} | {t16} | {exp:+.2f} |")
     lines += [
         "",

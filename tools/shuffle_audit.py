@@ -5,15 +5,17 @@ counts.
 
 Usage: python tools/shuffle_audit.py [sf_dir] [out_json] [query ...]
 
-Mechanism: each query runs under its own job group; afterwards the
-Spark UI REST API maps job group → job → stages, and per-stage
-``shuffleWriteBytes`` / ``shuffleReadBytes`` sum per query. (Stage
-metrics are the only public, version-stable source of executed shuffle
-volume — SQL-plan SQLMetrics are not reachable from Python across AQE
-re-planning.) Writes JSON: {query: {"write_bytes": N, "read_bytes": N,
-"stages": K}}; ``tools/plan_audit.py`` merges these into PLANS.md as
-ShW/ShR columns, and tests/test_plan_posture.py holds the top
-shuffle-heavy queries to a byte budget at sf0.01.
+Mechanism: each query's production builder runs once on the bench's
+session (``get_spark``) under its own job group; right after, the
+session's status store maps job group → jobs → stages
+(tools/harness.py:job_stages), and per-stage shuffle write / read bytes
+sum per query. (Stage metrics are the only public, version-stable
+source of executed shuffle volume — SQL-plan SQLMetrics are not
+reachable from Python across AQE re-planning.) Writes JSON: {query:
+{"write_bytes": N, "read_bytes": N, "stages": K}};
+``tools/plan_audit.py`` merges these into PLANS.md as ShW/ShR columns,
+and tests/test_plan_posture.py holds the top shuffle-heavy queries to a
+byte budget at sf0.01.
 """
 
 from __future__ import annotations
@@ -21,80 +23,27 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_UI_PORT = 4055
-
-
-def _rest(app_base: str, path: str):
-    with urllib.request.urlopen(f"{app_base}/{path}", timeout=30) as r:
-        return json.load(r)
-
 
 def measure(sf_dir: str, names: list[str]) -> dict[str, dict[str, int]]:
-    # UI must be enabled at context creation: build the session HERE,
-    # before anything else touches get_spark's singleton.
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
-    from pyspark.sql import SparkSession
+    from rust_ruuvitag_etl_spark.session import get_spark
+    from tools.harness import job_stages, timed_builder
 
-    from bench import OVERRIDES
-    from rust_ruuvitag_etl_spark.plans import REGISTRY
-
-    from rust_ruuvitag_etl_spark.session import DEFAULT_DRIVER_MEM
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
-        .appName("shuffle-audit")
-        # same heap as the production session factory — the default 1g
-        # local-mode driver OOMs on the blocked edit-distance join
-        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(_UI_PORT))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    spark = get_spark("shuffle-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
+    out: dict[str, dict[str, int]] = {}
     for name in names:
-        fn = OVERRIDES.get(name, REGISTRY[name].fn)
-        sc.setJobGroup(name, name, interruptOnCancel=False)
-        try:
-            fn(spark, sf_dir).count()
-        finally:
-            sc.setJobGroup("", "")
-
-    base = f"http://localhost:{_UI_PORT}/api/v1"
-    apps = _rest(base, "applications")
-    app_base = f"{base}/applications/{apps[0]['id']}"
-    stage_bytes: dict[int, tuple[int, int]] = {}
-    for st in _rest(app_base, "stages?status=complete"):
-        stage_bytes[st["stageId"]] = (
-            st.get("shuffleWriteBytes", 0),
-            st.get("shuffleReadBytes", 0),
-        )
-    out: dict[str, dict[str, int]] = {
-        n: {"write_bytes": 0, "read_bytes": 0, "stages": 0} for n in names
-    }
-    for job in _rest(app_base, "jobs"):
-        group = job.get("jobGroup")
-        if group not in out:
-            continue
-        for sid in job.get("stageIds", []):
-            if sid in stage_bytes:
-                w, r = stage_bytes.pop(sid)  # pop: stages shared across
-                out[group]["write_bytes"] += w  # jobs count once
-                out[group]["read_bytes"] += r
-                out[group]["stages"] += 1
+        spark.sparkContext.setJobGroup(name, name)
+        timed_builder(name)(spark, sf_dir).count()
+        stages = [s for j in job_stages(spark, name) for s in j["stages"]]
+        out[name] = {
+            "write_bytes": sum(s["shuffle_w"] for s in stages),
+            "read_bytes": sum(s["shuffle_r"] for s in stages),
+            "stages": len(stages),
+        }
+    spark.stop()
     return out
 
 
@@ -107,7 +56,7 @@ def main() -> None:
     if len(sys.argv) > 3:
         names = sys.argv[3:]
     else:
-        from bench import HEADLINE
+        from tools.harness import HEADLINE
 
         names = HEADLINE
     result = {

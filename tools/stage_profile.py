@@ -2,30 +2,24 @@
 
 The bench gives one number per query; this tool answers "where inside
 the query do the seconds go" — the guide §1 empirical loop without a
-browser. It runs the query once warm (codegen/footers), then once
-timed, splitting BUILDER time (the fn(spark, sf_dir) call — eager
-localCheckpoints execute here as their own jobs) from ACTION time
-(count / noop write of the returned frame), and dumps every job and
-stage the timed pass ran with durations and task-metric aggregates
-pulled from the live UI's REST API.
+browser. It runs the query's production builder once warm
+(codegen/footers), then once timed, splitting BUILDER time (the
+fn(spark, sf_dir) call — eager localCheckpoints execute here as their
+own jobs) from ACTION time (count / noop write of the returned frame),
+and dumps every job and stage the timed pass ran with durations and
+task-metric aggregates read from the session's status store
+(tools/harness.py:job_stages).
 
 Usage: python tools/stage_profile.py <query> [sf_dir] [--noop]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.load(r)
 
 
 def main() -> None:
@@ -37,21 +31,13 @@ def main() -> None:
     qname = args[0]
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
 
-    from bench import OVERRIDES, _reclaim
-    from rust_ruuvitag_etl_spark.plans import REGISTRY
-    from rust_ruuvitag_etl_spark.session import configure
+    from rust_ruuvitag_etl_spark.session import get_spark
+    from tools.harness import job_stages, reclaim, timed_builder
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = configure(
-        SparkSession.builder.appName(f"profile-{qname}")
-        .master(f"local[{cpus}]")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    fn = OVERRIDES.get(qname, REGISTRY[qname].fn)
+    spark = get_spark(f"profile-{qname}")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    fn = timed_builder(qname)
 
     def run(df):
         if use_noop:
@@ -62,54 +48,38 @@ def main() -> None:
     # warm pass
     spark.range(1000).count()
     run(fn(spark, sf_dir))
-    _reclaim(spark)
+    reclaim(spark)
 
-    base = f"http://localhost:4049/api/v1/applications/{spark.sparkContext.applicationId}"
-    jobs_before = {j["jobId"] for j in _rest(base, "/jobs")}
-
-    spark.sparkContext.setJobDescription(f"{qname}: builder")
+    sc.setJobGroup(qname, f"{qname}: builder")
     t0 = time.time()
     df = fn(spark, sf_dir)
     t1 = time.time()
-    spark.sparkContext.setJobDescription(f"{qname}: action")
+    sc.setJobDescription(f"{qname}: action")
     run(df)
     t2 = time.time()
-    spark.sparkContext.setJobDescription(None)
 
     print(f"query={qname} sf_dir={sf_dir} action={'noop' if use_noop else 'count'}")
     print(f"builder_s={t1 - t0:.3f}  action_s={t2 - t1:.3f}  total_s={t2 - t0:.3f}")
 
-    jobs = [j for j in _rest(base, "/jobs") if j["jobId"] not in jobs_before]
-    jobs.sort(key=lambda j: j["jobId"])
-    stages = {s["stageId"]: s for s in _rest(base, "/stages?status=complete")}
+    jobs = job_stages(spark, qname)
     print(f"\n{len(jobs)} jobs in timed pass:")
     tot_by_stage = 0.0
     for j in jobs:
-        sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-        fin = time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-        dur = time.mktime(fin) - time.mktime(sub)
-        desc = (j.get("description") or j["name"])[:60]
-        print(f"  job {j['jobId']:4d}  ~{dur:5.1f}s  tasks={j['numCompletedTasks']:5d}  {desc}")
-        for sid in sorted(j["stageIds"]):
-            s = stages.get(sid)
-            if not s:
-                continue
-            ms = s.get("executorRunTime", 0)
-            cpu = s.get("executorCpuTime", 0) / 1e6
-            gc = s.get("jvmGcTime", 0)
-            fetch = s.get("shuffleFetchWaitTime", 0)
-            shr = s.get("shuffleReadBytes", 0)
-            shw = s.get("shuffleWriteBytes", 0)
-            tot_by_stage += ms / 1000.0
+        print(
+            f"  job {j['id']:4d}  {j['wall_s']:6.2f}s  "
+            f"tasks={j['tasks']:5d}  {j['desc'][:60]}"
+        )
+        for s in j["stages"]:
+            tot_by_stage += s["run_s"]
             print(
-                f"    stage {sid:4d} tasks={s['numCompleteTasks']:4d} "
-                f"runTime={ms/1000:7.2f}s cpu={cpu/1000:7.2f}s "
-                f"gc={gc/1000:5.2f}s fetchWait={fetch/1000:5.2f}s "
-                f"shR={shr/1e6:7.2f}MB "
-                f"shW={shw/1e6:7.2f}MB  {s['name'][:48]}"
+                f"    stage {s['id']:4d} tasks={s['tasks']:4d} "
+                f"runTime={s['run_s']:7.2f}s cpu={s['cpu_s']:7.2f}s "
+                f"gc={s['gc_s']:5.2f}s fetchWait={s['fetch_wait_s']:5.2f}s "
+                f"shR={s['shuffle_r']/1e6:7.2f}MB "
+                f"shW={s['shuffle_w']/1e6:7.2f}MB  {s['name'][:48]}"
             )
     print(f"\nsum(stage executorRunTime) = {tot_by_stage:.1f}s "
-          f"(wall x {int(cpus)} cores available)")
+          f"(wall x {sc.defaultParallelism} cores available)")
     spark.stop()
 
 

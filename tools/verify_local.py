@@ -96,7 +96,7 @@ def main() -> int:
         args = args[2:]
     headline = bool(args) and args[0] == "--headline"
     if headline:
-        from bench import HEADLINE
+        from tools.harness import HEADLINE
 
         sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
         only = set(HEADLINE)
