@@ -13,8 +13,6 @@ trailing windows since the watermark never passes the last event).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,83 +22,23 @@ from .registry import query
 from .ruuvi import FLAGSHIP_ORACLE
 from .timeseries import SLIDING_WINDOW_ORACLE
 
-# Stateful-streaming state stores are created PER SHUFFLE PARTITION and
-# each one commits a delta file per micro-batch; a stream-stream
-# interval join runs FOUR stores per partition. On this module's
-# bounded availableNow harness inputs the per-store fixed cost dominates
-# wall clock at the session default of 32 partitions (measured:
-# streaming_interval_join 8.2 s at 32 -> 2.9 s at 8, identical rows), so
-# the state-heavy harness jobs pin a smaller count for the duration of
-# the run. The CONTINUOUS production paths (streaming/pipeline.py) are
-# untouched — at real scale the store count should track the cluster,
-# not this harness constant.
-_HARNESS_STATE_PARTITIONS = "8"
-
-# The override below mutates the SESSION-global shuffle-partition conf,
-# so any query planned concurrently in the same session would silently
-# inherit the harness value. The harness contract is sequential
-# execution; this lock turns that contract into an assertion — a second
-# concurrent entry fails loudly instead of cross-contaminating plans.
-_SEQUENTIAL_HARNESS_LOCK = threading.Lock()
-
-
-class _bounded_state_shuffle:
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-
-    def __enter__(self):
-        if not _SEQUENTIAL_HARNESS_LOCK.acquire(blocking=False):
-            raise RuntimeError(
-                "concurrent _bounded_state_shuffle: the streaming "
-                "harness mutates session-global shuffle partitions and "
-                "requires sequential execution (use a dedicated "
-                "SparkSession.newSession() per thread to parallelize)"
-            )
-        # If conf.get/set throws here the with-body never runs, so
-        # __exit__ never fires — release before re-raising or every
-        # later harness query would hit the "concurrent" error above.
-        try:
-            self._old = self._spark.conf.get(
-                "spark.sql.shuffle.partitions"
-            )
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", _HARNESS_STATE_PARTITIONS
-            )
-        except BaseException:
-            _SEQUENTIAL_HARNESS_LOCK.release()
-            raise
-
-    def __exit__(self, *exc):
-        # The conf restore can itself throw (session stopped mid-run);
-        # the lock must release regardless or every later harness query
-        # would hit the misleading "concurrent" error above.
-        try:
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", self._old
-            )
-        finally:
-            _SEQUENTIAL_HARNESS_LOCK.release()
-        return False
-
 
 def _run_memory_sink(
     spark: SparkSession, df: DataFrame, name: str, mode: str
 ) -> DataFrame:
     """Run ``df`` as an availableNow job into a memory sink named
-    ``name`` and return the result table. All harness jobs run under
-    _bounded_state_shuffle: every stateful operator (windowed agg,
-    dedup, session merge, stream-stream join) creates state stores per
-    shuffle partition, and at the bounded harness sizes the per-store
-    commit cost dominates (see the constant above)."""
-    with _bounded_state_shuffle(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ``name`` and return the result table. Every stateful operator
+    (windowed agg, dedup, session merge, stream-stream join) creates one
+    state store per shuffle partition, so the store count follows the
+    session (``session.size_shuffle_partitions``: one per task slot)."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.table(name)
 
 

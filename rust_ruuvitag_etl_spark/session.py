@@ -5,6 +5,7 @@ One place to encode the engine-wide execution posture:
 - UTC session timezone (reference stamps UTC wall clock,
   ``/root/reference/src/utils.rs:82``; oracle comparisons need a fixed TZ).
 - Arrow enabled for every pandas-UDF / toPandas boundary.
+- Shuffle partitions = the session's task slots (``size_shuffle_partitions``).
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   are the first line of defense at 100 TB where static tuning can't see
   per-stage cardinalities.
@@ -20,15 +21,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions: local[32] testing wants ~2x cores; on a real
-# cluster this is overridden per-deployment (AQE coalesces down anyway).
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 # Local cores: the cores this process may run on, unless
 # SPARK_GRAFT_CPUS pins a count.
 DEFAULT_CPUS = os.environ.get(
     "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
 )
-# Driver heap: local mode runs ALL 32 executor threads inside the one
+# Driver heap: local mode runs every executor thread inside the one
 # driver JVM, and Spark's 1g default starves them (observed: the
 # scaling probe's x16-corpus k-means OOMed the default heap). The
 # sandbox has 128 GiB; 16g is still conservative. Only effective when
@@ -42,7 +40,6 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         builder
         .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -66,34 +63,40 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     )
 
 
+def size_shuffle_partitions(spark: SparkSession) -> SparkSession:
+    """Set ``spark.sql.shuffle.partitions`` to the session's task slots
+    (``defaultParallelism``), unless the session already holds a value
+    other than Spark's built-in 200 (a deployment-tuned value wins).
+
+    Stateful streaming creates one state store per shuffle partition and
+    commits each one every micro-batch, and AQE never coalesces them, so
+    the count must follow the cores. Batch queries keep AQE coalescing,
+    which sizes their partitions by bytes. A checkpoint keeps the count
+    it started with: Spark pins it in the offset log."""
+    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
+    return spark
+
+
 def get_spark(app_name: str = "rust-ruuvitag-etl-spark", master: str | None = None) -> SparkSession:
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         master = f"local[{DEFAULT_CPUS}]"
     builder = builder.master(master)
-    return configure(builder).getOrCreate()
+    # the master, and so the task slots, is known only after getOrCreate
+    return size_shuffle_partitions(configure(builder).getOrCreate())
 
 
 def ensure_session_configs(spark: SparkSession) -> SparkSession:
     """Best-effort: apply runtime-settable configs to an existing session
     (driver-owned sessions may not have gone through ``configure``)."""
-    # Shuffle partitions: only override Spark's untuned default of 200
-    # (streaming can't rely on AQE to coalesce it) or honor an explicit
-    # env opt-in — never clobber a deployment-tuned value.
     try:
-        current_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+        size_shuffle_partitions(spark)
     except Exception:
-        current_shuffle = "200"
-    if (
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS" in os.environ
-        or current_shuffle in ("200", None)
-    ):
-        try:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS
-            )
-        except Exception:
-            pass
+        pass
     for key, val in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),

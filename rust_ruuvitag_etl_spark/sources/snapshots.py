@@ -117,6 +117,27 @@ def current_version(table: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def _table_schema(df: DataFrame, base: str | None) -> str:
+    """The schema a commit publishes: the ``base`` manifest schema's
+    fields in their order, then ``df``'s extra columns (segments that
+    lack a column read it as NULL). A same-named column with a different
+    type raises ``ValueError`` before anything is published."""
+    if base is None:
+        return df.schema.json()
+    merged = _schema_from_json(base)
+    for field in df.schema.fields:
+        if field.name not in merged.fieldNames():
+            merged.add(field)
+            continue
+        have = merged[field.name].dataType
+        if have != field.dataType:
+            raise ValueError(
+                f"column {field.name!r} is {have.simpleString()} in the "
+                f"table, {field.dataType.simpleString()} in the commit"
+            )
+    return merged.json()
+
+
 def commit(
     df: DataFrame,
     table: str,
@@ -141,12 +162,14 @@ def commit(
             raise CommitConflict(
                 f"table at version {parent}, expected {expected_version}"
             )
+    if mode == "append" and parent is not None:
+        parent_m = _load_manifest(table, parent)
+    else:
+        parent_m = {}
+    schema = _table_schema(df, parent_m.get("schema"))
     segment = os.path.join("data", uuid.uuid4().hex)
     df.write.parquet(os.path.join(table, segment))
-    if mode == "append" and parent is not None:
-        segments = list(_load_manifest(table, parent)["segments"])
-    else:
-        segments = []
+    segments = list(parent_m.get("segments", []))
     segments.append(segment)
     version = (parent if parent is not None else -1) + 1
     manifest = {
@@ -154,7 +177,7 @@ def commit(
         "parent": parent,
         "operation": mode,
         "segments": segments,
-        "schema": df.schema.json(),
+        "schema": schema,
         "committed_at": time.time(),
     }
     # the loser of a version race fails inside _publish_manifest,
@@ -174,13 +197,22 @@ def read_snapshot(
         if version is None:
             raise ValueError(f"{table} has no committed versions")
     m = _load_manifest(table, version)
-    paths = [os.path.join(table, s) for s in m["segments"]]
-    if not paths:
-        return spark.createDataFrame([], _schema_from_json(m["schema"]))
-    # mergeSchema: segments committed before an additive schema change
-    # surface the new columns as NULL (parquet schema evolution); the
-    # manifest records the schema as of its commit.
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
+    return _read_segments(spark, table, m["segments"], m["schema"])
+
+
+def _read_segments(
+    spark: SparkSession, table: str, segments: list[str], schema_json: str
+) -> DataFrame:
+    """Read ``segments`` with the manifest schema: segments committed
+    before an additive schema change surface the new columns as NULL,
+    and no footer-merge job runs (the manifest already holds the union,
+    see :func:`_table_schema`)."""
+    schema = _schema_from_json(schema_json)
+    if not segments:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(table, s) for s in segments]
+    )
 
 
 def _schema_from_json(schema_json: str):
@@ -255,15 +287,9 @@ def read_changes(
                     f"non-append operation {m['operation']!r} at version "
                     f"{v}: incremental read undefined, re-read the snapshot"
                 )
-    target = _load_manifest(table, to_version)["segments"]
-    added = [s for s in target if s not in base]
-    if not added:
-        m = _load_manifest(table, to_version)
-        return spark.createDataFrame([], _schema_from_json(m["schema"]))
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(table, s) for s in added])
-    )
+    target = _load_manifest(table, to_version)
+    added = [s for s in target["segments"] if s not in base]
+    return _read_segments(spark, table, added, target["schema"])
 
 
 def write_stream_snapshots(
@@ -320,9 +346,10 @@ def _commit_with_extra(
     df: DataFrame, table: str, parent: int | None, version: int, extra: dict
 ) -> None:
     os.makedirs(_manifest_dir(table), exist_ok=True)
+    parent_m = _load_manifest(table, parent) if parent is not None else {}
+    schema = _table_schema(df, parent_m.get("schema"))
     segment = os.path.join("data", uuid.uuid4().hex)
     df.write.parquet(os.path.join(table, segment))
-    parent_m = _load_manifest(table, parent) if parent is not None else {}
     segments = list(parent_m.get("segments", []))
     segments.append(segment)
     manifest = {
@@ -330,7 +357,7 @@ def _commit_with_extra(
         "parent": parent,
         "operation": "append",
         "segments": segments,
-        "schema": df.schema.json(),
+        "schema": schema,
         "committed_at": time.time(),
         **extra,
     }
@@ -368,7 +395,7 @@ def cluster_by(
         "parent": parent,
         "operation": f"cluster_by_{'_'.join(sort_cols)}",
         "segments": [segment],
-        "schema": df.schema.json(),
+        "schema": _table_schema(df, None),
         "committed_at": time.time(),
     }
     _publish_manifest(table, version, _carry_hwm(manifest, table, parent))

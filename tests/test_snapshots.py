@@ -158,6 +158,34 @@ class TestSchemaEvolution:
             "id", "v",
         }
 
+    def test_narrower_append_reads_the_union(self, spark, tmp_path):
+        """A segment without a column the table already has reads that
+        column as NULL: the manifest keeps the union of the schemas."""
+        t = str(tmp_path / "tbl")
+        sn.commit(
+            spark.range(0, 3).selectExpr(
+                "id", "id * 2 AS v", "CAST(id AS STRING) AS tag"
+            ),
+            t,
+        )
+        sn.commit(_df(spark, 3, 5), t)
+        full = sn.read_snapshot(spark, t)
+        assert full.columns == ["id", "v", "tag"]
+        rows = {r["id"]: r["tag"] for r in full.collect()}
+        assert rows == {0: "0", 1: "1", 2: "2", 3: None, 4: None}
+        assert sn.read_changes(spark, t, from_version=0).columns == [
+            "id", "v", "tag",
+        ]
+
+    def test_type_conflict_raises_before_publishing(self, spark, tmp_path):
+        t = str(tmp_path / "tbl")
+        sn.commit(_df(spark, 0, 5), t)
+        clash = spark.range(5, 8).selectExpr("id", "CAST(id AS STRING) AS v")
+        with pytest.raises(ValueError, match="'v'"):
+            sn.commit(clash, t)
+        assert sn.current_version(t) == 0
+        assert sn.read_snapshot(spark, t).count() == 5
+
 
 class TestIncrementalReads:
     def test_read_changes_between_appends(self, spark, tmp_path):

@@ -117,7 +117,7 @@ def main() -> None:
     out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
     )
-    spark = get_spark("plan-audit", master="local[8]")
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     bytes_json = os.path.join(
