@@ -42,34 +42,3 @@ def sq_l2(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(a, lambda x: x.cast("double") / n)
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash over a token array using xxhash64 per token.
-
-    For each of 64 bit positions, sum +1/-1 by token-hash bit, then take
-    the sign. Bit positions are unrolled in Python (they are plan-time
-    constants), producing one codegen'd expression tree. Bit 63 is the
-    sign bit: ``1 << 63`` as a signed long is Long.MIN_VALUE.
-    """
-    def vote(bit: int):
-        # Factory keeps the lambda at arity 2 (acc, element) — a
-        # default-arg lambda would be dispatched as a 3-arg HOF form.
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(F.lit(bit).cast("long")) != 0, 1
-        ).otherwise(-1)
-
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        bit = (1 << i) if i < 63 else -(1 << 63)
-        cnt = F.aggregate(hashes, F.lit(0), vote(bit))
-        out = out.bitwiseOR(
-            F.when(cnt > 0, F.lit(bit).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return out

@@ -7,27 +7,24 @@ decoder plus a batch-level emitter. EIGHT real codecs run on genuine
 byte formats via pure stdlib (``struct``/``zlib``) + numpy: WAV/PCM16
 audio (:func:`decode_wav` — RIFF chunk-tree walk, padding rule,
 sign-correct LE sample decode), uncompressed 24-bit BMP
-(:func:`decode_bmp` — header parse, 4-byte row stride, BGR→RGB,
-bottom-up un-flip), COMPRESSED PNG (:func:`decode_png` — chunk CRCs,
-zlib inflate, all five scanline filters), COMPRESSED GIF
-(:func:`decode_gif` — a full variable-width LZW engine), ENTROPY-CODED
-baseline JPEG (:func:`decode_jpeg` — canonical Huffman from DHT,
-byte-unstuffing, restart resync, dequantize/de-zigzag, matrix IDCT,
-JFIF YCbCr→RGB), COMPRESSED-AUDIO FLAC (:func:`decode_flac` —
-CRC-verified frames, constant/verbatim/fixed/LPC subframes with
-partitioned-Rice residuals, all three side-channel stereo modes),
-uncompressed AVI video (:func:`decode_avi` — RIFF container walk with
-idx1 verification) and baseline TIFF (:func:`decode_tiff_array` — IFD
-walk, strip assembly). The mp3 and Ogg CONTAINERS walk for real
-(:func:`decode_mp3_frames`, :func:`decode_ogg_pages`); only their
-psychoacoustic sample decode stays STUBBED (it genuinely needs media
-libraries). Each is oracle-checked end-to-end by a registry query on
-payloads packed in-engine (``multimodal_*_stats``,
+(:func:`decode_bmp_array` — header parse, 4-byte row stride, BGR→RGB,
+bottom-up un-flip), COMPRESSED PNG (:func:`decode_png_array` — chunk
+CRCs, zlib inflate, all five scanline filters), COMPRESSED GIF
+(:func:`decode_gif_array` — a full variable-width LZW engine),
+ENTROPY-CODED baseline JPEG (:func:`decode_jpeg_array` — canonical
+Huffman from DHT, byte-unstuffing, restart resync, dequantize/
+de-zigzag, matrix IDCT, JFIF YCbCr→RGB), COMPRESSED-AUDIO FLAC
+(:func:`decode_flac` — CRC-verified frames, constant/verbatim/fixed/LPC
+subframes with partitioned-Rice residuals, all three side-channel
+stereo modes), uncompressed AVI video (:func:`decode_avi` — RIFF
+container walk with idx1 verification) and baseline TIFF
+(:func:`decode_tiff_array` — IFD walk, strip assembly). The mp3 and Ogg
+CONTAINERS walk for real (:func:`decode_mp3_frames`,
+:func:`decode_ogg_pages`); their psychoacoustic sample decode is not
+implemented (it genuinely needs media libraries). Each is
+oracle-checked end-to-end by a registry query that packs its payloads
+in Python in the same Arrow pass as the decode (``multimodal_*_stats``,
 ``multimodal_ogg_pages``, ``multimodal_mp3_frames``).
-``decode_image``/``decode_audio`` on unknown bytes raise
-NotImplementedError unless ``fake=True``, in which case a
-deterministic byte-statistics "decode" stands in so the dataflow can be
-exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -99,94 +96,26 @@ def _total_decoder(fn):
     return wrapped
 
 
-def decode_image(content: bytes, fake: bool = False) -> dict:
-    """Image decode: REAL for BMP (:func:`decode_bmp`), PNG
-    (:func:`decode_png`), GIF (:func:`decode_gif`), baseline JPEG
-    (:func:`decode_jpeg`), and baseline TIFF
-    (:func:`decode_tiff_array`) payloads; every real image-codec stub
-    is now closed. Fake mode stays TOTAL over arbitrary bytes (decode
-    errors fall back to the deterministic byte-statistics stub)."""
-    if content[:2] == b"\xff\xd8":
-        try:
-            d = decode_jpeg(content)
-            return {"width": d["width"], "height": d["height"], "channels": 3}
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif content[:2] == b"BM":
-        try:
-            d = decode_bmp(content)
-            return {"width": d["width"], "height": d["height"], "channels": 3}
-        except (ValueError, NotImplementedError):
-            # fake mode must stay TOTAL over arbitrary bytes: BM-prefixed
-            # junk or unsupported BMP variants (32-bit, RLE) fall back to
-            # the deterministic byte-statistics stub instead of raising.
-            if not fake:
-                raise
-    elif content[:8] == b"\x89PNG\r\n\x1a\n":
-        try:
-            d = decode_png(content)
-            return {"width": d["width"], "height": d["height"], "channels": 3}
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif content[:6] in (b"GIF87a", b"GIF89a"):
-        try:
-            d = decode_gif(content)
-            return {"width": d["width"], "height": d["height"], "channels": 3}
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif content[:4] in (b"II*\x00", b"MM\x00*"):
-        try:
-            d = decode_tiff_array(content)
-            return {"width": d["width"], "height": d["height"], "channels": 3}
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif not fake:
-        raise NotImplementedError(
-            "unrecognized image format (bmp/png/gif/jpeg/tiff "
-            "supported); pass fake=True"
-        )
-    return {"width": len(content) % 640, "height": len(content) % 480, "channels": 3}
-
-
-def decode_bmp(content: bytes) -> dict:
+@_total_decoder
+def decode_bmp_array(content: bytes) -> dict:
     """REAL Windows BMP decoder for uncompressed 24-bit BI_RGB bitmaps —
-    pure stdlib ``struct``, no media libraries (the image analog of the
-    reference's format-5 byte decoder,
+    pure stdlib ``struct`` + numpy, no media libraries (the image analog
+    of the reference's format-5 byte decoder,
     ``/root/reference/src/bluetooth/scanner.rs:35-83``, and of
     :func:`decode_wav` for audio). Parses the BITMAPFILEHEADER (pixel
     array offset), the BITMAPINFOHEADER (dimensions, planes, bpp,
     compression), honors the 4-byte row stride padding rule, converts
-    per-pixel BGR storage order to (r, g, b), and un-flips the
-    bottom-up row order (negative height = top-down, also handled).
+    per-pixel BGR storage order to RGB, and un-flips the bottom-up row
+    order (negative height = top-down, also handled).
 
-    Returns ``{"width", "height", "pixels"}`` with ``pixels`` as rows
-    (top to bottom) of (r, g, b) tuples. Raises ``ValueError`` on
-    malformed payloads and ``NotImplementedError`` for palettized or
-    compressed variants."""
-    d = decode_bmp_array(content)
-    return {
-        "width": d["width"],
-        "height": d["height"],
-        "pixels": [
-            [tuple(int(c) for c in px) for px in row] for row in d["rgb"]
-        ],
-    }
-
-
-@_total_decoder
-def decode_bmp_array(content: bytes) -> dict:
-    """The vectorized core of :func:`decode_bmp`: identical parsing and
-    validation, but returns ``{"width", "height", "rgb"}`` with ``rgb``
-    a ``uint8`` numpy array of shape (height, width, 3), rows top to
-    bottom. The whole pixel array unpacks as one ``np.frombuffer`` +
-    stride reshape + axis reversals in C — no Python per-pixel loop
-    (round-3 star-axis exponent +0.47 came from the old ``for y/for x``
-    loops). Note the array is a VIEW for top-down files and a reversed
-    view otherwise; callers must copy before mutating."""
+    Returns ``{"width", "height", "rgb"}`` with ``rgb`` a ``uint8``
+    numpy array of shape (height, width, 3), rows top to bottom. The
+    whole pixel array unpacks as one ``np.frombuffer`` + stride reshape
+    + axis reversals in C — no Python per-pixel loop. Note the array is
+    a VIEW for top-down files and a reversed view otherwise; callers
+    must copy before mutating. Raises ``ValueError`` on malformed
+    payloads and ``NotImplementedError`` for palettized or compressed
+    variants."""
     import struct
 
     if len(content) < 54 or content[:2] != b"BM":
@@ -223,16 +152,18 @@ def decode_bmp_array(content: bytes) -> dict:
     return {"width": w, "height": h, "rgb": rgb}
 
 
-def decode_png(content: bytes) -> dict:
+@_total_decoder
+def decode_png_array(content: bytes) -> dict:
     """REAL PNG decoder for non-interlaced 8-bit images — pure stdlib
-    (``struct`` + ``zlib``), no media libraries (the compressed-format
-    analog of :func:`decode_bmp`/:func:`decode_wav`, closing the
-    round-3 "compressed codecs stubbed" gap for PNG). Parses the
+    (``struct`` + ``zlib``) + numpy, no media libraries. Parses the
     8-byte signature and the chunk stream (length / type / data /
     CRC-32, each CRC verified with ``zlib.crc32``), validates IHDR,
     inflates the concatenated IDAT zlib stream (Adler-32 verified by
     ``zlib.decompress``), and reconstructs all five scanline filters
-    (None/Sub/Up/Average/Paeth) per the PNG spec §9.
+    (None/Sub/Up/Average/Paeth) per the PNG spec §9. The common filters
+    run as numpy array ops (None/Up element-wise, Sub as a per-lane
+    cumulative sum mod 256); Average and Paeth carry a true
+    left-to-right data dependency and reconstruct per byte.
 
     Supported: bit depth 8, interlace 0 (none), color types 0
     (greyscale — expanded to RGB), 2 (truecolor) and 6 (truecolor +
@@ -242,26 +173,8 @@ def decode_png(content: bytes) -> dict:
     filter type) and ``NotImplementedError`` for palette images,
     non-8 bit depths, and Adam7 interlacing.
 
-    Returns ``{"width", "height", "pixels"}`` with ``pixels`` as rows
-    (top to bottom) of (r, g, b) tuples."""
-    d = decode_png_array(content)
-    return {
-        "width": d["width"],
-        "height": d["height"],
-        "pixels": [
-            [tuple(int(c) for c in px) for px in row] for row in d["rgb"]
-        ],
-    }
-
-
-@_total_decoder
-def decode_png_array(content: bytes) -> dict:
-    """The vectorized core of :func:`decode_png`: identical parsing and
-    validation, returning ``{"width", "height", "rgb"}`` with ``rgb`` a
-    ``uint8`` numpy array of shape (height, width, 3). The common
-    scanline filters run as numpy array ops (None/Up element-wise, Sub
-    as a per-lane cumulative sum mod 256); Average and Paeth carry a
-    true left-to-right data dependency and reconstruct per byte."""
+    Returns ``{"width", "height", "rgb"}`` with ``rgb`` a ``uint8``
+    numpy array of shape (height, width, 3)."""
     import struct
     import zlib
 
@@ -397,67 +310,6 @@ def decode_wav(content: bytes) -> dict:
     }
 
 
-def decode_audio(content: bytes, fake: bool = False) -> dict:
-    """Audio decode: REAL for RIFF/WAVE PCM16 (:func:`decode_wav`) and
-    COMPRESSED FLAC (:func:`decode_flac`) payloads; lossy entropy
-    codecs (mp3/ogg — need soundfile/librosa, absent in this
-    container) remain stubbed behind ``fake=True``, which stays TOTAL
-    over arbitrary bytes (decode errors fall back to the deterministic
-    stub)."""
-    if content[:4] == b"RIFF":
-        try:
-            d = decode_wav(content)
-            return {
-                "sample_rate": d["sample_rate"],
-                "n_samples": len(d["samples"]),
-            }
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif content[:4] == b"fLaC":
-        try:
-            d = decode_flac(content)
-            return {
-                "sample_rate": d["sample_rate"],
-                "n_samples": len(d["samples"]),
-            }
-        except (ValueError, NotImplementedError):
-            if not fake:
-                raise
-    elif content[:4] == b"OggS":
-        # The CONTAINER parses for real (decode_ogg_pages: CRC-32,
-        # sequencing, lacing); the psychoacoustic SAMPLE decode of the
-        # Vorbis/Opus packets inside genuinely needs media libraries.
-        if not fake:
-            d = decode_ogg_pages(content)
-            raise NotImplementedError(
-                f"Ogg container parsed ({d['n_pages']} pages, "
-                f"{d['n_packets']} packets) but Vorbis/Opus sample "
-                "decode needs media libraries; pass fake=True"
-            )
-    elif content[:3] == b"ID3" or (
-        len(content) >= 2
-        and content[0] == 0xFF
-        and (content[1] & 0xE0) == 0xE0
-    ):
-        # Same honest boundary for mp3: the FRAME walk is real
-        # (decode_mp3_frames: sync, length arithmetic, CRC-16), the
-        # Huffman/psychoacoustic sample decode is not.
-        if not fake:
-            d = decode_mp3_frames(content)
-            raise NotImplementedError(
-                f"MPEG audio stream parsed ({d['n_frames']} frames) "
-                "but Layer III sample decode needs media libraries; "
-                "pass fake=True"
-            )
-    elif not fake:
-        raise NotImplementedError(
-            "unrecognized audio format (wav/flac supported; Ogg and "
-            "mp3 parse at container level only); pass fake=True"
-        )
-    return {"sample_rate": 16000, "n_samples": len(content) * 2}
-
-
 PCM_STATS_SCHEMA = (
     "media_id long, sample_rate int, n_channels int, n_samples long, "
     "sum_samples long, max_abs int, mean_sample double"
@@ -493,15 +345,15 @@ def _pcm_stats(keys, items) -> dict:
     }
 
 
-def wav_pcm_samples(media: DataFrame) -> DataFrame:
-    """REAL-decode sample extraction for the audio-dedup family: each
-    RIFF/WAVE payload decodes with the stdlib PCM16 parser
-    (:func:`decode_wav`) and emits its raw signed samples as
-    ``array<int>`` — the representation the gain-invariant energy-
+def wav_pcm_samples(media: DataFrame, decode) -> DataFrame:
+    """REAL-decode sample extraction for the audio-dedup family:
+    ``decode`` (:func:`decode_wav` over each payload) yields the
+    stdlib PCM16 parse, and the emitter outputs its raw signed samples
+    as ``array<int>`` — the representation the gain-invariant energy-
     envelope fingerprint consumes."""
     return decode_map(
         media,
-        lambda b: (decode_wav(b)["samples"],),
+        lambda b: (decode(b)["samples"],),
         lambda keys, smp: {
             "media_id": keys,
             "samples": [list(s) for s in smp],  # already Python ints
@@ -665,33 +517,6 @@ def resize_media(media: DataFrame, factor: int = 4) -> DataFrame:
     )
 
 
-def decode_gif(content: bytes) -> dict:
-    """REAL GIF decoder — pure stdlib + numpy, no media libraries (the
-    fourth real codec after WAV/BMP/PNG, and the second COMPRESSED one:
-    a full variable-width LZW decompressor). Parses the GIF87a/89a
-    header, logical screen descriptor, global/local color tables, skips
-    89a extension blocks, walks the image-data sub-block chain, and
-    LZW-decodes the pixel indices — growing code widths 3→12 bits,
-    dictionary rebuilds on CLEAR, and the KwKwK self-referential case
-    per the spec — then maps indices through the color table to RGB.
-
-    Supported: single-image, non-interlaced GIFs with a color table.
-    Raises ``ValueError`` on malformed payloads (bad signature,
-    truncated blocks, out-of-range codes/indices, missing trailer
-    data) and ``NotImplementedError`` for interlaced images.
-
-    Returns ``{"width", "height", "pixels"}`` with ``pixels`` as rows
-    (top to bottom) of (r, g, b) tuples."""
-    d = decode_gif_array(content)
-    return {
-        "width": d["width"],
-        "height": d["height"],
-        "pixels": [
-            [tuple(int(c) for c in px) for px in row] for row in d["rgb"]
-        ],
-    }
-
-
 def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> list[int]:
     """GIF-flavored LZW: codes packed LSB-first, widths grow from
     min_code_size+1 up to 12 bits, CLEAR resets the dictionary, EOI
@@ -750,8 +575,22 @@ def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> list[int]:
 
 @_total_decoder
 def decode_gif_array(content: bytes) -> dict:
-    """Core of :func:`decode_gif`: returns ``{"width", "height",
-    "rgb"}`` with ``rgb`` a uint8 numpy array of shape (h, w, 3)."""
+    """REAL GIF decoder — pure stdlib + numpy, no media libraries (a
+    COMPRESSED image codec: a full variable-width LZW decompressor).
+    Parses the GIF87a/89a header, logical screen descriptor,
+    global/local color tables, skips 89a extension blocks, walks the
+    image-data sub-block chain, and LZW-decodes the pixel indices —
+    growing code widths 3→12 bits, dictionary rebuilds on CLEAR, and
+    the KwKwK self-referential case per the spec — then maps indices
+    through the color table to RGB.
+
+    Supported: single-image, non-interlaced GIFs with a color table.
+    Raises ``ValueError`` on malformed payloads (bad signature,
+    truncated blocks, out-of-range codes/indices, missing trailer
+    data) and ``NotImplementedError`` for interlaced images.
+
+    Returns ``{"width", "height", "rgb"}`` with ``rgb`` a uint8 numpy
+    array of shape (h, w, 3)."""
     import struct
 
     import numpy as np
@@ -820,35 +659,6 @@ def decode_gif_array(content: bytes) -> dict:
         else:
             raise ValueError(f"unexpected GIF block 0x{b:02x}")
     raise ValueError("no image data in GIF payload")
-
-
-def decode_jpeg(content: bytes) -> dict:
-    """REAL baseline JPEG decoder — pure stdlib ``struct`` + numpy, no
-    media libraries (the entropy-coded analog of :func:`decode_png`'s
-    zlib path, closing the last declared image-codec stub). Parses the
-    marker stream (SOI / DQT / SOF0 / DHT / DRI / SOS / EOI, APPn+COM
-    skipped), builds the canonical Huffman decoders from DHT, entropy-
-    decodes the byte-stuffed scan (DC category + extend, AC run/size
-    with EOB and ZRL, restart-marker resync), dequantizes, inverse-
-    zigzags, applies the 2-D IDCT as two orthonormal DCT-matrix
-    multiplies, and converts JFIF YCbCr→RGB.
-
-    Supported: baseline sequential DCT (SOF0), 8-bit samples, 1 or 3
-    components with NO chroma subsampling (all sampling factors 1×1).
-    Raises ``ValueError`` on malformed payloads and
-    ``NotImplementedError`` for progressive (SOF2), 16-bit quant
-    tables, arithmetic coding, or subsampled chroma.
-
-    Returns ``{"width", "height", "pixels"}`` with ``pixels`` rows of
-    (r, g, b) tuples."""
-    d = decode_jpeg_array(content)
-    return {
-        "width": d["width"],
-        "height": d["height"],
-        "pixels": [
-            [tuple(int(c) for c in px) for px in row] for row in d["rgb"]
-        ],
-    }
 
 
 # zigzag index: _JPEG_ZIGZAG[k] = (row, col) of the k-th coefficient.
@@ -970,9 +780,24 @@ def _jpeg_extend(v: int, size: int) -> int:
 
 @_total_decoder
 def decode_jpeg_array(content: bytes) -> dict:
-    """The vectorized core of :func:`decode_jpeg`: identical parsing,
-    returning ``{"width", "height", "rgb"}`` with ``rgb`` uint8 of
-    shape (height, width, 3)."""
+    """REAL baseline JPEG decoder — pure stdlib ``struct`` + numpy, no
+    media libraries (the entropy-coded analog of
+    :func:`decode_png_array`'s zlib path). Parses the marker stream
+    (SOI / DQT / SOF0 / DHT / DRI / SOS / EOI, APPn+COM skipped), builds
+    the canonical Huffman decoders from DHT, entropy-decodes the
+    byte-stuffed scan (DC category + extend, AC run/size with EOB and
+    ZRL, restart-marker resync), dequantizes, inverse-zigzags, applies
+    the 2-D IDCT as two orthonormal DCT-matrix multiplies, and converts
+    JFIF YCbCr→RGB.
+
+    Supported: baseline sequential DCT (SOF0), 8-bit samples, 1 or 3
+    components with NO chroma subsampling (all sampling factors 1×1).
+    Raises ``ValueError`` on malformed payloads and
+    ``NotImplementedError`` for progressive (SOF2), 16-bit quant
+    tables, arithmetic coding, or subsampled chroma.
+
+    Returns ``{"width", "height", "rgb"}`` with ``rgb`` uint8 of shape
+    (height, width, 3)."""
     import struct
 
     import numpy as np
@@ -1339,7 +1164,7 @@ _FLAC_BITS = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24}
 @_total_decoder
 def decode_flac(content: bytes) -> dict:
     """REAL FLAC decoder — pure stdlib bit arithmetic, no media
-    libraries (the compressed-audio analog of :func:`decode_jpeg`,
+    libraries (the compressed-audio analog of :func:`decode_jpeg_array`,
     closing the last codec-category stub with a real lossless codec).
     Parses the ``fLaC`` magic and metadata-block chain (STREAMINFO bit
     fields), then each frame: sync code, blocksize/sample-rate codes
@@ -1395,7 +1220,7 @@ def decode_flac(content: bytes) -> dict:
     n_ch = streaminfo["channels"]
     # Default before the frame loop: a structurally valid stream with
     # total=0 and zero frames must return STREAMINFO's rate, not crash
-    # with an unbound local (the fake-mode-is-TOTAL contract).
+    # with an unbound local.
     rate = streaminfo["sample_rate"]
     channels: list[list[int]] = [[] for _ in range(n_ch)]
     while pos < len(content) and (total == 0 or len(channels[0]) < total):
@@ -1631,17 +1456,22 @@ AVI_STATS_SCHEMA = (
 )
 
 
-def avi_video_stats(media: DataFrame) -> DataFrame:
-    """Per-frame feature extraction over REAL AVI payloads: decode the
-    container (:func:`decode_avi`) into one item per frame and emit
-    per-frame channel sums plus the order-sensitive top-left red byte
-    (which only matches the oracle if the bottom-up un-flip AND the
-    BGR→RGB swap both happened)."""
-    return decode_map(media, _avi_frames, _avi_frame_stats, AVI_STATS_SCHEMA)
+def avi_video_stats(media: DataFrame, decode) -> DataFrame:
+    """Per-frame feature extraction over REAL AVI payloads: ``decode``
+    (:func:`decode_avi` over each payload) yields the container's
+    frames, one item per frame, and the emitter reports per-frame
+    channel sums plus the order-sensitive top-left red byte (which only
+    matches the oracle if the bottom-up un-flip AND the BGR→RGB swap
+    both happened)."""
+    return decode_map(
+        media,
+        lambda b: _avi_frames(decode(b)),
+        _avi_frame_stats,
+        AVI_STATS_SCHEMA,
+    )
 
 
-def _avi_frames(content: bytes) -> list:
-    d = decode_avi(content)
+def _avi_frames(d: dict) -> list:
     return [(fno, d["n_frames"], rgb) for fno, rgb in enumerate(d["frames"])]
 
 
@@ -1835,8 +1665,8 @@ def decode_mp3_frames(content: bytes) -> dict:
 
     This is a CONTAINER decode: per-frame main data comes back as
     opaque bytes; Huffman/psychoacoustic SAMPLE decode genuinely needs
-    media libraries and stays behind :func:`decode_audio`'s
-    ``NotImplementedError``. Raises ``ValueError`` on malformed frames
+    media libraries and is not implemented. Raises ``ValueError`` on
+    malformed frames
     and ``NotImplementedError`` for Layer I/II and free-format
     (bitrate index 0) streams.
 
@@ -1944,16 +1774,17 @@ MP3_FRAMES_SCHEMA = (
 )
 
 
-def mp3_frame_stats(media: DataFrame) -> DataFrame:
-    """Container-level feature extraction over REAL mp3 payloads: walk
-    every frame (:func:`decode_mp3_frames` — sync, table lookups,
-    length arithmetic, side-info CRC-16 all verified) and emit the
-    stream facts plus ``tail_word``, the final frame's last ≤4
-    main-data bytes folded little-endian — order-sensitive, so a hash
-    match proves byte-exact frame segmentation."""
+def mp3_frame_stats(media: DataFrame, decode) -> DataFrame:
+    """Container-level feature extraction over REAL mp3 payloads:
+    ``decode`` (:func:`decode_mp3_frames` over each payload — sync,
+    table lookups, length arithmetic, side-info CRC-16 all verified)
+    walks every frame, and the emitter reports the stream facts plus
+    ``tail_word``, the final frame's last ≤4 main-data bytes folded
+    little-endian — order-sensitive, so a hash match proves byte-exact
+    frame segmentation."""
     return decode_map(
         media,
-        lambda b: (decode_mp3_frames(b),),
+        lambda b: (decode(b),),
         lambda keys, items: {
             "media_id": keys,
             "n_frames": [d["n_frames"] for d in items],
@@ -2015,8 +1846,8 @@ def decode_ogg_pages(content: bytes) -> dict:
 
     This is a CONTAINER decode: packets come back as opaque bytes.
     Psychoacoustic sample decode (Vorbis/Opus payloads) genuinely needs
-    media libraries and stays behind :func:`decode_audio`'s
-    ``NotImplementedError``. Raises ``ValueError`` on malformed pages
+    media libraries and is not implemented. Raises ``ValueError`` on
+    malformed pages
     and ``NotImplementedError`` for multiplexed (multi-serial) streams.
 
     Returns ``{"n_pages", "n_packets", "serial", "last_granule",
@@ -2110,16 +1941,17 @@ OGG_PAGES_SCHEMA = (
 )
 
 
-def ogg_page_stats(media: DataFrame) -> DataFrame:
+def ogg_page_stats(media: DataFrame, decode) -> DataFrame:
     """Container-level feature extraction over REAL Ogg payloads:
-    decode every page (:func:`decode_ogg_pages` — CRC-32, sequence,
-    BOS/EOS, lacing assembly all verified) and emit the container facts
-    plus ``tail_word``, the final packet's last ≤4 bytes folded
-    little-endian — order-sensitive, so a hash match proves byte-exact
-    packet reassembly through the segment table."""
+    ``decode`` (:func:`decode_ogg_pages` over each payload — CRC-32,
+    sequence, BOS/EOS, lacing assembly all verified) walks every page,
+    and the emitter reports the container facts plus ``tail_word``, the
+    final packet's last ≤4 bytes folded little-endian —
+    order-sensitive, so a hash match proves byte-exact packet
+    reassembly through the segment table."""
     return decode_map(
         media,
-        lambda b: (decode_ogg_pages(b),),
+        lambda b: (decode(b),),
         lambda keys, items: {
             "media_id": keys,
             "n_pages": [d["n_pages"] for d in items],

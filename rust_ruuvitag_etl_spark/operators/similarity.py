@@ -416,32 +416,6 @@ def ivf_probe_topk(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Convenience wrapper: inline assignment + probe (no persisted
-    index). Production path is :func:`ivf_build_index` once, then
-    :func:`ivf_probe_topk` per query batch."""
-    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    return ivf_probe_topk(
-        assigned,
-        centroids,
-        queries,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    )
-
-
 def cosine_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.3,
@@ -526,23 +500,6 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 1234) -> list[list[float]]
     """Deterministic Gaussian hyperplanes as plan-time literals."""
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def rhp_signature(
-    vec: F.Column, planes: list[list[float]]
-) -> F.Column:
-    """Random-hyperplane (SimHash-for-vectors) signature: bit j is the
-    sign of ``vec · plane_j``, packed into one long. Pure codegen'd
-    expressions — the dot products run next to the parquet scan."""
-    sig = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        d = vf.dot(vec, F.array(*[F.lit(x) for x in plane]))
-        sig = sig.bitwiseOR(
-            F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
 
 
 def _seq_dot_batches(va_col: str, vb_col, out_col: str, keep: list[str]):

@@ -90,19 +90,3 @@ def salted_shuffle_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
     )
     return b.join(m, [key, "_salt"], how).drop("_salt")
-
-
-def salted_broadcast_left(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Skew-proof join of a big skewed fact against a small dim: just
-    broadcast the dim — a broadcast hash join has no shuffle on the big
-    side, so key skew cannot concentrate rows on one reducer. This is
-    the first thing to reach for before salting a join; salting the
-    *aggregation* (above) plus broadcasting the *join* removes both
-    skew-sensitive shuffles from the reference pipeline shape
-    (groupBy → enrich, ``/root/reference/src/utils.rs:37-95``)."""
-    return big.join(F.broadcast(small), key, how)

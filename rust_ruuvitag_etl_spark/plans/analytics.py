@@ -17,6 +17,9 @@ IEEE-double expression at the end, mirrored exactly in the oracle.
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -365,6 +368,28 @@ _BMP_MAX_SQL = "GREATEST(" + ", ".join(
 _BMP_LUMA_SQL = " + ".join(_bmp_chan_sql(m) for m in _BMP_PRIMES)
 
 
+_BMP_HEADER = bytes.fromhex(_BMP_HEADER_HEX)
+
+
+def _dib_3x2(chan: list[int]) -> bytes:
+    """The 24-byte pixel array of a 3x2 24-bit DIB from 18 channel
+    values (pixel p = y*3 + x, channels r, g, b at 3p..3p+2): BGR byte
+    order, 3 pad bytes per 9-byte row, bottom row first. Shared by the
+    BMP and AVI packers."""
+    rows = [
+        bytes(chan[3 * p + c] for p in range(3 * y, 3 * y + 3) for c in (2, 1, 0))
+        + b"\0\0\0"
+        for y in (1, 0)
+    ]
+    return b"".join(rows)
+
+
+def _pack_bmp(e: int) -> bytes:
+    """Genuine 78-byte 3x2 24-bit BI_RGB BMP of event ``e``: channel i
+    is (e * _BMP_PRIMES[i]) mod 256."""
+    return _BMP_HEADER + _dib_3x2([(e * m) % 256 for m in _BMP_PRIMES])
+
+
 @query(
     "multimodal_image_stats",
     oracle=f"""
@@ -384,48 +409,31 @@ FROM events
 def multimodal_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SECOND real codec proven end-to-end (image twin of
     multimodal_audio_stats): deterministic RGB channels derived from
-    event_id are PACKED into genuine 78-byte 24-bit BI_RGB BMP files —
-    pure expressions assembling the two headers, per-pixel BGR byte
-    order, 4-byte row stride padding, and bottom-up row order — then
-    decoded by the stdlib ``struct`` BMP parser
-    (operators/multimodal.py:decode_bmp) inside Arrow-batched
-    mapInPandas. ``topleft_r`` is order-SENSITIVE: it only matches the
-    oracle if the decoder un-flips the bottom-up rows AND swaps BGR to
-    RGB, which the channel sums alone could not prove. The oracle
-    computes every stat arithmetically from event_id, so a hash match
-    proves the whole pack→parse→un-flip→reduce chain is the identity.
+    event_id are packed into genuine 78-byte 24-bit BI_RGB BMP files
+    (:func:`_pack_bmp`: both headers, per-pixel BGR byte order, 4-byte
+    row stride padding, bottom-up row order) and decoded by the stdlib
+    ``struct`` BMP parser (operators/multimodal.py:decode_bmp_array) in
+    the same Arrow-batched pass over bare ids. ``topleft_r`` is
+    order-SENSITIVE: it only matches the oracle if the decoder un-flips
+    the bottom-up rows AND swaps BGR to RGB, which the channel sums
+    alone could not prove. The oracle computes every stat
+    arithmetically from event_id, so a hash match proves the whole
+    pack→parse→un-flip→reduce chain is the identity.
     Reference analog: the format-5 BLE decoder ``scanner.rs:35-83``."""
     # spread(): a single local parquet split would pin the pack+decode
     # work to one core; at scale the input has enough splits and this
     # is a no-op.
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    media = ev.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(bmp_payload_hex(F.col("event_id"))).alias("content"),
-    )
-    return mm.image_stats(media, mm.decode_bmp_array)
-
-
-def bmp_payload_hex(e):
-    """Hex of a genuine 78-byte 3x2 24-bit BI_RGB BMP whose 18 channel
-    values derive from the id column ``e`` via the co-prime multipliers
-    (pixel p uses primes[3p..3p+2] for R,G,B)."""
-
-    def pixel_chans(p: int):
-        r, g, b = (_BMP_PRIMES[3 * p], _BMP_PRIMES[3 * p + 1], _BMP_PRIMES[3 * p + 2])
-        return (e * r, e * g, e * b)
-
-    return bmp_payload_hex_from_channels(
-        [pixel_chans(p) for p in range(6)]
-    )
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.image_stats(ids, lambda e: mm.decode_bmp_array(_pack_bmp(e)))
 
 
 def bmp_payload_hex_from_channels(pixels):
     """Assemble the 78-byte 3x2 24-bit BI_RGB BMP hex from six (r, g, b)
     Column triples (values taken mod 256): the two headers, per-pixel
     BGR byte order, 4-byte row stride padding, bottom-up row order.
-    Shared by multimodal_image_stats and dedup_image_bands so the
-    packer can never drift between consumers."""
+    The SQL-side twin of :func:`_pack_bmp`, used by llm22's reference
+    packer for dedup_image_bands."""
 
     def u8_hex(raw):
         return F.lpad(F.hex(F.pmod(raw, F.lit(256))), 2, "0")
@@ -460,33 +468,57 @@ _PNG_STRIDE = _PNG_W * 3                      # 9 raw bytes per scanline
 _PNG_DATA_LEN = _PNG_H * (1 + _PNG_STRIDE)    # 40 = 4 x (filter + 9)
 
 
-def _png_fixed_chunks() -> tuple[str, str, str]:
-    """(signature+IHDR, IDAT prefix, IEND) hex — all constant for the
-    3x4 RGB8 layout; IHDR's CRC-32 is over constant bytes, so it is
-    computed once here (stdlib zlib) rather than per row."""
-    import struct
-    import zlib
-
+def _png_fixed_chunks() -> tuple[bytes, bytes, bytes]:
+    """(signature+IHDR, IDAT length, IEND) — all constant for the 3x4
+    RGB8 layout, so their CRC-32s are computed once here."""
     ihdr_body = struct.pack(">IIBBBBB", _PNG_W, _PNG_H, 8, 2, 0, 0, 0)
     ihdr = (
         struct.pack(">I", len(ihdr_body))
         + b"IHDR"
         + ihdr_body
-        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr_body) & 0xFFFFFFFF)
+        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr_body))
     )
-    head = (b"\x89PNG\r\n\x1a\n" + ihdr).hex()
     # IDAT length: 2 zlib header + 5 stored-block header + data + 4 Adler
-    idat_len = struct.pack(">I", 2 + 5 + _PNG_DATA_LEN + 4).hex()
-    iend = (
-        b"\x00\x00\x00\x00IEND"
-        + struct.pack(">I", zlib.crc32(b"IEND") & 0xFFFFFFFF)
-    ).hex()
-    return head, idat_len, iend
+    idat_len = struct.pack(">I", 2 + 5 + _PNG_DATA_LEN + 4)
+    iend = b"\x00\x00\x00\x00IEND" + struct.pack(">I", zlib.crc32(b"IEND"))
+    return b"\x89PNG\r\n\x1a\n" + ihdr, idat_len, iend
 
 
-_PNG_HEAD_HEX, _PNG_IDAT_LEN_HEX, _PNG_IEND_HEX = _png_fixed_chunks()
-# Stored (BTYPE=00, BFINAL=1) deflate block: 0x01, LEN=40 LE, NLEN LE.
-_PNG_ZLIB_PREFIX_HEX = "7801" + "01" + "2800" + "d7ff"
+_PNG_HEAD, _PNG_IDAT_LEN, _PNG_IEND = _png_fixed_chunks()
+# zlib header, then one stored (BTYPE=00, BFINAL=1) deflate block:
+# 0x01, LEN=40 LE, NLEN LE.
+_PNG_ZLIB_PREFIX = bytes.fromhex("7801" "01" "2800" "d7ff")
+
+
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+
+
+def _pack_png(e: int) -> bytes:
+    """Genuine 3x4 RGB8 PNG of event ``e``: raw byte i of scanline y is
+    (e * _PNG_PRIMES[9y + i]) mod 256, and scanline y is filtered with
+    type y + 1 (Sub, Up, Average, Paeth) exactly as a PNG encoder
+    emits it. The IDAT zlib stream is one stored deflate block with
+    its Adler-32, and the IDAT chunk carries its CRC-32."""
+    data, prev = bytearray(), [0] * _PNG_STRIDE
+    for y in range(_PNG_H):
+        line = [(e * m) % 256 for m in _PNG_PRIMES[9 * y : 9 * y + 9]]
+        data.append(y + 1)
+        for i, v in enumerate(line):
+            a = line[i - 3] if i >= 3 else 0
+            c = prev[i - 3] if i >= 3 else 0
+            pred = (a, prev[i], (a + prev[i]) // 2, _paeth(a, prev[i], c))[y]
+            data.append((v - pred) % 256)
+        prev = line
+    idat = (
+        b"IDAT" + _PNG_ZLIB_PREFIX + data + struct.pack(">I", zlib.adler32(data))
+    )
+    return (
+        _PNG_HEAD + _PNG_IDAT_LEN + idat + struct.pack(">I", zlib.crc32(idat))
+        + _PNG_IEND
+    )
 
 
 def _png_chan_sql(i: int) -> str:
@@ -521,17 +553,13 @@ FROM events
 )
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The THIRD real codec proven end-to-end, and the first COMPRESSED
-    one: deterministic RGB channels derived from event_id are PACKED
-    into genuine PNG files by pure JVM expressions — signature, IHDR,
-    an IDAT whose zlib stream is a stored deflate block with the
-    Adler-32 checksum computed ARITHMETICALLY in-expression (a = 1 +
-    Σbytes, b = n + Σ(n-i)·byte_i, mod 65521) and the chunk CRC-32 via
-    Spark's built-in ``crc32`` (same ISO-HDLC polynomial as PNG), and
-    IEND — then inflated and unfiltered by the stdlib zlib parser
-    (operators/multimodal.py:decode_png) inside Arrow-batched
-    mapInPandas. Each of the four scanlines uses a DIFFERENT filter
-    type (Sub/Up/Average/Paeth), with the filtered bytes derived by
-    the inverse filter arithmetic in-expression, so a hash match
+    one: deterministic RGB channels derived from event_id are packed
+    into genuine PNG files (:func:`_pack_png`: signature, IHDR, an IDAT
+    whose zlib stream is a stored deflate block with its Adler-32, the
+    chunk CRC-32s, IEND), then inflated and unfiltered by the stdlib
+    zlib parser (operators/multimodal.py:decode_png_array) in the same
+    Arrow-batched pass over bare ids. Each of the four scanlines uses a
+    DIFFERENT filter type (Sub/Up/Average/Paeth), so a hash match
     proves the decoder reconstructs all four filters with the correct
     left/up/up-left neighbor topology — ``topleft_r`` and the channel
     sums are only right if the whole inflate→unfilter→reduce chain is
@@ -541,133 +569,8 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work to one core; at scale the input has enough splits and this
     # is a no-op.
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-
-    # STAGED selects: every byte value is materialized as a NAMED
-    # column before the next stage references it. Raw bytes feed two
-    # filter rows each, and every filtered byte feeds the hex payload
-    # AND both Adler-32 sums — inlined into one Project the shared
-    # subtrees duplicate at every level and the expression tree blows
-    # up combinatorially (measured: ~2 s/100k rows interpreted, vs
-    # codegen-friendly staged projects). CollapseProject keeps
-    # non-trivial aliased expressions staged, so this stays linear in
-    # the 76 byte expressions.
-    stage_raw = ev.select(
-        "event_id",
-        *[
-            F.pmod(e * _PNG_PRIMES[9 * y + i], F.lit(256)).alias(f"r_{y}_{i}")
-            for y in range(4)
-            for i in range(9)
-        ],
-    )
-    raw = [[F.col(f"r_{y}_{i}") for i in range(9)] for y in range(4)]
-    zero = F.lit(0)
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = F.abs(p - a), F.abs(p - b), F.abs(p - c)
-        return (
-            F.when((pa <= pb) & (pa <= pc), a).when(pb <= pc, b).otherwise(c)
-        )
-
-    # Inverse-filtered bytes per scanline (mod-256 differences against
-    # the raw neighbors — exactly what a PNG encoder emits).
-    filtered = [
-        # row 0: Sub — left neighbor is 3 bytes back, 0 off the edge
-        [
-            F.pmod(raw[0][i] - (raw[0][i - 3] if i >= 3 else zero), F.lit(256))
-            for i in range(9)
-        ],
-        # row 1: Up
-        [F.pmod(raw[1][i] - raw[0][i], F.lit(256)) for i in range(9)],
-        # row 2: Average — floor((left + up) / 2)
-        [
-            F.pmod(
-                raw[2][i]
-                - F.floor(
-                    ((raw[2][i - 3] if i >= 3 else zero) + raw[1][i]) / 2
-                ),
-                F.lit(256),
-            )
-            for i in range(9)
-        ],
-        # row 3: Paeth
-        [
-            F.pmod(
-                raw[3][i]
-                - paeth(
-                    raw[3][i - 3] if i >= 3 else zero,
-                    raw[2][i],
-                    raw[2][i - 3] if i >= 3 else zero,
-                ),
-                F.lit(256),
-            )
-            for i in range(9)
-        ],
-    ]
-    # Stage 2: materialize the filtered bytes as named columns — each
-    # is referenced three times downstream (hex payload + both Adler
-    # sums), as attributes, not re-inlined subtrees.
-    stage_filt = stage_raw.select(
-        "event_id",
-        *[
-            filtered[y][i].alias(f"f_{y}_{i}")
-            for y in range(4)
-            for i in range(9)
-        ],
-    )
-    # The 40 deflate-stored data bytes: filter-type byte then 9
-    # filtered bytes per scanline.
-    data_vals: list = []
-    for y, ftype in enumerate((1, 2, 3, 4)):
-        data_vals.append(F.lit(ftype))
-        data_vals.extend(F.col(f"f_{y}_{i}") for i in range(9))
-    n = len(data_vals)  # 40
-
-    # Adler-32 over the stored data, arithmetically (mod 65521): the
-    # byte values are bounded so the bigint sums cannot overflow.
-    s = data_vals[0]
-    for v in data_vals[1:]:
-        s = s + v
-    adler_a = F.pmod(F.lit(1) + s, F.lit(65521))
-    wsum = data_vals[0] * n
-    for j, v in enumerate(data_vals[1:], start=1):
-        wsum = wsum + v * (n - j)
-    adler_b = F.pmod(F.lit(n) + wsum, F.lit(65521))
-    adler_hex = F.lpad(F.hex(adler_b * 65536 + adler_a), 8, "0")
-
-    def u8_hex(raw_col):
-        return F.lpad(F.hex(raw_col), 2, "0")
-
-    data_hex = F.concat(*[u8_hex(v) for v in data_vals])
-    # Stage 3: one named column for the zlib stream; its two consumers
-    # (payload concat, CRC-32) then share it.
-    stage_z = stage_filt.select(
-        "event_id",
-        F.concat(
-            F.lit(_PNG_ZLIB_PREFIX_HEX), data_hex, adler_hex
-        ).alias("zstream_hex"),
-    )
-    idat_crc_hex = F.lpad(
-        F.hex(
-            F.crc32(F.unhex(F.concat(F.lit("49444154"), F.col("zstream_hex"))))
-        ),
-        8,
-        "0",
-    )
-    payload_hex = F.concat(
-        F.lit(_PNG_HEAD_HEX),
-        F.lit(_PNG_IDAT_LEN_HEX),
-        F.lit("49444154"),  # "IDAT"
-        F.col("zstream_hex"),
-        idat_crc_hex,
-        F.lit(_PNG_IEND_HEX),
-    )
-    media = stage_z.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.image_stats(media, mm.decode_png_array)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.image_stats(ids, lambda e: mm.decode_png_array(_pack_png(e)))
 
 
 @query(

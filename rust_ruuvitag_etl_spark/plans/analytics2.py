@@ -16,9 +16,12 @@ correctness sample keeps the reference-parity surface.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import multimodal as mm
 from ..operators.dedup import spread
 from ..sources import load
 from .registry import query
@@ -367,22 +370,20 @@ def bitmap_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- JPEG codec query -----------------------------------------------------
 
 # The FIFTH real codec, and the first ENTROPY-CODED one: a genuine
-# baseline JPEG per event_id, packed by pure JVM expressions. The image
-# is a constant-gray 8x8 (g = event_id % 256): with quant table
+# baseline JPEG per event_id (_pack_jpeg). The image is a constant-gray
+# 8x8 (g = event_id % 256): with quant table
 # q[DC] = 8 the quantized DC coefficient is exactly g - 128, the AC
 # spectrum is all-zero (one EOB), and IDCT of a DC-only block is a
 # constant plane — so the decode is numerically EXACT and the stats
 # oracle is plain arithmetic. Headers (SOI/DQT/SOF0/two DHTs/SOS) are
-# fixed bytes; only the 1-2 entropy bytes vary per row:
+# fixed bytes; only the 1-2 entropy bytes vary per event:
 #   [DC category c : 4 bits][magnitude bits : c][EOB "0" : 1][1-pad]
 # Categories <= 3 fit one byte; the 4-bit category (<= 8 = 0b1000)
 # keeps the first nibble below 0xF, and the EOB zero-bit lands inside
 # whichever byte is last, so NO byte can be 0xFF — no stuffing needed.
 
 
-def _jpeg_fixed_header_hex() -> str:
-    import struct
-
+def _jpeg_fixed_header() -> bytes:
     qt = bytes([8] + [1] * 63)
     out = b"\xff\xd8"
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + qt
@@ -410,10 +411,24 @@ def _jpeg_fixed_header_hex() -> str:
         + bytes([0])
     )
     out += b"\xff\xda" + struct.pack(">H", 8) + bytes([1, 1, 0x00, 0, 0x3F, 0])
-    return out.hex()
+    return out
 
 
-_JPEG_HEAD_HEX = _jpeg_fixed_header_hex()
+_JPEG_HEAD = _jpeg_fixed_header()
+
+
+def _pack_jpeg(e: int) -> bytes:
+    """Genuine constant-gray 8x8 baseline JPEG of event ``e``: the DC
+    difference d = (e mod 256) - 128 coded as its 4-bit category c,
+    c magnitude bits (negative d as d + 2^c - 1), the one-bit EOB and
+    1-padding to a whole byte."""
+    d = e % 256 - 128
+    c = abs(d).bit_length()
+    nbytes = 1 if c <= 3 else 2
+    pad = 8 * nbytes - (4 + c + 1)
+    bits = ((c << c) | (d if d >= 0 else d + (1 << c) - 1)) << 1
+    scan = ((bits << pad) | ((1 << pad) - 1)).to_bytes(nbytes, "big")
+    return _JPEG_HEAD + scan + b"\xff\xd9"
 
 
 @query(
@@ -435,74 +450,22 @@ FROM events
 def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FIFTH real codec proven end-to-end, and the first
     ENTROPY-CODED one: constant-gray 8x8 baseline JPEGs are packed per
-    event_id by pure JVM expressions (fixed marker segments + a 1-2
-    byte Huffman-coded scan; see the module comment for why the DC-only
+    event_id (:func:`_pack_jpeg`: fixed marker segments + a 1-2 byte
+    Huffman-coded scan; see the module comment for why the DC-only
     construction makes the decode numerically exact), then decoded by
     the REAL baseline decoder — marker parse, canonical Huffman from
     DHT, dequantize, de-zigzag, numpy IDCT
-    (operators/multimodal.py:decode_jpeg_array) — inside Arrow-batched
-    mapInPandas, with the same integer-exact stat vector as the
-    BMP/PNG/GIF queries. A hash match proves the full
+    (operators/multimodal.py:decode_jpeg_array) — in the same
+    Arrow-batched pass over bare ids, with the same integer-exact stat
+    vector as the BMP/PNG/GIF queries. A hash match proves the full
     entropy-decode→IDCT chain reconstructs every pixel: the oracle is
     plain per-row arithmetic on event_id.
 
-    Scale posture: pack is scan-local expressions (no shuffle), decode
-    is a streamed mapInPandas — identical to the other codec queries."""
-    from ..operators import multimodal as mm
-
+    Scale posture: pack and decode are one streamed mapInPandas over
+    the ids (no shuffle) — identical to the other codec queries."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-    stage1 = ev.select(
-        "event_id",
-        F.pmod(e, F.lit(256)).alias("g"),
-        (F.pmod(e, F.lit(256)) - 128).alias("diff"),
-    )
-    absd = F.abs(F.col("diff"))
-    c = (
-        F.when(absd == 0, 0)
-        .when(absd < 2, 1)
-        .when(absd < 4, 2)
-        .when(absd < 8, 3)
-        .when(absd < 16, 4)
-        .when(absd < 32, 5)
-        .when(absd < 64, 6)
-        .when(absd < 128, 7)
-        .otherwise(8)
-    )
-    stage2 = stage1.select(
-        "event_id",
-        "diff",
-        c.alias("c"),
-        F.expr("shiftleft(1, " + "CASE WHEN abs(diff) = 0 THEN 0 "
-               "WHEN abs(diff) < 2 THEN 1 WHEN abs(diff) < 4 THEN 2 "
-               "WHEN abs(diff) < 8 THEN 3 WHEN abs(diff) < 16 THEN 4 "
-               "WHEN abs(diff) < 32 THEN 5 WHEN abs(diff) < 64 THEN 6 "
-               "WHEN abs(diff) < 128 THEN 7 ELSE 8 END)").alias("p2c"),
-    )
-    val = F.when(F.col("diff") >= 0, F.col("diff")).otherwise(
-        F.col("diff") + F.col("p2c") - 1
-    )
-    # bitstream [c:4][val:c][0:1] + 1-padding to the byte boundary
-    base = (F.col("c") * F.col("p2c") + val) * 2
-    pad1 = F.lit(3) - F.col("c")          # c <= 3 -> one byte
-    pad2 = F.lit(11) - F.col("c")         # c >= 4 -> two bytes
-    one_byte = base * F.expr("shiftleft(1, 3 - c)") + F.expr(
-        "shiftleft(1, 3 - c)"
-    ) - 1
-    two_byte = base * F.expr("shiftleft(1, 11 - c)") + F.expr(
-        "shiftleft(1, 11 - c)"
-    ) - 1
-    _ = (pad1, pad2)  # documented in the expressions above
-    entropy_hex = F.when(
-        F.col("c") <= 3, F.lpad(F.hex(one_byte), 2, "0")
-    ).otherwise(F.lpad(F.hex(two_byte), 4, "0"))
-    media = stage2.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(
-            F.concat(F.lit(_JPEG_HEAD_HEX), entropy_hex, F.lit("ffd9"))
-        ).alias("content"),
-    )
-    return mm.image_stats(media, mm.decode_jpeg_array)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.image_stats(ids, lambda e: mm.decode_jpeg_array(_pack_jpeg(e)))
 
 
 # --- FLAC codec query -----------------------------------------------------
@@ -512,19 +475,15 @@ def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mono, 16-bit, 8 total samples), one frame whose single CONSTANT
 # subframe holds the signed 16-bit value v = signed(event_id % 65536).
 # Every header byte (incl. the frame CRC-8) is constant; only the two
-# sample bytes and the frame-footer CRC-16 vary, and the CRC-16 folds
-# in-expression via the standard 256-entry table (two lookup steps over
-# a precomputed constant-prefix state). The decoder must parse
+# sample bytes and the frame-footer CRC-16 vary (_pack_flac). The
+# decoder must parse
 # STREAMINFO bit fields, verify CRC-8, decode the constant subframe,
 # and verify CRC-16 — a wrong ANY of those fails every row.
 
 
-def _flac_fixed_parts() -> tuple[str, str, int, list[int]]:
-    """(head_hex, frame_prefix_hex, crc16_state_after_prefix, table)."""
-    import struct
-
-    from ..operators.multimodal import _crc8, _crc16
-
+def _flac_fixed_parts() -> tuple[bytes, bytes]:
+    """(stream head, frame prefix): everything before the two sample
+    bytes."""
     # STREAMINFO bit-packing (blocksize 8 / rate 16000 / mono / 16-bit
     # / total 8), byte-assembled by hand: 16+16+24+24 bits then the
     # 64-bit packed field, then 16 MD5 zero bytes.
@@ -540,17 +499,20 @@ def _flac_fixed_parts() -> tuple[str, str, int, list[int]]:
     # code 6 + rate code 0 = 0x60, mono + 16-bit + reserved = 0x08,
     # frame number 0, 8-bit blocksize-1 = 7, then CRC-8.
     hdr = b"\xff\xf8\x60\x08\x00\x07"
-    hdr += bytes([_crc8(hdr)])
+    hdr += bytes([mm._crc8(hdr)])
     # CONSTANT subframe header: [0][000000][0]
-    prefix = hdr + b"\x00"
-    table = [_crc16(bytes([i])) for i in range(256)]
-    state = _crc16(prefix)
-    return head.hex(), prefix.hex(), state, table
+    return head, hdr + b"\x00"
 
 
-_FLAC_HEAD_HEX, _FLAC_PREFIX_HEX, _FLAC_CRC_STATE, _FLAC_CRC_TABLE = (
-    _flac_fixed_parts()
-)
+_FLAC_HEAD, _FLAC_PREFIX = _flac_fixed_parts()
+
+
+def _pack_flac(e: int) -> bytes:
+    """Genuine one-frame FLAC of event ``e``: the CONSTANT subframe
+    holds e mod 65536 as a big-endian 16-bit sample, and the frame
+    ends in its CRC-16."""
+    frame = _FLAC_PREFIX + (e % 65536).to_bytes(2, "big")
+    return _FLAC_HEAD + frame + mm._crc16(frame).to_bytes(2, "big")
 
 
 @query(
@@ -576,57 +538,18 @@ FROM v
 def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SIXTH real codec proven end-to-end, closing the
     compressed-audio category: genuine FLAC files packed per event_id
-    by pure JVM expressions (constant-subframe construction — see the
-    module comment; the frame CRC-16 folds in-expression through the
-    standard 0x8005 lookup table), decoded by the REAL pure-stdlib
-    FLAC parser (operators/multimodal.py:decode_flac — STREAMINFO bit
-    fields, frame-sync + CRC-8 header verify, subframe decode, CRC-16
-    footer verify; the general Rice/fixed-predictor paths are
-    fuzz-round-tripped in tests/test_flac.py) inside Arrow-batched
-    mapInPandas, with the same stat vector as multimodal_audio_stats.
-    A hash match proves the whole pack→parse→verify→decode chain is
-    the identity — the oracle is plain arithmetic on event_id."""
-    from ..operators import multimodal as mm
-
+    (:func:`_pack_flac`, constant-subframe construction — see the
+    module comment), decoded by the REAL pure-stdlib FLAC parser
+    (operators/multimodal.py:decode_flac — STREAMINFO bit fields,
+    frame-sync + CRC-8 header verify, subframe decode, CRC-16 footer
+    verify; the general Rice/fixed-predictor paths are fuzz-round-
+    tripped in tests/test_flac.py) in the same Arrow-batched pass over
+    bare ids, with the same stat vector as multimodal_audio_stats. A
+    hash match proves the whole pack→parse→verify→decode chain is the
+    identity — the oracle is plain arithmetic on event_id."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-    u = F.pmod(e, F.lit(65536))
-    stage1 = ev.select(
-        "event_id",
-        F.floor(u / 256).cast("int").alias("b_hi"),
-        F.pmod(u, F.lit(256)).cast("int").alias("b_lo"),
-    )
-    t = F.array(*[F.lit(x) for x in _FLAC_CRC_TABLE])
-    stage2 = stage1.select("event_id", "b_hi", "b_lo", t.alias("crc_t"))
-
-    # CRC-16 fold as SQL expressions (two steps over the varying bytes)
-    crc0 = str(_FLAC_CRC_STATE)
-    crc1 = (
-        f"pmod(({crc0}) * 256, 65536) ^ "
-        f"element_at(crc_t, (int(({crc0}) div 256) ^ b_hi) + 1)"
-    )
-    crc2 = (
-        f"pmod(({crc1}) * 256, 65536) ^ "
-        f"element_at(crc_t, (int(({crc1}) div 256) ^ b_lo) + 1)"
-    )
-    stage3 = stage2.select(
-        "event_id",
-        "b_hi",
-        "b_lo",
-        F.expr(f"CAST(({crc2}) AS BIGINT)").alias("crc16"),
-    )
-    payload_hex = F.concat(
-        F.lit(_FLAC_HEAD_HEX),
-        F.lit(_FLAC_PREFIX_HEX),
-        F.lpad(F.hex(F.col("b_hi")), 2, "0"),
-        F.lpad(F.hex(F.col("b_lo")), 2, "0"),
-        F.lpad(F.hex(F.col("crc16")), 4, "0"),
-    )
-    media = stage3.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.pcm_audio_stats(media, mm.decode_flac)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.pcm_audio_stats(ids, lambda e: mm.decode_flac(_pack_flac(e)))
 
 
 # --- robust outliers (median / MAD) ---------------------------------------

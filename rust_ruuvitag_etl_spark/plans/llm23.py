@@ -340,7 +340,7 @@ _AU_LEVELS = 64  # envelope quantization: level_w = (e_w * 64) div E
 # 44-byte RIFF/WAVE header for PCM16 mono 16 kHz with a 64-byte data
 # chunk (32 samples); same layout as multimodal_audio_stats' 8-sample
 # header with the riff/data sizes adjusted (riff = 4 + 24 + 72 = 100).
-_AU_HEADER_HEX = (
+_AU_HEADER = bytes.fromhex(
     "52494646"  # "RIFF"
     "64000000"  # riff size = 100
     "57415645"  # "WAVE"
@@ -357,44 +357,30 @@ _AU_HEADER_HEX = (
 )
 
 
-def _au_sample_sql(i: int, gain: str, dialect: str) -> str:
+def _au_sample_sql(i: int) -> str:
     """Signed sample i in [-8000, 8000] (x gain), from 15-bit extract
-    i%4 of portable hash h{i//4} — SAME arithmetic, either dialect."""
+    i%4 of portable hash h{i//4} — the oracle twin of
+    :func:`_au_pack_bytes`."""
     j, k = divmod(i, 4)
-    div = "div" if dialect == "spark" else "//"
-    return (
-        f"((((_h{j} {div} {2 ** (15 * k)}) % 32768) % 16001 - 8000)"
-        f" * {gain})"
-    )
+    return f"((((_h{j} // {2 ** (15 * k)}) % 32768) % 16001 - 8000) * gain)"
 
 
-def _au_media(ev: DataFrame, mid, gain: int) -> DataFrame:
-    """Pack each event's 32 hash-derived PCM16 samples into a genuine
-    RIFF/WAVE file. Packing projection generated as SQL text (the
-    PLANS.md expression-build lesson); the 8 md5s materialize as
-    columns first so each computes once."""
-    hs = ev.select(
-        mid.alias("media_id"),
-        *[
-            F.expr(
-                tf.h60_spark_sql(
-                    f"concat('au:{j}:', CAST(event_id AS STRING))"
-                )
-            ).alias(f"_h{j}")
-            for j in range(_AU_NHASH)
-        ],
-    )
-    parts = []
-    for i in range(_AU_SAMPLES):
-        v = f"pmod({_au_sample_sql(i, str(gain), 'spark')}, 65536)"
-        parts.append(
-            f"lpad(hex(pmod({v}, 256)), 2, '0')"
-        )
-        parts.append(
-            f"lpad(hex(({v}) div 256), 2, '0')"
-        )
-    payload = f"unhex(concat('{_AU_HEADER_HEX}', {', '.join(parts)}))"
-    return hs.select("media_id", F.expr(payload).alias("content"))
+def _au_pack_bytes(e: int, gain: int) -> bytes:
+    """Genuine RIFF/WAVE PCM16 clip of event ``e`` at ``gain``: the 8
+    h60 hashes (hashlib.md5 == DuckDB md5, first 15 hex chars as the
+    60-bit value) each yield 4 15-bit extracts, mapped to samples in
+    [-8000, 8000] and scaled by ``gain``."""
+    import hashlib
+
+    hs = [
+        int(hashlib.md5(f"au:{j}:{e}".encode()).hexdigest()[:15], 16)
+        for j in range(_AU_NHASH)
+    ]
+    samples = [
+        ((hs[i // 4] >> (15 * (i % 4))) % 32768 % 16001 - 8000) * gain
+        for i in range(_AU_SAMPLES)
+    ]
+    return _AU_HEADER + struct.pack(f"<{_AU_SAMPLES}h", *samples)
 
 
 def _au_oracle() -> str:
@@ -402,9 +388,7 @@ def _au_oracle() -> str:
         tf.h60_sql(f"'au:{j}:' || CAST(e AS VARCHAR)") + f" AS _h{j}"
         for j in range(_AU_NHASH)
     )
-    samples = ", ".join(
-        _au_sample_sql(i, "gain", "duck") for i in range(_AU_SAMPLES)
-    )
+    samples = ", ".join(_au_sample_sql(i) for i in range(_AU_SAMPLES))
     win = " + ".join(
         f"CAST(s[4*w+{t}] AS BIGINT) * s[4*w+{t}]"
         for t in range(1, _AU_WIN_LEN + 1)
@@ -455,10 +439,10 @@ def dedup_audio_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop — the missing modality in the dedup matrix (text has
     MinHash/SimHash/SSJoin, embeddings RHP-LSH/SemDeDup, images
     quantization bands + aHash; this adds audio): pack 32 hash-derived
-    PCM16 samples per event into genuine RIFF/WAVE files (+ planted
-    x2-gain copies of every 13th clip — the loudness-normalized
-    re-upload), DECODE each with the stdlib RIFF/PCM16 parser inside
-    Arrow mapInPandas, fingerprint the decoded samples with the 8-window
+    PCM16 samples per event into genuine RIFF/WAVE files
+    (:func:`_au_pack_bytes`, + planted x2-gain copies of every 13th
+    clip — the loudness-normalized re-upload), DECODE each with the
+    stdlib RIFF/PCM16 parser in the same Arrow pass, fingerprint the decoded samples with the 8-window
     energy envelope quantized RELATIVE to total energy (level_w =
     e_w * 64 div E — an exact rational, so a uniform gain g scales
     numerator and denominator by g² and cancels: planted copies collide
@@ -476,13 +460,13 @@ def dedup_audio_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(|planted|), never quadratic); the exact verify joins candidate
     ids back at candidate cardinality."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    base = _au_media(ev, F.col("event_id"), 1)
-    copies = _au_media(
-        ev.filter(F.col("event_id") % _AU_COPY_MOD == 0),
-        -(F.col("event_id") + 1),
-        _AU_GAIN,
-    )
-    sm = mm.wav_pcm_samples(base.unionAll(copies))
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    base = mm.wav_pcm_samples(ids, lambda e: mm.decode_wav(_au_pack_bytes(e, 1)))
+    copies = mm.wav_pcm_samples(
+        ids.filter(F.col("media_id") % _AU_COPY_MOD == 0),
+        lambda e: mm.decode_wav(_au_pack_bytes(e, _AU_GAIN)),
+    ).select((-(F.col("media_id") + 1)).alias("media_id"), "samples")
+    sm = base.unionAll(copies)
     win = " + ".join(
         f"CAST(element_at(samples, 4*w+{t}) AS BIGINT)"
         f" * element_at(samples, 4*w+{t})"

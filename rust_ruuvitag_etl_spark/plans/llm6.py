@@ -8,9 +8,12 @@ correctness sample keeps the reference-parity surface.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import multimodal as mm
 from ..operators.dedup import spread
 from ..sources import load
 from .registry import query
@@ -502,20 +505,16 @@ def dedup_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # states the stats directly. The LZW stream uses the degenerate
 # literal-code form every GIF decoder must accept (CLEAR, 12 literal
 # codes, EOI at a fixed 9-bit width): 14 codes x 9 bits = 126 bits =
-# 16 data bytes whose bit layout is FIXED, so each byte is a shift/mask
-# expression of at most two codes — an in-engine LZW packer with pure
-# JVM expressions. The decoder (operators/multimodal.py:_lzw_decode)
-# is a FULL variable-width LZW engine (fuzz round-tripped against a
-# real dictionary-growing encoder in tests); this query proves it
-# in-engine end to end.
+# 16 data bytes (_pack_gif). The decoder
+# (operators/multimodal.py:_lzw_decode) is a FULL variable-width LZW
+# engine (fuzz round-tripped against a real dictionary-growing encoder
+# in tests); this query proves it in-engine end to end.
 _GIF_PRIMES = (163, 167, 173, 179, 181, 191, 193, 197, 199, 211, 223, 227)
 _GIF_W, _GIF_H = 4, 3
 
 
-def _gif_fixed_hex() -> tuple[str, str]:
+def _gif_fixed_parts() -> tuple[bytes, bytes]:
     """(header+LSD+GCT+image descriptor+mcs+subblock size, trailer)."""
-    import struct
-
     pal = bytearray()
     for i in range(256):
         pal += bytes((i, (i * 7) % 256, (i * 13) % 256))
@@ -528,10 +527,19 @@ def _gif_fixed_hex() -> tuple[str, str]:
         + b"\x10"  # one 16-byte data sub-block
     )
     tail = b"\x00\x3b"  # sub-block terminator + trailer
-    return head.hex(), tail.hex()
+    return head, tail
 
 
-_GIF_HEAD_HEX, _GIF_TAIL_HEX = _gif_fixed_hex()
+_GIF_HEAD, _GIF_TAIL = _gif_fixed_parts()
+
+
+def _pack_gif(e: int) -> bytes:
+    """Genuine 4x3 GIF89a of event ``e``: pixel p's palette index is
+    (e * _GIF_PRIMES[p]) mod 256, and the 14 nine-bit codes (CLEAR,
+    the 12 indices, EOI) pack LSB-first into the 16 LZW data bytes."""
+    codes = [256] + [(e * p) % 256 for p in _GIF_PRIMES] + [257]
+    lzw = sum(c << (9 * k) for k, c in enumerate(codes))
+    return _GIF_HEAD + lzw.to_bytes(16, "little") + _GIF_TAIL
 
 
 def _gif_chan_sql(p: int, chan: int) -> str:
@@ -572,60 +580,20 @@ def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FOURTH real codec proven end-to-end (second compressed one):
     genuine single-image GIF89a files — header, logical screen
     descriptor, 256-entry global color table, image descriptor, and an
-    LZW-compressed pixel stream — are packed per event_id by pure JVM
-    expressions and decoded by the full variable-width LZW decoder
-    (operators/multimodal.py:decode_gif_array) inside Arrow-batched
-    mapInPandas. The packer emits the spec's literal-code stream at a
-    fixed 9-bit width, which makes every one of the 16 LZW data bytes
-    a shift/mask expression over at most two 9-bit codes; the decoder
-    is the general engine (growing widths, dictionary, CLEAR, KwKwK —
-    fuzz round-tripped in tests against a real dictionary-growing
-    encoder), so a hash match proves bit packing, code framing,
-    sub-block walking, and palette mapping are the identity.
-    ``topleft_r`` keeps the check order-sensitive. Reference analog:
-    the format-5 BLE byte decoder ``scanner.rs:35-83``."""
-    from ..operators import multimodal as mm
-
+    LZW-compressed pixel stream — are packed per event_id
+    (:func:`_pack_gif`) and decoded by the full variable-width LZW
+    decoder (operators/multimodal.py:decode_gif_array) in the same
+    Arrow-batched pass over bare ids. The packer emits the spec's
+    literal-code stream at a fixed 9-bit width; the decoder is the
+    general engine (growing widths, dictionary, CLEAR, KwKwK — fuzz
+    round-tripped in tests against a real dictionary-growing encoder),
+    so a hash match proves bit packing, code framing, sub-block
+    walking, and palette mapping are the identity. ``topleft_r`` keeps
+    the check order-sensitive. Reference analog: the format-5 BLE byte
+    decoder ``scanner.rs:35-83``."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-
-    # The 14 nine-bit codes: CLEAR, 12 literal pixel indices, EOI.
-    stage_idx = ev.select(
-        "event_id",
-        *[
-            F.pmod(e * _GIF_PRIMES[p], F.lit(256)).alias(f"i_{p}")
-            for p in range(12)
-        ],
-    )
-    codes: list = [F.lit(256)]
-    codes += [F.col(f"i_{p}") for p in range(12)]
-    codes.append(F.lit(257))
-
-    def byte_expr(j: int) -> F.Column:
-        lo, hi = 8 * j, 8 * j + 8
-        out = F.lit(0)
-        for k, c in enumerate(codes):
-            clo, chi = 9 * k, 9 * k + 9
-            if chi <= lo or clo >= hi:
-                continue
-            shift = lo - clo
-            piece = (
-                F.shiftright(c, shift) if shift >= 0 else F.shiftleft(c, -shift)
-            )
-            out = out.bitwiseOR(piece.bitwiseAND(F.lit(255)))
-        return out
-
-    data_hex = F.concat(
-        *[F.lpad(F.hex(byte_expr(j)), 2, "0") for j in range(16)]
-    )
-    payload_hex = F.concat(
-        F.lit(_GIF_HEAD_HEX), data_hex, F.lit(_GIF_TAIL_HEX)
-    )
-    media = stage_idx.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.image_stats(media, mm.decode_gif_array)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.image_stats(ids, lambda e: mm.decode_gif_array(_pack_gif(e)))
 
 
 # --- quality classifier inference ------------------------------------------

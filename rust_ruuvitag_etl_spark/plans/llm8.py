@@ -1,5 +1,5 @@
 """Round-5/6 additions: real AVI video-container decode (round 5);
-round 6 — the Ogg container parse with in-expression page CRC-32s, the
+round 6 — the Ogg container parse with real page CRC-32s, the
 MPEG audio (mp3) frame walk with real side-info CRC-16s, the baseline
 TIFF IFD walker, content-defined chunking dedup, deterministic
 Achlioptas random projection with a Johnson-Lindenstrauss distortion
@@ -11,6 +11,8 @@ correctness sample keeps the reference-parity surface.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from ..operators import multimodal as mm
 from ..operators.dedup import spread
 from ..sources import load
 from .analytics import _PNG_PRIMES as _AVI_PRIMES
+from .analytics import _dib_3x2
 from .registry import query
 
 # --- real video container: AVI --------------------------------------------
@@ -34,7 +37,7 @@ _AVI_W, _AVI_H, _AVI_FRAMES = 3, 2, 2
 # strl list = 4 + (8+56) + (8+40) = 116; hdrl list = 4 + 64 + 124 = 192;
 # movi list = 4 + 2*(8+24) = 68; idx1 chunk = 8 + 32; RIFF content =
 # 4 + 200 + 76 + 40 = 320.
-_AVI_HDR_HEX = (
+_AVI_HDR = bytes.fromhex(
     "52494646" "40010000" "41564920"          # RIFF 320 'AVI '
     "4c495354" "c0000000" "6864726c"          # LIST 192 'hdrl'
     "61766968" "38000000"                     # 'avih' 56
@@ -59,12 +62,23 @@ _AVI_HDR_HEX = (
     "00000000" "00000000" "00000000" "00000000"  # ppm/clr fields
     "4c495354" "44000000" "6d6f7669"          # LIST 68 'movi'
 )
-_AVI_FRAME_CHDR_HEX = "30306462" "18000000"   # '00db' 24
-_AVI_IDX_HEX = (
+_AVI_FRAME_CHDR = bytes.fromhex("30306462" "18000000")   # '00db' 24
+_AVI_IDX = bytes.fromhex(
     "69647831" "20000000"                     # 'idx1' 32
     "30306462" "10000000" "04000000" "18000000"   # frame 0 at movi+4
     "30306462" "10000000" "24000000" "18000000"   # frame 1 at movi+36
 )
+
+
+def _pack_avi(e: int) -> bytes:
+    """Genuine 328-byte AVI of event ``e``: frame f is a 3x2 DIB whose
+    channel i is (e * _AVI_PRIMES[18f + i]) mod 256."""
+    frames = [
+        _AVI_FRAME_CHDR
+        + _dib_3x2([(e * m) % 256 for m in _AVI_PRIMES[18 * f : 18 * f + 18]])
+        for f in range(_AVI_FRAMES)
+    ]
+    return _AVI_HDR + b"".join(frames) + _AVI_IDX
 
 
 def _avi_chan_sql(f: int, p: int, c: int) -> str:
@@ -102,85 +116,45 @@ def multimodal_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-container decode end-to-end — the seventh real codec,
     extending the pack→parse→reduce identity proof from images and
     audio to VIDEO: deterministic per-frame RGB derives from event_id,
-    pure JVM expressions assemble a genuine 328-byte RIFF/AVI file
-    (avih main header, vids/DIB stream headers, two bottom-up BGR DIB
-    frames in the movi list, and an idx1 index whose offsets the
-    decoder verifies), and the stdlib container parser
-    (operators/multimodal.py:decode_avi) walks the chunk tree inside
-    Arrow-batched mapInPandas. Both frames are emitted, so a hash match
-    proves frame ORDER through the container (frame 0's and frame 1's
-    disjoint multiplier sets cannot swap silently) on top of the
-    un-flip/BGR proof ``topleft_r`` carries. Upgrades the frame-sample
-    query's byte-slicing stand-in to a real video format; the remaining
-    video gap is inter-frame codecs (genuinely need media libraries).
-    Reference analog: the format-5 BLE decoder ``scanner.rs:35-83``."""
+    :func:`_pack_avi` assembles a genuine 328-byte RIFF/AVI file (avih
+    main header, vids/DIB stream headers, two bottom-up BGR DIB frames
+    in the movi list, and an idx1 index whose offsets the decoder
+    verifies), and the stdlib container parser
+    (operators/multimodal.py:decode_avi) walks the chunk tree in the
+    same Arrow-batched pass over bare ids. Both frames are emitted, so
+    a hash match proves frame ORDER through the container (frame 0's
+    and frame 1's disjoint multiplier sets cannot swap silently) on top
+    of the un-flip/BGR proof ``topleft_r`` carries. Upgrades the
+    frame-sample query's byte-slicing stand-in to a real video format;
+    the remaining video gap is inter-frame codecs (genuinely need media
+    libraries). Reference analog: the format-5 BLE decoder
+    ``scanner.rs:35-83``."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-
-    def u8_hex(mult: int):
-        return F.lpad(F.hex(F.pmod(e * mult, F.lit(256))), 2, "0")
-
-    def pixel_bgr_hex(f: int, p: int):
-        r, g, b = (
-            _AVI_PRIMES[18 * f + 3 * p],
-            _AVI_PRIMES[18 * f + 3 * p + 1],
-            _AVI_PRIMES[18 * f + 3 * p + 2],
-        )
-        return F.concat(u8_hex(b), u8_hex(g), u8_hex(r))
-
-    pad = F.lit("000000")  # 3 stride-pad bytes per 9-byte pixel row
-
-    def frame_hex(f: int):
-        # file row 0 = image bottom row (y=1): pixels 3,4,5; then y=0
-        return F.concat(
-            pixel_bgr_hex(f, 3), pixel_bgr_hex(f, 4), pixel_bgr_hex(f, 5),
-            pad,
-            pixel_bgr_hex(f, 0), pixel_bgr_hex(f, 1), pixel_bgr_hex(f, 2),
-            pad,
-        )
-
-    payload_hex = F.concat(
-        F.lit(_AVI_HDR_HEX),
-        F.lit(_AVI_FRAME_CHDR_HEX), frame_hex(0),
-        F.lit(_AVI_FRAME_CHDR_HEX), frame_hex(1),
-        F.lit(_AVI_IDX_HEX),
-    )
-    media = ev.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.avi_video_stats(media)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.avi_video_stats(ids, lambda e: mm.decode_avi(_pack_avi(e)))
 
 
 # --- real audio container: Ogg (round 6) -----------------------------------
 # Two RFC 3533 pages per event_id: a fully constant BOS page carrying a
 # 16-byte identification packet, then an EOS page whose 12-byte data
-# packet ends in 4 event_id-derived bytes. Every page CRC-32 (the
-# direct 0x04C11DB7 variant — NOT Spark's reflected crc32()) is real:
-# page 0's is precomputed, page 1's folds in-expression through the
-# 256-entry table over a precomputed constant-prefix state, exactly the
-# FLAC CRC-16 technique (plans/analytics2.py) widened to 32 bits.
+# packet ends in 4 event_id-derived bytes. Both page CRC-32s are the
+# direct 0x04C11DB7 variant (NOT zlib's reflected crc32); page 0's is
+# constant, page 1's is computed per event (_pack_ogg).
 
 _OGG_SERIAL = 0x5350524B  # 'KRPS' little-endian on the wire
 _OGG_TAIL_PRIMES = _AVI_PRIMES[:4]  # co-prime multipliers for the tail
 
 
-def _ogg_fixed_parts() -> tuple[str, str, str, int, list[int], int]:
-    """(page0_hex, page1_header_hex, page1_body_prefix_hex,
-    crc_state_after_prefix, crc_table, granule) — everything constant
-    about the two-page stream; the CRC of page 1 resumes from the
-    returned state over the 4 variable tail bytes."""
-    import struct
-
-    from ..operators.multimodal import _OGG_CRC_TABLE, _ogg_crc
-
+def _ogg_fixed_parts() -> tuple[bytes, bytes, bytes, int]:
+    """(page0, page1 header up to its CRC field, page1 body prefix,
+    granule) — everything constant about the two-page stream."""
     ident = b"SparkOggStream01"  # 16-byte BOS packet (not Vorbis)
     h0 = (
         b"OggS" + bytes([0, 0x02]) + struct.pack("<q", 0)
         + struct.pack("<II", _OGG_SERIAL, 0)
     )
     body0 = bytes([1, len(ident)]) + ident
-    page0 = h0 + struct.pack("<I", _ogg_crc(h0 + b"\0" * 4 + body0)) + body0
+    page0 = h0 + struct.pack("<I", mm._ogg_crc(h0 + b"\0" * 4 + body0)) + body0
 
     granule = 4
     const8 = b"DATABLK\x00"  # constant first 8 bytes of the data packet
@@ -188,18 +162,19 @@ def _ogg_fixed_parts() -> tuple[str, str, str, int, list[int], int]:
         b"OggS" + bytes([0, 0x04]) + struct.pack("<q", granule)
         + struct.pack("<II", _OGG_SERIAL, 1)
     )
-    body1_prefix = bytes([1, 12]) + const8
-    state = _ogg_crc(h1 + b"\0" * 4 + body1_prefix)
-    return (
-        page0.hex(), h1.hex(), body1_prefix.hex(), state,
-        list(_OGG_CRC_TABLE), granule,
-    )
+    return page0, h1, bytes([1, 12]) + const8, granule
 
 
-(
-    _OGG_PAGE0_HEX, _OGG_H1_HEX, _OGG_BODY1_HEX,
-    _OGG_CRC_STATE, _OGG_TABLE, _OGG_GRANULE,
-) = _ogg_fixed_parts()
+_OGG_PAGE0, _OGG_H1, _OGG_BODY1, _OGG_GRANULE = _ogg_fixed_parts()
+
+
+def _pack_ogg(e: int) -> bytes:
+    """Genuine two-page Ogg stream of event ``e``: the data packet's
+    last 4 bytes are (e * _OGG_TAIL_PRIMES[i]) mod 256, and page 1's
+    CRC-32 covers the page with its checksum field zeroed."""
+    body = _OGG_BODY1 + bytes((e * p) % 256 for p in _OGG_TAIL_PRIMES)
+    crc = mm._ogg_crc(_OGG_H1 + b"\0" * 4 + body)
+    return _OGG_PAGE0 + _OGG_H1 + struct.pack("<I", crc) + body
 
 
 def _ogg_tail_sql(i: int) -> str:
@@ -224,67 +199,23 @@ FROM events
 def multimodal_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Ogg container parse end-to-end — the container-level close
     of the last stubbed audio family (mirroring what AVI did for
-    video): pure JVM expressions assemble a genuine two-page RFC 3533
-    Ogg stream per event_id — BOS page with an identification packet,
-    EOS data page whose packet tail carries 4 event_id-derived bytes —
-    including BOTH page CRC-32s in the direct 0x04C11DB7 variant
-    (page 1's folds in-expression through the 256-entry table over a
-    precomputed constant-prefix state, 4 lookup steps). The stdlib
-    parser (operators/multimodal.py:decode_ogg_pages) re-verifies every
-    CRC, the BOS/EOS discipline, sequence continuity, and reassembles
-    packets through the lacing table inside Arrow-batched mapInPandas;
-    ``tail_word`` folds the final packet's last 4 bytes, so a hash
-    match proves byte-exact reassembly. Honest boundary: Vorbis/Opus
-    SAMPLE decode inside the packets stays a documented
-    ``NotImplementedError`` (psychoacoustic codecs genuinely need media
-    libraries); the container walk — the part a data pipeline needs for
-    chunking/validation/indexing — is real and verified.
+    video): :func:`_pack_ogg` assembles a genuine two-page RFC 3533 Ogg
+    stream per event_id — BOS page with an identification packet, EOS
+    data page whose packet tail carries 4 event_id-derived bytes —
+    including BOTH page CRC-32s in the direct 0x04C11DB7 variant. The
+    stdlib parser (operators/multimodal.py:decode_ogg_pages) re-verifies
+    every CRC, the BOS/EOS discipline, sequence continuity, and
+    reassembles packets through the lacing table in the same
+    Arrow-batched pass over bare ids; ``tail_word`` folds the final
+    packet's last 4 bytes, so a hash match proves byte-exact
+    reassembly. Honest boundary: Vorbis/Opus SAMPLE decode inside the
+    packets is not implemented (psychoacoustic codecs genuinely need
+    media libraries); the container walk — the part a data pipeline
+    needs for chunking/validation/indexing — is real and verified.
     Reference analog: the format-5 BLE decoder ``scanner.rs:35-83``."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-    stage1 = ev.select(
-        "event_id",
-        *[
-            F.pmod(e * p, F.lit(256)).cast("int").alias(f"v{i}")
-            for i, p in enumerate(_OGG_TAIL_PRIMES)
-        ],
-    )
-    t = F.array(*[F.lit(x) for x in _OGG_TABLE]).cast("array<bigint>")
-    stage2 = stage1.withColumn("crc_t", t)
-
-    crc = str(_OGG_CRC_STATE)
-    for i in range(4):
-        crc = (
-            f"pmod(({crc}) * 256, 4294967296) ^ "
-            f"element_at(crc_t, (int(({crc}) div 16777216) ^ v{i}) + 1)"
-        )
-    stage3 = stage2.select(
-        "event_id",
-        "v0", "v1", "v2", "v3",
-        F.expr(f"CAST(({crc}) AS BIGINT)").alias("crc32"),
-    )
-
-    def u8_hex(col):
-        return F.lpad(F.hex(col), 2, "0")
-
-    crc_le_hex = F.concat(
-        *[
-            u8_hex(F.pmod(F.expr(f"crc32 div {256 ** k}"), F.lit(256)))
-            for k in range(4)
-        ]
-    )
-    payload_hex = F.concat(
-        F.lit(_OGG_PAGE0_HEX),
-        F.lit(_OGG_H1_HEX),
-        crc_le_hex,
-        F.lit(_OGG_BODY1_HEX),
-        *[u8_hex(F.col(f"v{i}")) for i in range(4)],
-    )
-    media = stage3.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.ogg_page_stats(media)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.ogg_page_stats(ids, lambda e: mm.decode_ogg_pages(_pack_ogg(e)))
 
 
 # --- real audio container: mp3 (round 6) -----------------------------------
@@ -300,27 +231,27 @@ def multimodal_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MP3_TAIL_PRIMES = _AVI_PRIMES[4:8]
 
 
-def _mp3_fixed_parts() -> str:
-    """Hex of everything before the 4 variable tail bytes: ID3v2 tag,
-    frame 1 (fully constant), frame 2 minus its tail."""
-    from ..operators.multimodal import _mp3_crc16
-
+def _mp3_fixed_parts() -> bytes:
+    """Everything before the 4 variable tail bytes: ID3v2 tag, frame 1
+    (fully constant), frame 2 minus its tail."""
     # 0xFF 0xFA: sync + MPEG1 + Layer III + protection bit 0 (CRC on);
     # 0x94: bitrate idx 9 (128k) + rate idx 1 (48 kHz); 0xC0: mono.
     hdr = bytes([0xFF, 0xFA, 0x94, 0xC0])
     side = bytes(17)  # MPEG1 mono side info
-    crc = _mp3_crc16(hdr[2:4] + side)
+    crc = mm._mp3_crc16(hdr[2:4] + side)
     frame_prefix = hdr + crc.to_bytes(2, "big") + side
     id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 16]) + b"SparkMp3Stream01"
     # 384-byte frames: 4 hdr + 2 crc + 17 side + 361 main
-    return (
-        id3
-        + frame_prefix + bytes(361)
-        + frame_prefix + bytes(357)
-    ).hex()
+    return id3 + frame_prefix + bytes(361) + frame_prefix + bytes(357)
 
 
-_MP3_CONST_HEX = _mp3_fixed_parts()
+_MP3_CONST = _mp3_fixed_parts()
+
+
+def _pack_mp3(e: int) -> bytes:
+    """Genuine ID3v2 + two-frame mp3 stream of event ``e``: the last 4
+    main-data bytes are (e * _MP3_TAIL_PRIMES[i]) mod 256."""
+    return _MP3_CONST + bytes((e * p) % 256 for p in _MP3_TAIL_PRIMES)
 
 
 def _mp3_tail_sql(i: int) -> str:
@@ -345,35 +276,23 @@ FROM events
 def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL MPEG audio frame walk end-to-end — the mp3 twin of
     multimodal_ogg_pages, closing the LAST stubbed codec family at
-    container level: pure JVM expressions assemble a genuine ID3v2.4 +
+    container level: :func:`_pack_mp3` assembles a genuine ID3v2.4 +
     two-frame MPEG-1 Layer III stream per event_id, including each
     frame's REAL protection CRC-16 over header+side-info (constant
     protected region → precomputed; main data is not CRC-covered by
-    the format, so the 4 event_id-derived tail bytes need no fold).
+    the format, so the 4 event_id-derived tail bytes need no CRC).
     The stdlib walker (operators/multimodal.py:decode_mp3_frames)
     skips the ID3 tag via its synchsafe size, re-derives each frame
     length from the bitrate/sample-rate tables (the walk must land
     every boundary exactly on the next sync), verifies both CRCs, and
-    re-slices the main data; ``tail_word`` folds the final frame's
-    last 4 bytes, so a hash match proves byte-exact segmentation.
-    Honest boundary: Layer III Huffman/psychoacoustic SAMPLE decode
-    stays a documented ``NotImplementedError``.
+    re-slices the main data in the same Arrow-batched pass over bare
+    ids; ``tail_word`` folds the final frame's last 4 bytes, so a hash
+    match proves byte-exact segmentation. Honest boundary: Layer III
+    Huffman/psychoacoustic SAMPLE decode is not implemented.
     Reference analog: the format-5 BLE decoder ``scanner.rs:35-83``."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-
-    def u8_hex(mult: int):
-        return F.lpad(F.hex(F.pmod(e * mult, F.lit(256))), 2, "0")
-
-    payload_hex = F.concat(
-        F.lit(_MP3_CONST_HEX),
-        *[u8_hex(p) for p in _MP3_TAIL_PRIMES],
-    )
-    media = ev.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.mp3_frame_stats(media)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.mp3_frame_stats(ids, lambda e: mm.decode_mp3_frames(_pack_mp3(e)))
 
 
 # --- real image container: TIFF (round 6) -----------------------------------
@@ -388,12 +307,10 @@ def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TIFF_W, _TIFF_H = 3, 2
 
 
-def _tiff_fixed_parts() -> tuple[str, str]:
-    """(header_hex, tail_hex): everything around the 18 pixel bytes at
+def _tiff_fixed_parts() -> tuple[bytes, bytes]:
+    """(header, tail): everything around the 18 pixel bytes at
     offsets 8..25 — magic, then BitsPerSample (26), the strip offset /
     byte-count arrays (32 / 40), and the 9-entry IFD (48)."""
-    import struct
-
     head = b"II" + struct.pack("<HI", 42, 48)
 
     def short_entry(tag: int, val: int) -> bytes:
@@ -415,10 +332,17 @@ def _tiff_fixed_parts() -> tuple[str, str]:
         + struct.pack("<HHII", 279, 4, 2, 40)
         + struct.pack("<I", 0)            # no next IFD
     )
-    return head.hex(), tail.hex()
+    return head, tail
 
 
-_TIFF_HEAD_HEX, _TIFF_TAIL_HEX = _tiff_fixed_parts()
+_TIFF_HEAD, _TIFF_TAIL = _tiff_fixed_parts()
+
+
+def _pack_tiff(e: int) -> bytes:
+    """Genuine 152-byte baseline TIFF of event ``e``: channel i is
+    (e * _AVI_PRIMES[35 - i]) mod 256."""
+    px = bytes((e * _AVI_PRIMES[35 - i]) % 256 for i in range(18))
+    return _TIFF_HEAD + px + _TIFF_TAIL
 
 
 def _tiff_chan_sql(i: int) -> str:
@@ -453,34 +377,21 @@ FROM events
 )
 def multimodal_tiff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-TIFF decode end-to-end — the EIGHTH real codec,
-    and the first with a general tagged metadata directory: pure JVM
-    expressions assemble a genuine little-endian TIFF per event_id
-    (magic, a 9-entry IFD, BitsPerSample and TWO-strip offset /
-    byte-count arrays stored OUTSIDE the IFD so the ≤4-byte inlining
+    and the first with a general tagged metadata directory:
+    :func:`_pack_tiff` assembles a genuine little-endian TIFF per
+    event_id (magic, a 9-entry IFD, BitsPerSample and TWO-strip offset
+    / byte-count arrays stored OUTSIDE the IFD so the ≤4-byte inlining
     rule takes the indirect branch), and the stdlib IFD walker
     (operators/multimodal.py:decode_tiff_array) re-reads the directory,
     validates every strip's arithmetic, and reassembles the two
-    one-row strips inside Arrow-batched mapInPandas — ``topleft_r``
-    and the channel sums only match if the strip order and the RGB
-    sample order both survived. Stats ride the same batch-wide
-    reduceat sweeps as the other image codecs.
+    one-row strips in the same Arrow-batched pass over bare ids —
+    ``topleft_r`` and the channel sums only match if the strip order
+    and the RGB sample order both survived. Stats ride the same
+    batch-wide reduceat sweeps as the other image codecs.
     Reference analog: the format-5 BLE decoder ``scanner.rs:35-83``."""
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-    e = F.col("event_id")
-
-    def u8_hex(mult: int):
-        return F.lpad(F.hex(F.pmod(e * mult, F.lit(256))), 2, "0")
-
-    payload_hex = F.concat(
-        F.lit(_TIFF_HEAD_HEX),
-        *[u8_hex(_AVI_PRIMES[35 - i]) for i in range(18)],
-        F.lit(_TIFF_TAIL_HEX),
-    )
-    media = ev.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.image_stats(media, mm.decode_tiff_array)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.image_stats(ids, lambda e: mm.decode_tiff_array(_pack_tiff(e)))
 
 
 # --- content-defined chunking dedup (round 6) -------------------------------

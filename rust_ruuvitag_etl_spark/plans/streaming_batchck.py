@@ -806,14 +806,11 @@ FROM ranked WHERE rk <= 3
 """,
 )
 def streaming_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key running TOP-K on the NEW Spark 4 stateful API
-    (``transformWithStateInPandas``): typed state variables — a
-    ListState holding the current top-3 (O(k) per key, non-qualifying
-    rows dropped before the state write) and a ValueState fold counter
-    — created in ``init()``, the successor surface to
-    applyInPandasWithState's monolithic state tuple. The leaderboard
-    shape: re-emittable after every micro-batch while the candidate
-    set is unbounded, which no built-in windowed aggregate expresses.
+    """Per-key running TOP-K on ``applyInPandasWithState``: the state
+    holds the current top-3 (O(k) per key, non-qualifying rows dropped
+    before the state write) and a fold counter. The leaderboard shape:
+    re-emittable after every micro-batch while the candidate set is
+    unbounded, which no built-in windowed aggregate expresses.
     Drained with availableNow and diffed against the batch ROW_NUMBER
     top-3 oracle; ties resolve (value desc, event_id asc) identically
     on both sides. Cross-batch state continuity is pinned by a

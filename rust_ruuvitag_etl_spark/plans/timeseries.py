@@ -6,6 +6,8 @@ feature extraction — oracle-verified where DuckDB can express the twin
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -346,7 +348,7 @@ _WAV_PRIMES = (7, 11, 13, 17, 19, 23, 29, 31)
 
 # Constant 44-byte RIFF/WAVE header for: PCM (fmt tag 1), mono, 16 kHz,
 # 16-bit, data chunk of 16 bytes (8 samples). All little-endian.
-_WAV_HEADER_HEX = (
+_WAV_HEADER = bytes.fromhex(
     "52494646"  # "RIFF"
     "34000000"  # riff size = 52 = 4 + (8+16) + (8+16)
     "57415645"  # "WAVE"
@@ -361,6 +363,14 @@ _WAV_HEADER_HEX = (
     "64617461"  # "data"
     "10000000"  # data chunk size = 16
 )
+
+
+def _pack_wav(e: int) -> bytes:
+    """Genuine 60-byte RIFF/WAVE PCM16 file of event ``e``: sample i is
+    (e * _WAV_PRIMES[i]) mod 65536, little-endian."""
+    return _WAV_HEADER + struct.pack(
+        "<8H", *[(e * p) % 65536 for p in _WAV_PRIMES]
+    )
 
 
 def _wav_signed_sql(p: int) -> str:
@@ -390,37 +400,21 @@ FROM events
 def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL codec proven end-to-end (the audio analog of
     ruuvi_binary_roundtrip): deterministic PCM16 samples derived from
-    event_id are PACKED into genuine 44-byte-header RIFF/WAVE files —
-    pure expressions assembling little-endian chunk bytes — then decoded
-    by the stdlib ``struct`` RIFF parser (operators/multimodal.py:
-    decode_wav: chunk-tree walk → fmt validation → LE sign-correct
-    sample decode) inside Arrow-batched mapInPandas, and reduced to
-    integer-exact stats. The oracle computes the same stats
-    ARITHMETICALLY from event_id, so a hash match proves header layout,
-    chunk walking, byte order, sign handling, and sample extraction are
-    the identity — no fake decode anywhere on this path. Reference
-    analog: the format-5 BLE decoder ``scanner.rs:35-83``; here the
-    payload is a real media container format."""
+    event_id are packed into genuine 44-byte-header RIFF/WAVE files
+    (:func:`_pack_wav`) and decoded by the stdlib ``struct`` RIFF
+    parser (operators/multimodal.py:decode_wav: chunk-tree walk → fmt
+    validation → LE sign-correct sample decode) in the same
+    Arrow-batched pass over bare ids, then reduced to integer-exact
+    stats. The oracle computes the same stats ARITHMETICALLY from
+    event_id, so a hash match proves header layout, chunk walking,
+    byte order, sign handling, and sample extraction are the identity —
+    no fake decode anywhere on this path. Reference analog: the
+    format-5 BLE decoder ``scanner.rs:35-83``; here the payload is a
+    real media container format."""
     # spread(): a single local split would pin pack+decode to one core.
     ev = spread(load(spark, sf_dir, "events").select("event_id"))
-
-    def u16le_hex(raw):
-        v = F.pmod(raw, F.lit(65536))
-        return F.concat(
-            F.lpad(F.hex(F.pmod(v, F.lit(256))), 2, "0"),
-            F.lpad(F.hex(F.floor(v / F.lit(256))), 2, "0"),
-        )
-
-    e = F.col("event_id")
-    payload_hex = F.concat(
-        F.lit(_WAV_HEADER_HEX),
-        *[u16le_hex(e * p) for p in _WAV_PRIMES],
-    )
-    media = ev.select(
-        F.col("event_id").alias("media_id"),
-        F.unhex(payload_hex).alias("content"),
-    )
-    return mm.pcm_audio_stats(media, mm.decode_wav)
+    ids = ev.select(F.col("event_id").alias("media_id"))
+    return mm.pcm_audio_stats(ids, lambda e: mm.decode_wav(_pack_wav(e)))
 
 
 @query(

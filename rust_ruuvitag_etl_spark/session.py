@@ -34,33 +34,39 @@ DEFAULT_CPUS = os.environ.get(
 DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 
 
+# Runtime SQL configs: applied at build time by ``configure`` and to a
+# driver-owned session by ``ensure_session_configs``.
+RUNTIME_CONFIGS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # At 100 TB the default 128 MB split is fine; keep explicit so it
+    # is a single knob, not an accident.
+    ("spark.sql.files.maxPartitionBytes", "134217728"),
+    ("spark.sql.parquet.filterPushdown", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+    # InferFiltersFromGenerate re-evaluates the generator expression
+    # inside an inferred pre-filter; for expensive generators (the
+    # trigram/shingle transforms this engine explodes everywhere)
+    # that triples the CPU cost and the filter pushes below
+    # repartitions into the narrow scan stage. Excluding it keeps
+    # semantics (Generate itself drops empty/null arrays).
+    (
+        "spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    ),
+)
+
+
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configs to any builder (the driver may own the session)."""
-    return (
-        builder
-        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # At 100 TB the default 128 MB split is fine; keep explicit so it
-        # is a single knob, not an accident.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # InferFiltersFromGenerate re-evaluates the generator expression
-        # inside an inferred pre-filter; for expensive generators (the
-        # trigram/shingle transforms this engine explodes everywhere)
-        # that triples the CPU cost and the filter pushes below
-        # repartitions into the narrow scan stage. Excluding it keeps
-        # semantics (Generate itself drops empty/null arrays).
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-    )
+    builder = builder.config("spark.driver.memory", DEFAULT_DRIVER_MEM)
+    for key, val in RUNTIME_CONFIGS:
+        builder = builder.config(key, val)
+    return builder
 
 
 def size_shuffle_partitions(spark: SparkSession) -> SparkSession:
@@ -91,26 +97,14 @@ def get_spark(app_name: str = "rust-ruuvitag-etl-spark", master: str | None = No
 
 
 def ensure_session_configs(spark: SparkSession) -> SparkSession:
-    """Best-effort: apply runtime-settable configs to an existing session
-    (driver-owned sessions may not have gone through ``configure``)."""
+    """Best-effort: apply ``RUNTIME_CONFIGS`` and the shuffle-partition
+    rule to an existing session (driver-owned sessions may not have
+    gone through ``configure``)."""
     try:
         size_shuffle_partitions(spark)
     except Exception:
         pass
-    for key, val in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # TIMESTAMP(NANOS) events files (driver rounds 1-2) read as
-        # long instead of erroring; no-op for µs files (round 3+).
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # see configure(): avoid tripled evaluation of expensive
-        # exploded generator expressions.
-        (
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        ),
-    ]:
+    for key, val in RUNTIME_CONFIGS:
         try:
             spark.conf.set(key, val)
         except Exception:

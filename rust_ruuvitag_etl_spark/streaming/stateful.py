@@ -253,14 +253,11 @@ def ewma_stream(events: DataFrame) -> DataFrame:
     )
 
 
-# --- transformWithState top-k (the Spark 4 stateful API) --------------------
-# The successor API to applyInPandasWithState: typed state variables
-# (value/list/map) created in init() instead of one monolithic state
-# tuple, per-key timers, and TTL support. This operator is the repo's
-# demonstration of it: a per-key RUNNING TOP-K (here k=3 by value desc,
-# event_id asc) carried across micro-batches — the "leaderboard" shape
-# that a windowed aggregate can't express because the answer must be
-# re-emittable after every batch while the candidate set is unbounded.
+# --- running top-k -----------------------------------------------------------
+# A per-key RUNNING TOP-K (here k=3 by value desc, event_id asc) carried
+# across micro-batches — the "leaderboard" shape that a windowed
+# aggregate can't express because the answer must be re-emittable after
+# every batch while the candidate set is unbounded.
 #
 # Scale posture: state is O(k) rows per key (the fold keeps only the
 # current top-k — a batch's non-qualifying rows are dropped before the
@@ -279,51 +276,6 @@ TOPK_SCHEMA = StructType(
 )
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs the protobuf wire protocol
-    between the JVM state server and the Python worker; this sandbox
-    ships pyspark 4.1 WITHOUT the protobuf package, so the new API
-    import-gates (the brief's stub-or-gate rule) and the operator
-    falls back to the applyInPandasWithState twin below — identical
-    fold, identical output, pinned by the same oracle."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def _topk_fold(
-    cand: list[tuple[int, float]], pdfs: Iterator[pd.DataFrame], n: int
-) -> tuple[list[tuple[int, float]], int]:
-    """Shared fold: merge batch rows into the running top-k candidate
-    list. Sort by (value desc, event_id asc) — the batch ROW_NUMBER
-    oracle's exact tie-break."""
-    for pdf in pdfs:
-        n += len(pdf)
-        cand.extend(
-            zip(
-                (int(x) for x in pdf["event_id"]),
-                (float(x) for x in pdf["value"]),
-            )
-        )
-    cand.sort(key=lambda t: (-t[1], t[0]))
-    return cand[:TOPK_K], n
-
-
-def _topk_emit(key: Any, top: list[tuple[int, float]], n: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "event_type": [key[0]] * len(top),
-            "rank": range(1, len(top) + 1),
-            "event_id": [eid for eid, _ in top],
-            "value": [v for _, v in top],
-            "n_seen": [n] * len(top),
-        }
-    )
-
-
 TOPK_STATE_SCHEMA = StructType(
     [
         StructField("ids", ArrayType(LongType())),
@@ -336,27 +288,39 @@ TOPK_STATE_SCHEMA = StructType(
 def _topk_apwis(
     key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState twin of the transformWithState processor:
-    same fold, same emission — the compatibility path for clusters
-    without the protobuf sidecar."""
+    """One key's micro-batch: merge the rows into the stored top-k
+    candidates, sorted by (value desc, event_id asc) — the batch
+    ROW_NUMBER oracle's exact tie-break — and re-emit the top-k with
+    the running count."""
     if state.exists:
         ids, vals, n = state.get
         cand = list(zip((int(i) for i in ids), (float(v) for v in vals)))
     else:
         cand, n = [], 0
-    top, n = _topk_fold(cand, pdfs, n)
+    for pdf in pdfs:
+        n += len(pdf)
+        cand.extend(
+            zip(
+                (int(x) for x in pdf["event_id"]),
+                (float(x) for x in pdf["value"]),
+            )
+        )
+    cand.sort(key=lambda t: (-t[1], t[0]))
+    top = cand[:TOPK_K]
     state.update(([e for e, _ in top], [v for _, v in top], n))
-    yield _topk_emit(key, top, n)
+    yield pd.DataFrame(
+        {
+            "event_type": [key[0]] * len(top),
+            "rank": range(1, len(top) + 1),
+            "event_id": [eid for eid, _ in top],
+            "value": [v for _, v in top],
+            "n_seen": [n] * len(top),
+        }
+    )
 
 
 def topk_stream(events: DataFrame) -> DataFrame:
-    """Streaming per-key top-k, preferring the NEW Spark 4 stateful API
-    (``transformWithStateInPandas``: typed ListState/ValueState
-    variables created in init(), timers, TTL — the successor surface to
-    applyInPandasWithState's monolithic state tuple) and import-gating
-    to the applyInPandasWithState twin where the protobuf wire protocol
-    isn't installed (this sandbox). Both paths run the SAME fold and
-    emission helpers, so their output is identical by construction.
+    """Streaming per-key top-k over ``applyInPandasWithState``.
 
     ``events`` needs (event_type, event_id, value), value non-null.
     Update mode: after each micro-batch every touched key re-emits its
@@ -365,44 +329,12 @@ def topk_stream(events: DataFrame) -> DataFrame:
     same end-of-stream convention as sensor_monitor_stream).
     Determinism: candidates sort by (value desc, event_id asc), so ties
     resolve identically to the batch ROW_NUMBER oracle."""
-    if not _tws_available():
-        return events.groupBy("event_type").applyInPandasWithState(
-            _topk_apwis,
-            outputStructType=TOPK_SCHEMA,
-            stateStructType=TOPK_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._top = handle.getListState(
-                "topk", "event_id long, value double"
-            )
-            self._seen = handle.getValueState("seen", "n long")
-
-        def handleInputRows(
-            self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            cand: list[tuple[int, float]] = [
-                (int(r[0]), float(r[1])) for r in self._top.get()
-            ]
-            n = self._seen.get()[0] if self._seen.exists() else 0
-            top, n = _topk_fold(cand, rows, n)
-            self._top.put([(eid, v) for eid, v in top])
-            self._seen.update((n,))
-            yield _topk_emit(key, top, n)
-
-    return events.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=TopKProcessor(),
+    return events.groupBy("event_type").applyInPandasWithState(
+        _topk_apwis,
         outputStructType=TOPK_SCHEMA,
+        stateStructType=TOPK_STATE_SCHEMA,
         outputMode="update",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

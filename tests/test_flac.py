@@ -15,7 +15,6 @@ import pytest
 from rust_ruuvitag_etl_spark.operators.multimodal import (
     _crc8,
     _crc16,
-    decode_audio,
     decode_flac,
 )
 
@@ -158,10 +157,6 @@ class TestFlacRoundtrip:
         out += _encode_frame([b], 1, 16, "constant")
         assert decode_flac(out)["samples"] == a + b
 
-    def test_decode_audio_routes_flac(self):
-        d = decode_audio(encode_flac([[3] * 8]))
-        assert d == {"sample_rate": 16000, "n_samples": 8}
-
 
 class TestFlacRejection:
     def test_not_flac(self):
@@ -195,24 +190,16 @@ class TestFlacRejection:
         with pytest.raises(ValueError):
             decode_flac(bytes(data))
 
-    def test_fake_mode_total_over_flac_junk(self):
-        junk = b"fLaC" + b"\x00" * 16
-        with pytest.raises(ValueError):
-            decode_audio(junk)
-        assert decode_audio(junk, fake=True)["n_samples"] == len(junk) * 2
-
     def test_zero_frames_total_unknown(self):
         # Structurally valid: STREAMINFO with total=0 (unknown) and no
         # frames. Must return an empty decode with STREAMINFO's rate —
         # historically raised UnboundLocalError ('rate'), which leaked
-        # through _total_decoder and broke fake-mode totality.
+        # through _total_decoder.
         data = b"fLaC" + _streaminfo(8, 22050, 1, 16, 0)
         d = decode_flac(data)
         assert d == {
             "sample_rate": 22050, "n_channels": 1, "bits": 16, "samples": [],
         }
-        # fake mode stays total over it too
-        decode_audio(data, fake=True)
 
 
 class TestFlacStereoDecorrelation:

@@ -13,10 +13,7 @@ import struct
 import numpy as np
 import pytest
 
-from rust_ruuvitag_etl_spark.operators.multimodal import (
-    decode_image,
-    decode_jpeg_array,
-)
+from rust_ruuvitag_etl_spark.operators.multimodal import decode_jpeg_array
 
 ZZ = [
     (0, 0), (0, 1), (1, 0), (2, 0), (1, 1), (0, 2), (0, 3), (1, 2),
@@ -296,34 +293,28 @@ class TestJpegRejection:
         with pytest.raises(NotImplementedError):
             decode_jpeg_array(bytes(data))
 
-    def test_decode_image_routes_and_fake_stays_total(self):
-        d = decode_image(self._valid())
-        assert (d["width"], d["height"]) == (8, 8)
-        # FFD8-prefixed junk: strict mode raises, fake mode falls back
-        junk = b"\xff\xd8" + b"\x00" * 32
-        with pytest.raises(ValueError):
-            decode_image(junk)
-        assert decode_image(junk, fake=True)["width"] == len(junk) % 640
-
 
 class TestCodecTotalityFuzz:
-    """Property: NO byte string makes a codec entry point raise anything
-    but ValueError/NotImplementedError (strict mode) — and fake mode is
-    TOTAL (always returns a dict). Guards against unhandled IndexError/
-    struct.error/zlib.error leaking from any of the six parsers."""
+    """Property: NO byte string makes a codec decoder raise anything but
+    ValueError/NotImplementedError. Guards against unhandled
+    IndexError/struct.error/zlib.error leaking from any of the nine
+    parsers."""
 
     def test_decode_image_and_audio_never_crash(self):
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
-        from rust_ruuvitag_etl_spark.operators.multimodal import (
-            decode_audio,
-            decode_image,
-        )
+        from rust_ruuvitag_etl_spark.operators import multimodal as mm
 
+        decoders = (
+            mm.decode_bmp_array, mm.decode_png_array, mm.decode_gif_array,
+            mm.decode_jpeg_array, mm.decode_tiff_array, mm.decode_wav,
+            mm.decode_flac, mm.decode_ogg_pages, mm.decode_mp3_frames,
+        )
         prefixes = [
             b"", b"\xff\xd8", b"BM", b"\x89PNG\r\n\x1a\n", b"GIF89a",
-            b"GIF87a", b"RIFF", b"fLaC",
+            b"GIF87a", b"II*\x00", b"MM\x00*", b"RIFF", b"fLaC", b"OggS",
+            b"ID3", b"\xff\xfb",
         ]
 
         @settings(max_examples=300, deadline=None)
@@ -333,13 +324,11 @@ class TestCodecTotalityFuzz:
         )
         def run(prefix, tail):
             payload = prefix + tail
-            for fn in (decode_image, decode_audio):
+            for fn in decoders:
                 try:
                     fn(payload)
                 except (ValueError, NotImplementedError):
-                    pass  # the only exceptions strict mode may raise
-                d = fn(payload, fake=True)
-                assert isinstance(d, dict)
+                    pass  # the only exceptions a decoder may raise
 
         run()
 

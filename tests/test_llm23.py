@@ -66,22 +66,15 @@ class TestAudioEnvelope:
                 found += 1
         assert found == planted
 
-    def test_real_codec_decodes_packed_wav(self, spark):
+    def test_real_codec_decodes_packed_wav(self):
         # the packed blobs must be genuine RIFF/WAVE PCM16: decode one
         # with the stdlib parser outside the query path
         from rust_ruuvitag_etl_spark.operators.multimodal import (
             decode_wav,
         )
-        from rust_ruuvitag_etl_spark.plans.llm23 import _au_media
+        from rust_ruuvitag_etl_spark.plans.llm23 import _au_pack_bytes
 
-        ev = (
-            load(spark, SF_SMALL, "events")
-            .select("event_id")
-            .filter(F.col("event_id") == 1)
-        )
-        blob = bytes(
-            _au_media(ev, F.col("event_id"), 1).collect()[0]["content"]
-        )
+        blob = _au_pack_bytes(1, 1)
         d = decode_wav(blob)
         assert d["sample_rate"] == 16000
         assert d["n_channels"] == 1

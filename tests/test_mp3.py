@@ -10,10 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from rust_ruuvitag_etl_spark.operators.multimodal import (
-    decode_audio,
-    decode_mp3_frames,
-)
+from rust_ruuvitag_etl_spark.operators.multimodal import decode_mp3_frames
 
 _BR_V1 = {32: 1, 40: 2, 48: 3, 56: 4, 64: 5, 80: 6, 96: 7, 112: 8,
           128: 9, 160: 10, 192: 11, 224: 12, 256: 13, 320: 14}
@@ -208,15 +205,8 @@ class TestMp3Rejection:
 
 
 class TestMp3AudioHonesty:
-    def test_sample_decode_stays_not_implemented(self):
-        blob = encode_mp3([3, 4])
-        with pytest.raises(NotImplementedError, match="stream parsed"):
-            decode_audio(blob)
-        out = decode_audio(blob, fake=True)
-        assert out["n_samples"] == len(blob) * 2
-
     def test_corrupt_stream_still_valueerror(self):
         blob = bytearray(encode_mp3([3]))
         blob[8] ^= 0xFF
         with pytest.raises(ValueError):
-            decode_audio(bytes(blob))
+            decode_mp3_frames(bytes(blob))

@@ -12,10 +12,7 @@ import struct
 
 import pytest
 
-from rust_ruuvitag_etl_spark.operators.multimodal import (
-    decode_audio,
-    decode_ogg_pages,
-)
+from rust_ruuvitag_etl_spark.operators.multimodal import decode_ogg_pages
 
 
 def _crc_ref(data: bytes) -> int:
@@ -200,18 +197,8 @@ class TestOggRejection:
 
 
 class TestOggAudioHonesty:
-    def test_sample_decode_stays_not_implemented(self):
-        """The honest boundary: a VALID Ogg container parses but sample
-        decode raises NotImplementedError (psychoacoustic codecs need
-        media libraries); fake=True stays total."""
-        blob = encode_ogg([b"\x01vorbis" + bytes(23)])
-        with pytest.raises(NotImplementedError, match="container parsed"):
-            decode_audio(blob)
-        out = decode_audio(blob, fake=True)
-        assert out["n_samples"] == len(blob) * 2
-
     def test_corrupt_container_still_valueerror(self):
         blob = bytearray(encode_ogg([b"data"]))
         blob[-1] ^= 0xFF
         with pytest.raises(ValueError):
-            decode_audio(bytes(blob))
+            decode_ogg_pages(bytes(blob))

@@ -1,7 +1,7 @@
-"""The shuffle-partition rule (session.size_shuffle_partitions): shuffle
-and state-store partitions follow the session's task slots, a
-deployment-tuned value is kept, and a checkpoint keeps the count it
-started with."""
+"""Session configs on a driver-owned session, and the shuffle-partition
+rule (session.size_shuffle_partitions): shuffle and state-store
+partitions follow the session's task slots, a deployment-tuned value is
+kept, and a checkpoint keeps the count it started with."""
 
 from __future__ import annotations
 
@@ -32,6 +32,17 @@ def _store_ids(names: list[str]) -> list[int]:
     """Partition ids of the state stores of operator 0 (the directory
     also holds ``_metadata``)."""
     return sorted(int(n) for n in names if n.isdigit())
+
+
+class TestSessionConfigs:
+    def test_ensure_session_configs_sets_the_broadcast_threshold(self, spark):
+        """A driver-owned session at Spark's 10 MB default gets the same
+        64 MB broadcast threshold a ``get_spark`` session is built with."""
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        s = spark.newSession()
+        s.conf.set(key, "10485760")
+        ensure_session_configs(s)
+        assert s.conf.get(key) == str(64 * 1024 * 1024)
 
 
 class TestShufflePartitionRule:

@@ -799,19 +799,6 @@ class TestStreamingStatefulTopk:
         assert sorted(by_n[3]) == [(1, 1, 10.0), (2, 2, 9.0), (3, 3, 1.0)]
         assert sorted(by_n[5]) == [(1, 1, 10.0), (2, 4, 9.5), (3, 2, 9.0)]
 
-    def test_dispatch_gates_on_protobuf(self):
-        """The new-API path import-gates: in this sandbox (no
-        protobuf) the operator must choose the applyInPandasWithState
-        twin rather than fail at runtime."""
-        from rust_ruuvitag_etl_spark.streaming import stateful as st
-
-        try:
-            import google.protobuf  # noqa: F401
-
-            assert st._tws_available()
-        except ModuleNotFoundError:
-            assert not st._tws_available()
-
 
 class TestStreamingHoltWinters:
     SCH = (

@@ -9,6 +9,12 @@ from rust_ruuvitag_etl_spark.operators import multimodal as mm
 from rust_ruuvitag_etl_spark.operators.asof import asof_join
 
 
+def _rows(pixels):
+    """Rows of (r, g, b) tuples as the nested lists ``rgb.tolist()``
+    returns."""
+    return [[list(px) for px in row] for row in pixels]
+
+
 class TestAsofJoin:
     def _frames(self, spark):
         trades = spark.createDataFrame(
@@ -55,13 +61,6 @@ class TestAsofJoin:
 
 
 class TestMultimodal:
-    def test_decode_stubs_raise(self):
-        with pytest.raises(NotImplementedError):
-            mm.decode_image(b"xx")
-        with pytest.raises(NotImplementedError):
-            mm.decode_audio(b"xx")
-        assert mm.decode_image(b"xx", fake=True)["channels"] == 3
-
     def test_extract_features(self, spark):
         docs = spark.createDataFrame(
             [(1, "hello"), (2, ""), (3, "wörld")], "doc_id long, text string"
@@ -118,10 +117,6 @@ class TestWavCodec:
         assert d["n_channels"] == 1
         assert d["bits"] == 16
         assert list(d["samples"]) == samples
-
-    def test_decode_audio_routes_riff_to_real_decoder(self):
-        d = mm.decode_audio(self._wav_bytes([5, -5], rate=16000))
-        assert d == {"sample_rate": 16000, "n_samples": 2}
 
     def test_chunk_walk_skips_unknown_chunks(self):
         """A LIST chunk (odd-sized, exercising the padding rule) between
@@ -201,32 +196,29 @@ class TestBmpCodec:
     ]
 
     def test_bottom_up_roundtrip(self):
-        d = mm.decode_bmp(self._bmp_bytes(self.PIXELS))
+        d = mm.decode_bmp_array(self._bmp_bytes(self.PIXELS))
         assert (d["width"], d["height"]) == (3, 2)
-        assert d["pixels"] == self.PIXELS  # rows un-flipped to top→bottom
+        # rows un-flipped to top→bottom
+        assert d["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_top_down_roundtrip(self):
-        d = mm.decode_bmp(self._bmp_bytes(self.PIXELS, top_down=True))
-        assert d["pixels"] == self.PIXELS
-
-    def test_decode_image_routes_bm_to_real_decoder(self):
-        d = mm.decode_image(self._bmp_bytes(self.PIXELS))
-        assert d == {"width": 3, "height": 2, "channels": 3}
+        d = mm.decode_bmp_array(self._bmp_bytes(self.PIXELS, top_down=True))
+        assert d["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_malformed_payloads_raise(self):
         import struct
 
         with pytest.raises(ValueError):
-            mm.decode_bmp(b"PNG not a bmp" + b"\x00" * 60)
+            mm.decode_bmp_array(b"PNG not a bmp" + b"\x00" * 60)
         # truncated pixel array
         raw = self._bmp_bytes(self.PIXELS)
         with pytest.raises(ValueError):
-            mm.decode_bmp(raw[:-8])
+            mm.decode_bmp_array(raw[:-8])
         # 8-bit palettized → NotImplementedError
         raw8 = bytearray(raw)
         struct.pack_into("<H", raw8, 28, 8)
         with pytest.raises(NotImplementedError):
-            mm.decode_bmp(bytes(raw8))
+            mm.decode_bmp_array(bytes(raw8))
 
     def test_bmp_image_stats_spark(self, spark):
         df = spark.createDataFrame(
@@ -328,9 +320,9 @@ class TestBmpCodecFuzz:
         def prop(w, h, seed, top_down):
             pixels = self._grid(w, h, seed)
             raw = TestBmpCodec._bmp_bytes(pixels, top_down=top_down)
-            d = mm.decode_bmp(raw)
+            d = mm.decode_bmp_array(raw)
             assert (d["width"], d["height"]) == (w, h)
-            assert d["pixels"] == pixels
+            assert d["rgb"].tolist() == _rows(pixels)
 
         prop()
 
@@ -342,7 +334,7 @@ class TestBmpCodecFuzz:
         @given(st.binary(min_size=0, max_size=120))
         def prop(junk):
             try:
-                mm.decode_bmp(junk)
+                mm.decode_bmp_array(junk)
             except (ValueError, NotImplementedError):
                 return
             # decoding junk without the BM magic must be impossible
@@ -423,32 +415,33 @@ class TestPngCodec:
 
     def test_roundtrip_each_filter(self):
         for ft in range(5):
-            d = mm.decode_png(self._encode(self.PIXELS, [ft]))
+            d = mm.decode_png_array(self._encode(self.PIXELS, [ft]))
             assert (d["width"], d["height"]) == (3, 2)
-            assert d["pixels"] == self.PIXELS, f"filter {ft}"
+            assert d["rgb"].tolist() == _rows(self.PIXELS), f"filter {ft}"
 
     def test_roundtrip_mixed_filters_and_split_idat(self):
-        d = mm.decode_png(self._encode(self.PIXELS, [1, 4], idat_split=3))
-        assert d["pixels"] == self.PIXELS
+        d = mm.decode_png_array(self._encode(self.PIXELS, [1, 4], idat_split=3))
+        assert d["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_greyscale_expands_and_rgba_drops_alpha(self):
         grey = [[(7, 7, 7), (200, 200, 200)]]
-        assert mm.decode_png(self._encode(grey, [0], color=0))["pixels"] == grey
-        assert (
-            mm.decode_png(self._encode(self.PIXELS, [2], color=6))["pixels"]
-            == self.PIXELS
-        )
+        assert mm.decode_png_array(
+            self._encode(grey, [0], color=0)
+        )["rgb"].tolist() == _rows(grey)
+        assert mm.decode_png_array(
+            self._encode(self.PIXELS, [2], color=6)
+        )["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_rejects_bad_signature_crc_and_truncation(self):
         raw = self._encode(self.PIXELS, [1])
         with pytest.raises(ValueError):
-            mm.decode_png(b"BM" + raw[2:])
+            mm.decode_png_array(b"BM" + raw[2:])
         corrupted = bytearray(raw)
         corrupted[20] ^= 0xFF  # flip an IHDR body byte -> CRC mismatch
         with pytest.raises(ValueError):
-            mm.decode_png(bytes(corrupted))
+            mm.decode_png_array(bytes(corrupted))
         with pytest.raises(ValueError):
-            mm.decode_png(raw[:-16])  # IEND (and IDAT tail) gone
+            mm.decode_png_array(raw[:-16])  # IEND (and IDAT tail) gone
 
     def test_rejects_unknown_filter_and_wrong_length(self):
         import struct
@@ -464,10 +457,10 @@ class TestPngCodec:
         sig = b"\x89PNG\r\n\x1a\n"
         bad_filter = chunk(b"IDAT", zlib.compress(bytes([9, 1, 2, 3])))
         with pytest.raises(ValueError, match="filter"):
-            mm.decode_png(sig + ihdr + bad_filter + chunk(b"IEND", b""))
+            mm.decode_png_array(sig + ihdr + bad_filter + chunk(b"IEND", b""))
         short = chunk(b"IDAT", zlib.compress(bytes([0, 1, 2])))
         with pytest.raises(ValueError, match="length"):
-            mm.decode_png(sig + ihdr + short + chunk(b"IEND", b""))
+            mm.decode_png_array(sig + ihdr + short + chunk(b"IEND", b""))
 
     def test_unsupported_variants_raise_notimplemented(self):
         import struct
@@ -485,7 +478,7 @@ class TestPngCodec:
                 b"IHDR", struct.pack(">IIBBBBB", 1, 1, depth, color, interlace and 0 or 0, 0, interlace)
             )
             with pytest.raises(NotImplementedError):
-                mm.decode_png(sig + ihdr + chunk(b"IEND", b""))
+                mm.decode_png_array(sig + ihdr + chunk(b"IEND", b""))
 
 
 class TestPngCodecFuzz:
@@ -500,9 +493,9 @@ class TestPngCodecFuzz:
         )
         def prop(w, h, seed, filters):
             pixels = TestBmpCodecFuzz._grid(w, h, seed)
-            d = mm.decode_png(TestPngCodec._encode(pixels, filters))
+            d = mm.decode_png_array(TestPngCodec._encode(pixels, filters))
             assert (d["width"], d["height"]) == (w, h)
-            assert d["pixels"] == pixels
+            assert d["rgb"].tolist() == _rows(pixels)
 
         prop()
 
@@ -514,30 +507,12 @@ class TestPngCodecFuzz:
         @given(st.binary(min_size=0, max_size=120))
         def prop(junk):
             try:
-                mm.decode_png(junk)
+                mm.decode_png_array(junk)
             except (ValueError, NotImplementedError):
                 return
             assert junk[:8] == b"\x89PNG\r\n\x1a\n"
 
         prop()
-
-    def test_fake_mode_is_total_over_prefixed_junk(self):
-        """ADVICE r3: BM- or PNG-prefixed junk must fall back to the
-        byte-statistics stub under fake=True instead of raising."""
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        @settings(max_examples=60, deadline=None)
-        @given(
-            st.sampled_from([b"BM", b"\x89PNG\r\n\x1a\n", b"GIF89a", b""]),
-            st.binary(min_size=0, max_size=80),
-        )
-        def prop(prefix, junk):
-            out = mm.decode_image(prefix + junk, fake=True)
-            assert set(out) == {"width", "height", "channels"}
-
-        prop()
-
 
 class TestGifCodec:
     """The REAL GIF/LZW decoder, cross-checked against an in-test
@@ -619,26 +594,26 @@ class TestGifCodec:
     ]
 
     def test_roundtrip_with_real_compression(self):
-        d = mm.decode_gif(self._encode(self.PIXELS))
+        d = mm.decode_gif_array(self._encode(self.PIXELS))
         assert (d["width"], d["height"]) == (3, 2)
-        assert d["pixels"] == self.PIXELS
+        assert d["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_skips_89a_extension_blocks(self):
-        d = mm.decode_gif(self._encode(self.PIXELS, extension=True))
-        assert d["pixels"] == self.PIXELS
+        d = mm.decode_gif_array(self._encode(self.PIXELS, extension=True))
+        assert d["rgb"].tolist() == _rows(self.PIXELS)
 
     def test_rejects_junk_truncation_and_interlace(self):
         raw = self._encode(self.PIXELS)
         with pytest.raises(ValueError):
-            mm.decode_gif(b"NOTGIF" + raw[6:])
+            mm.decode_gif_array(b"NOTGIF" + raw[6:])
         with pytest.raises(ValueError):
-            mm.decode_gif(raw[:-6])  # LZW stream truncated
+            mm.decode_gif_array(raw[:-6])  # LZW stream truncated
         interlaced = bytearray(raw)
         # image descriptor packed byte: flip the interlace bit
         idx = raw.index(b"\x2c")
         interlaced[idx + 9] |= 0x40
         with pytest.raises(NotImplementedError):
-            mm.decode_gif(bytes(interlaced))
+            mm.decode_gif_array(bytes(interlaced))
 
     def test_roundtrip_fuzz_runs_and_dictionary(self):
         """Run-heavy grids force long dictionary chains and KwKwK."""
@@ -656,9 +631,9 @@ class TestGifCodec:
                 [colors[rnd.randrange(len(colors))] for _ in range(w)]
                 for _ in range(h)
             ]
-            d = mm.decode_gif(self._encode(pixels, n_colors=256))
+            d = mm.decode_gif_array(self._encode(pixels, n_colors=256))
             assert (d["width"], d["height"]) == (w, h)
-            assert d["pixels"] == pixels
+            assert d["rgb"].tolist() == _rows(pixels)
 
         prop()
 
