@@ -1666,9 +1666,8 @@ def decode_mp3_frames(content: bytes) -> dict:
     This is a CONTAINER decode: per-frame main data comes back as
     opaque bytes; Huffman/psychoacoustic SAMPLE decode genuinely needs
     media libraries and is not implemented. Raises ``ValueError`` on
-    malformed frames
-    and ``NotImplementedError`` for Layer I/II and free-format
-    (bitrate index 0) streams.
+    malformed frames and ``NotImplementedError`` for Layer I/II and
+    free-format (bitrate index 0) streams.
 
     Returns ``{"version", "sample_rate", "channels", "n_frames",
     "protected", "bitrates_kbps", "frames_main"}``."""
@@ -1847,8 +1846,8 @@ def decode_ogg_pages(content: bytes) -> dict:
     This is a CONTAINER decode: packets come back as opaque bytes.
     Psychoacoustic sample decode (Vorbis/Opus payloads) genuinely needs
     media libraries and is not implemented. Raises ``ValueError`` on
-    malformed pages
-    and ``NotImplementedError`` for multiplexed (multi-serial) streams.
+    malformed pages and ``NotImplementedError`` for multiplexed
+    (multi-serial) streams.
 
     Returns ``{"n_pages", "n_packets", "serial", "last_granule",
     "payload_bytes", "packets"}``."""

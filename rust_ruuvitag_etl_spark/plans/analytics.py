@@ -496,6 +496,15 @@ def _paeth(a: int, b: int, c: int) -> int:
     return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
 
 
+# PNG filter types 1..4 as predictors of (left, up, up-left).
+_PNG_PREDICTORS = (
+    lambda a, b, c: a,  # Sub
+    lambda a, b, c: b,  # Up
+    lambda a, b, c: (a + b) // 2,  # Average
+    _paeth,
+)
+
+
 def _pack_png(e: int) -> bytes:
     """Genuine 3x4 RGB8 PNG of event ``e``: raw byte i of scanline y is
     (e * _PNG_PRIMES[9y + i]) mod 256, and scanline y is filtered with
@@ -503,14 +512,12 @@ def _pack_png(e: int) -> bytes:
     emits it. The IDAT zlib stream is one stored deflate block with
     its Adler-32, and the IDAT chunk carries its CRC-32."""
     data, prev = bytearray(), [0] * _PNG_STRIDE
-    for y in range(_PNG_H):
+    for y, predict in enumerate(_PNG_PREDICTORS):
         line = [(e * m) % 256 for m in _PNG_PRIMES[9 * y : 9 * y + 9]]
         data.append(y + 1)
         for i, v in enumerate(line):
-            a = line[i - 3] if i >= 3 else 0
-            c = prev[i - 3] if i >= 3 else 0
-            pred = (a, prev[i], (a + prev[i]) // 2, _paeth(a, prev[i], c))[y]
-            data.append((v - pred) % 256)
+            left, upleft = (line[i - 3], prev[i - 3]) if i >= 3 else (0, 0)
+            data.append((v - predict(left, prev[i], upleft)) % 256)
         prev = line
     idat = (
         b"IDAT" + _PNG_ZLIB_PREFIX + data + struct.pack(">I", zlib.adler32(data))
