@@ -300,7 +300,7 @@ class TestCodecTotalityFuzz:
     IndexError/struct.error/zlib.error leaking from any of the nine
     parsers."""
 
-    def test_decode_image_and_audio_never_crash(self):
+    def test_real_decoders_never_crash(self):
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
