@@ -13,6 +13,11 @@ One place to encode the engine-wide execution posture:
   timestamps (driver rounds 1-2) read as longs instead of erroring;
   harmless for µs-timestamp files (round 3+). The loader probes the
   footer and normalizes either way (sources/tables.py:events_read_schema).
+- Python workers forked by ``pydaemon``: PySpark's daemon, except that a
+  task start no longer re-reads the central directory of every unchanged
+  zip on the worker path (pyspark.zip, py4j, the spark-core jar), which
+  CPython 3.11 re-parses on each ``importlib.invalidate_caches()``.
+  Builder-only, like the driver heap.
 """
 
 from __future__ import annotations
@@ -64,6 +69,7 @@ RUNTIME_CONFIGS = (
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configs to any builder (the driver may own the session)."""
     builder = builder.config("spark.driver.memory", DEFAULT_DRIVER_MEM)
+    builder = builder.config("spark.python.daemon.module", "rust_ruuvitag_etl_spark.pydaemon")
     for key, val in RUNTIME_CONFIGS:
         builder = builder.config(key, val)
     return builder

@@ -1,7 +1,8 @@
-"""Session configs on a driver-owned session, and the shuffle-partition
-rule (session.size_shuffle_partitions): shuffle and state-store
-partitions follow the session's task slots, a deployment-tuned value is
-kept, and a checkpoint keeps the count it started with."""
+"""Session configs on a driver-owned session, the engine's Python worker
+daemon, and the shuffle-partition rule (session.size_shuffle_partitions):
+shuffle and state-store partitions follow the session's task slots, a
+deployment-tuned value is kept, and a checkpoint keeps the count it
+started with."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import textwrap
 
 from pyspark.sql import functions as F
 
+from rust_ruuvitag_etl_spark import pydaemon
 from rust_ruuvitag_etl_spark.operators import ruuvi_pipeline as rp
 from rust_ruuvitag_etl_spark.session import ensure_session_configs
 from rust_ruuvitag_etl_spark.sources import snapshots as sn
@@ -43,6 +45,22 @@ class TestSessionConfigs:
         s.conf.set(key, "10485760")
         ensure_session_configs(s)
         assert s.conf.get(key) == str(64 * 1024 * 1024)
+
+    def test_python_workers_run_the_engine_daemon(self, spark):
+        """A ``get_spark`` session's Python workers are forked by
+        ``pydaemon``, so their zip importers carry its memo."""
+
+        def qualname(batches):
+            import zipimport
+
+            import pandas as pd
+
+            for b in batches:
+                name = zipimport.zipimporter.invalidate_caches.__qualname__
+                yield pd.DataFrame({"q": [name] * len(b)})
+
+        got = {r.q for r in spark.range(8).mapInPandas(qualname, "q string").collect()}
+        assert got == {pydaemon.invalidate_unless_unchanged.__qualname__}
 
 
 class TestShufflePartitionRule:
