@@ -14,7 +14,7 @@ One place to encode the engine-wide execution posture:
   harmless for µs-timestamp files (round 3+). The loader probes the
   footer and normalizes either way (sources/tables.py:events_read_schema).
 - Python workers forked by ``pydaemon``: PySpark's daemon, except that a
-  task start no longer re-reads the central directory of every unchanged
+  task start skips re-reading the central directory of every unchanged
   zip on the worker path (pyspark.zip, py4j, the spark-core jar), which
   CPython 3.11 re-parses on each ``importlib.invalidate_caches()``.
   Builder-only, like the driver heap.

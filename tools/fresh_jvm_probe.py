@@ -10,8 +10,8 @@ this protocol reproduces it: each query gets its OWN JVM (subprocess),
 warm passes, then the median of N timed reps through the bench's own
 timing loop (tools/harness.py:time_query, reclaim after every run).
 The parent also reports the contention sentinel before and after —
-readings taken at calibration_s > ~0.2 (1.3x the ~0.15 idle reference)
-are themselves suspect.
+readings taken at calibration_s > ~0.32 (1.3x the 0.247 idle reference
+in PLANS.md) are themselves suspect.
 
 Times each query's production builder, exactly as the headline does.
 

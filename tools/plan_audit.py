@@ -178,10 +178,15 @@ def main() -> None:
         "",
         "Reading bench.py's `calibration_s` (round 6): the bench times a",
         "fixed pure-Python CPU loop BEFORE the suite and emits it in the",
-        "JSON. Idle-machine reference on this hardware: ~0.15 s. A reading",
-        ">1.3x that (≳0.20 s) means the box was contended and every suite",
-        "timing in that run is inflated — rerun on idle hardware before",
-        "treating any per-query delta as a regression. (Three rounds of",
+        "JSON. Idle reference on the current 4-core box: 0.247 s, the median",
+        "of 25 readings of `tools/harness.calibration_s()` (15 in one process,",
+        "10 in fresh processes) with nothing else running in the container;",
+        "range 0.176–0.273 s, quartiles 0.220–0.266 s. The machine is shared,",
+        "so idle readings alone span 0.71–1.11x the median. A reading >1.3x",
+        "(≳0.32 s) means the box was contended and every suite timing in that",
+        "run is inflated — rerun before treating any per-query delta as a",
+        "regression. (The old ~0.15 s / ≳0.20 s figures were taken on the",
+        "earlier 32-core hardware.) (Three rounds of",
         "phantom regressions motivated this: r3 langid, r4 corpus_prep, r5",
         "the whole suite reading 44.7 s contended vs 34.5 s idle.)",
         "",
