@@ -17,7 +17,10 @@ One place to encode the engine-wide execution posture:
   task start skips re-reading the central directory of every unchanged
   zip on the worker path (pyspark.zip, py4j, the spark-core jar), which
   CPython 3.11 re-parses on each ``importlib.invalidate_caches()``.
-  Builder-only, like the driver heap.
+  Builder-only, like the driver heap. The workers find the package
+  through ``spark.executorEnv.PYTHONPATH`` (its parent directory, which
+  Spark merges into the worker path), so a driver started from any
+  directory without ``PYTHONPATH`` still runs Python tasks.
 """
 
 from __future__ import annotations
@@ -37,6 +40,9 @@ DEFAULT_CPUS = os.environ.get(
 # sandbox has 128 GiB; 16g is still conservative. Only effective when
 # the factory creates the JVM — a pre-existing session keeps its heap.
 DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+# The directory holding this package: the daemon module must import on
+# every worker.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # Runtime SQL configs: applied at build time by ``configure`` and to a
@@ -70,6 +76,7 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configs to any builder (the driver may own the session)."""
     builder = builder.config("spark.driver.memory", DEFAULT_DRIVER_MEM)
     builder = builder.config("spark.python.daemon.module", "rust_ruuvitag_etl_spark.pydaemon")
+    builder = builder.config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     for key, val in RUNTIME_CONFIGS:
         builder = builder.config(key, val)
     return builder

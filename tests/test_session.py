@@ -62,6 +62,34 @@ class TestSessionConfigs:
         got = {r.q for r in spark.range(8).mapInPandas(qualname, "q string").collect()}
         assert got == {pydaemon.invalidate_unless_unchanged.__qualname__}
 
+    def test_workers_import_the_package_from_any_directory(self, tmp_path):
+        """A ``get_spark`` session started outside the repo, with no
+        ``PYTHONPATH`` and the package only on the driver's ``sys.path``,
+        still runs Python tasks: the daemon imports on the workers."""
+        script = textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {REPO!r})
+            from rust_ruuvitag_etl_spark.session import get_spark
+
+            def double(batches):
+                for b in batches:
+                    yield b * 2
+
+            spark = get_spark("outside-repo", master="local[1]")
+            rows = spark.range(4).mapInPandas(double, "id long").collect()
+            print(sorted(r.id for r in rows))
+            spark.stop()
+            """
+        )
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6]"
+
 
 class TestShufflePartitionRule:
     def test_local2_stream_creates_two_state_partitions(self, tmp_path):
