@@ -358,22 +358,16 @@ def ivf_build_index(
     )
 
 
-def ivf_probe_topk(
-    assigned: DataFrame,
+def _nearest_centroids(
     centroids: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
+    nprobe: int,
+    vec_col: str,
+    query_id_col: str,
 ) -> DataFrame:
-    """Approximate top-k over a prebuilt IVF assignment: pick each
-    query's ``nprobe`` nearest centroids (tiny, all broadcast-side),
-    then ONE broadcast equi-join on ``centroid_id`` against the bucketed
-    assignment — the corpus is never shuffled; reading from the bucketed
-    index table prunes to matching buckets. Same output schema as
-    :func:`cosine_topk`."""
+    """(query id, _qvec, centroid_id) for each query's ``nprobe``
+    nearest centroids by cosine, ties to the lower centroid_id. Both
+    sides are tiny: the centroids broadcast onto the queries."""
     c = centroids.select(
         F.col("centroid_id"),
         F.col("centroid").alias("_cvec"),
@@ -381,7 +375,7 @@ def ivf_probe_topk(
         # NULL-coalesced so NULL-id rows are not silently dropped
         F.coalesce(F.pmod(F.col("centroid_id"), F.lit(1)), F.lit(0)).alias("_one"),
     )
-    qprobe = (
+    return (
         queries.withColumn(
             "_one", F.coalesce(F.pmod(F.col(query_id_col), F.lit(1)), F.lit(0))
         )
@@ -403,6 +397,25 @@ def ivf_probe_topk(
         .filter(F.col("_rn") <= nprobe)
         .select(query_id_col, "_qvec", "centroid_id")
     )
+
+
+def ivf_probe_topk(
+    assigned: DataFrame,
+    centroids: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    nprobe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Approximate top-k over a prebuilt IVF assignment: pick each
+    query's ``nprobe`` nearest centroids (tiny, all broadcast-side),
+    then ONE broadcast equi-join on ``centroid_id`` against the bucketed
+    assignment — the corpus is never shuffled; reading from the bucketed
+    index table prunes to matching buckets. Same output schema as
+    :func:`cosine_topk`."""
+    qprobe = _nearest_centroids(centroids, queries, nprobe, vec_col, query_id_col)
     scored = assigned.join(F.broadcast(qprobe), "centroid_id").select(
         F.col(query_id_col),
         F.col(id_col),
@@ -828,7 +841,8 @@ def pq_adc_topk(
     exact re-rank:
 
     1. Pick each query's ``nprobe`` nearest coarse centroids (tiny,
-       broadcast-side — same probe as :func:`ivf_probe_topk`).
+       broadcast-side — :func:`_nearest_centroids`, as in
+       :func:`ivf_probe_topk`).
     2. Build the per-query LUT: <q_sub, centroid> for every
        (sub_id, code_id) — Q × m × ksub rows, broadcast.
     3. ADC scan: equi-join codes against (probe list ⋈ LUT) on
@@ -846,32 +860,9 @@ def pq_adc_topk(
     little recall on cosine retrieval, and skipping it keeps encode a
     pure equi-join pipeline."""
     # 1. probe list
-    c = centroids.select(
-        "centroid_id",
-        F.col("centroid").alias("_cvec"),
-        F.coalesce(F.pmod(F.col("centroid_id"), F.lit(1)), F.lit(0)).alias("_one"),
-    )
-    probe = (
-        queries.withColumn(
-            "_one", F.coalesce(F.pmod(F.col(query_id_col), F.lit(1)), F.lit(0))
-        )
-        .join(F.broadcast(c), "_one")
-        .select(
-            query_id_col,
-            "centroid_id",
-            vf.cosine(F.col(vec_col), F.col("_cvec")).alias("_sim"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
-                    F.desc("_sim"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rn") <= nprobe)
-        .select(query_id_col, "centroid_id")
-    )
+    probe = _nearest_centroids(
+        centroids, queries, nprobe, vec_col, query_id_col
+    ).select(query_id_col, "centroid_id")
     # 2. per-query subspace LUT
     d = dim // m
     qsub = queries.select(

@@ -45,9 +45,14 @@ _BAND_SELECTS = "\n    UNION ALL\n    ".join(
     for b in range(BANDS)
 )
 
-_MINHASH_CAND_CTES = f"""toks AS (
+
+def minhash_band_ctes(source: str) -> str:
+    """CTEs toks .. buckets over the (doc_id, text) relation ``source``:
+    3-gram shingles → portable hash → MinHash signature → banded
+    buckets (doc_id, band, bh)."""
+    return f"""toks AS (
     SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-    FROM documents WHERE trim(text) <> ''
+    FROM {source} WHERE trim(text) <> ''
 ),
 sh AS (
     SELECT doc_id,
@@ -59,12 +64,18 @@ h AS (SELECT doc_id, {tf.h60_sql('s')} AS h FROM sh),
 sig AS (SELECT doc_id, {_MINS} FROM h GROUP BY doc_id),
 buckets AS (
     {_BAND_SELECTS}
-),
+)"""
+
+
+_MINHASH_CAND_CTES = (
+    minhash_band_ctes("documents")
+    + """,
 cand AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM buckets a JOIN buckets b
       ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
 )"""
+)
 
 MINHASH_LSH_PAIRS_SQL = (
     "WITH " + _MINHASH_CAND_CTES + "\nSELECT id_a, id_b FROM cand"

@@ -20,39 +20,18 @@ from __future__ import annotations
 import struct
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import multimodal as mm
+from ..operators.asof import asof_join
 from ..operators.dedup import spread
 from ..sources import load
 from .registry import query
+from .timeseries import OHLC_ORACLE, ohlc_rollup
 
 
-@query(
-    "timeseries_ohlc_downsample",
-    oracle="""
-WITH ranked AS (
-    SELECT event_type,
-           date_trunc('hour', ts) AS bucket,
-           value, ts, event_id,
-           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                              ORDER BY ts, event_id) AS rn_open,
-           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                              ORDER BY ts DESC, event_id DESC) AS rn_close
-    FROM events
-)
-SELECT event_type, bucket,
-       MAX(CASE WHEN rn_open = 1 THEN value END) AS open,
-       MAX(value) AS high,
-       MIN(value) AS low,
-       MAX(CASE WHEN rn_close = 1 THEN value END) AS close,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS volume
-FROM ranked
-GROUP BY event_type, bucket
-""",
-)
+@query("timeseries_ohlc_downsample", oracle=OHLC_ORACLE)
 def timeseries_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC downsampling: per (event_type, hour) emit the first/max/min/
     last value plus count and an exact decimal-summed volume — the
@@ -64,63 +43,104 @@ def timeseries_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per (type, hour, map task) regardless of input size. The oracle
     expresses first/last via ROW_NUMBER because DuckDB's arg_min over
     composite keys differs across versions."""
-    ev = load(spark, sf_dir, "events")
-    order = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        ev.select(
-            "event_type",
-            F.date_trunc("hour", "ts").alias("bucket"),
-            "value",
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.min_by("value", order).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", order).alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("volume"),
-        )
-    )
+    return ohlc_rollup(load(spark, sf_dir, "events"))
 
 
-@query(
-    "funnel_view_click_purchase",
-    oracle="""
-WITH staged AS (
+def _funnel_ctes(within: str) -> str:
+    """Oracle CTEs staged .. per_user of the ordered funnel: per user
+    the first view, the first click after it and the first purchase
+    after that click; ``within`` (SQL interval text, or "") caps each
+    step's gap to the previous one."""
+
+    def after(anchor: str) -> str:
+        cap = f" AND ts <= {anchor} + INTERVAL {within}" if within else ""
+        return f"AND {anchor} IS NOT NULL AND ts > {anchor}{cap}"
+
+    click = f"event_type = 'click' {after('first_view_so_far')}"
+    purchase = f"event_type = 'purchase' {after('first_click_so_far')}"
+    running = """OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
+    return f"""WITH staged AS (
     SELECT user_id, ts, event_id, event_type,
            MIN(CASE WHEN event_type = 'view' THEN ts END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               {running}
                AS first_view_so_far
     FROM events
 ),
 clicked AS (
     SELECT user_id, ts, event_id, event_type, first_view_so_far,
-           MIN(CASE WHEN event_type = 'click'
-                         AND first_view_so_far IS NOT NULL
-                         AND ts > first_view_so_far THEN ts END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           MIN(CASE WHEN {click} THEN ts END)
+               {running}
                AS first_click_so_far
     FROM staged
 ),
 per_user AS (
     SELECT user_id,
            MIN(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-           MIN(CASE WHEN event_type = 'click'
-                         AND first_view_so_far IS NOT NULL
-                         AND ts > first_view_so_far THEN ts END) AS t_click,
-           MIN(CASE WHEN event_type = 'purchase'
-                         AND first_click_so_far IS NOT NULL
-                         AND ts > first_click_so_far THEN ts END) AS t_purchase
+           MIN(CASE WHEN {click} THEN ts END) AS t_click,
+           MIN(CASE WHEN {purchase} THEN ts END) AS t_purchase
     FROM clicked
     GROUP BY user_id
-)
+)"""
+
+
+def _funnel_stages(
+    ev: DataFrame, within: Column | None, labels: tuple[str, str, str]
+) -> DataFrame:
+    """(stage, users): the three funnel stage counts under ``labels``.
+    Running-min windows (first-view-so-far, first-qualifying-click-so-
+    far) share the user_id partitioning, so the funnel costs ONE
+    shuffle; ``within`` caps each step's gap to the previous one."""
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+    def step(event_type: str, anchor: str) -> Column:
+        ok = (
+            (F.col("event_type") == event_type)
+            & F.col(anchor).isNotNull()
+            & (F.col("ts") > F.col(anchor))
+        )
+        return ok if within is None else ok & (F.col("ts") <= F.col(anchor) + within)
+
+    staged = ev.withColumn(
+        "first_view_so_far",
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
+    )
+    click_ok = step("click", "first_view_so_far")
+    clicked = staged.withColumn(
+        "first_click_so_far", F.min(F.when(click_ok, F.col("ts"))).over(w)
+    )
+    per_user = clicked.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
+        F.min(F.when(click_ok, F.col("ts"))).alias("t_click"),
+        F.min(
+            F.when(step("purchase", "first_click_so_far"), F.col("ts"))
+        ).alias("t_purchase"),
+    )
+    counts = per_user.agg(
+        F.count("t_view").alias("v"),
+        F.count("t_click").alias("c"),
+        F.count("t_purchase").alias("p"),
+    )
+    return counts.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(label).alias("stage"), F.col(c).alias("users"))
+                    for label, c in zip(labels, "vcp")
+                ]
+            )
+        ).alias("s")
+    ).select("s.stage", "s.users")
+
+
+@query(
+    "funnel_view_click_purchase",
+    oracle=_funnel_ctes("")
+    + """
 SELECT stage, users,
        ROUND(users / CAST(NULLIF(MAX(users) OVER (), 0) AS DOUBLE), 4)
            AS pct_of_top
@@ -142,62 +162,9 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, then a per-user aggregate collapses to stage timestamps and
     a 3-row summary. No self-joins, no per-stage passes over the corpus.
     """
-    ev = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    stages = _funnel_stages(
+        load(spark, sf_dir, "events"), None, ("1_view", "2_click", "3_purchase")
     )
-    staged = ev.withColumn(
-        "first_view_so_far",
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-    )
-    clicked = staged.withColumn(
-        "first_click_so_far",
-        F.min(
-            F.when(
-                (F.col("event_type") == "click")
-                & F.col("first_view_so_far").isNotNull()
-                & (F.col("ts") > F.col("first_view_so_far")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    per_user = clicked.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
-        F.min(
-            F.when(
-                (F.col("event_type") == "click")
-                & F.col("first_view_so_far").isNotNull()
-                & (F.col("ts") > F.col("first_view_so_far")),
-                F.col("ts"),
-            )
-        ).alias("t_click"),
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & F.col("first_click_so_far").isNotNull()
-                & (F.col("ts") > F.col("first_click_so_far")),
-                F.col("ts"),
-            )
-        ).alias("t_purchase"),
-    )
-    counts = per_user.agg(
-        F.count("t_view").alias("v"),
-        F.count("t_click").alias("c"),
-        F.count("t_purchase").alias("p"),
-    )
-    stages = counts.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("1_view").alias("stage"), F.col("v").alias("users")),
-                F.struct(F.lit("2_click").alias("stage"), F.col("c").alias("users")),
-                F.struct(
-                    F.lit("3_purchase").alias("stage"), F.col("p").alias("users")
-                ),
-            )
-        ).alias("s")
-    ).select("s.stage", "s.users")
     top = Window.partitionBy()
     # NULLIF on BOTH sides: with zero users at every stage, Spark's 0/0
     # is NULL but DuckDB's is NaN — nulling the denominator keeps the
@@ -607,11 +574,9 @@ def asof_next_purchase_after_view(spark: SparkSession, sf_dir: str) -> DataFrame
     at-or-after it — the attribution direction the backward as-of
     (asof_purchase_last_view) cannot express. Same single-shuffle
     union-and-running-fill plan, traversed descending
-    (operators/asof.py:asof_join_forward); the oracle states the
+    (operators/asof.py:asof_join, forward); the oracle states the
     semantics directly as a correlated LATERAL min-pick, which DuckDB
     decorrelates itself."""
-    from ..operators.asof import asof_join_forward
-
     ev = load(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", F.col("event_id").alias("view_id")
@@ -621,7 +586,7 @@ def asof_next_purchase_after_view(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("user_id", "ts")
         .agg(F.min("event_id").alias("purchase_id"))
     )
-    joined = asof_join_forward(
+    joined = asof_join(
         views,
         purchases.select(
             "user_id", "ts", "purchase_id", F.col("ts").alias("purchase_ts")
@@ -629,6 +594,7 @@ def asof_next_purchase_after_view(spark: SparkSession, sf_dir: str) -> DataFrame
         key="user_id",
         ts_col="ts",
         right_value_cols=("purchase_id", "purchase_ts"),
+        forward=True,
     )
     return joined.select(
         "view_id",
@@ -642,43 +608,8 @@ def asof_next_purchase_after_view(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "funnel_deadline_1h",
-    oracle="""
-WITH staged AS (
-    SELECT user_id, ts, event_id, event_type,
-           MIN(CASE WHEN event_type = 'view' THEN ts END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS first_view_so_far
-    FROM events
-),
-clicked AS (
-    SELECT user_id, ts, event_id, event_type, first_view_so_far,
-           MIN(CASE WHEN event_type = 'click'
-                         AND first_view_so_far IS NOT NULL
-                         AND ts > first_view_so_far
-                         AND ts <= first_view_so_far + INTERVAL 1 HOUR
-                    THEN ts END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS first_click_so_far
-    FROM staged
-),
-per_user AS (
-    SELECT user_id,
-           MIN(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-           MIN(CASE WHEN event_type = 'click'
-                         AND first_view_so_far IS NOT NULL
-                         AND ts > first_view_so_far
-                         AND ts <= first_view_so_far + INTERVAL 1 HOUR
-                    THEN ts END) AS t_click,
-           MIN(CASE WHEN event_type = 'purchase'
-                         AND first_click_so_far IS NOT NULL
-                         AND ts > first_click_so_far
-                         AND ts <= first_click_so_far + INTERVAL 1 HOUR
-                    THEN ts END) AS t_purchase
-    FROM clicked
-    GROUP BY user_id
-)
+    oracle=_funnel_ctes("1 HOUR")
+    + """
 SELECT '1_view' AS stage, CAST(COUNT(t_view) AS BIGINT) AS users FROM per_user
 UNION ALL
 SELECT '2_click_1h', CAST(COUNT(t_click) AS BIGINT) FROM per_user
@@ -693,52 +624,8 @@ def funnel_deadline_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shuffle running-min-window plan as the unbounded funnel
     (funnel_view_click_purchase); the deadline adds a pure per-row
     predicate, so the scale posture is unchanged."""
-    ev = load(spark, sf_dir, "events")
-    hour = F.expr("INTERVAL 1 HOUR")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return _funnel_stages(
+        load(spark, sf_dir, "events"),
+        F.expr("INTERVAL 1 HOUR"),
+        ("1_view", "2_click_1h", "3_purchase_1h"),
     )
-    staged = ev.withColumn(
-        "first_view_so_far",
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-    )
-    click_ok = (
-        (F.col("event_type") == "click")
-        & F.col("first_view_so_far").isNotNull()
-        & (F.col("ts") > F.col("first_view_so_far"))
-        & (F.col("ts") <= F.col("first_view_so_far") + hour)
-    )
-    clicked = staged.withColumn(
-        "first_click_so_far", F.min(F.when(click_ok, F.col("ts"))).over(w)
-    )
-    purchase_ok = (
-        (F.col("event_type") == "purchase")
-        & F.col("first_click_so_far").isNotNull()
-        & (F.col("ts") > F.col("first_click_so_far"))
-        & (F.col("ts") <= F.col("first_click_so_far") + hour)
-    )
-    per_user = clicked.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
-        F.min(F.when(click_ok, F.col("ts"))).alias("t_click"),
-        F.min(F.when(purchase_ok, F.col("ts"))).alias("t_purchase"),
-    )
-    counts = per_user.agg(
-        F.count("t_view").alias("v"),
-        F.count("t_click").alias("c"),
-        F.count("t_purchase").alias("p"),
-    )
-    return counts.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("1_view").alias("stage"), F.col("v").alias("users")),
-                F.struct(
-                    F.lit("2_click_1h").alias("stage"), F.col("c").alias("users")
-                ),
-                F.struct(
-                    F.lit("3_purchase_1h").alias("stage"), F.col("p").alias("users")
-                ),
-            )
-        ).alias("s")
-    ).select("s.stage", "s.users")

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import multimodal as mm
@@ -822,17 +822,48 @@ def sketch_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "attribution_linear_touch",
-    oracle="""
-WITH touches AS (
+# Purchases (non-null value) and their view/click touches, oracle side.
+TOUCH_CTES = """WITH touches AS (
     SELECT event_id, user_id, ts, event_type
     FROM events WHERE event_type IN ('view', 'click')
 ),
 purchases AS (
     SELECT event_id, user_id, ts, value
     FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
+)"""
+
+
+def touch_pairs(ev: DataFrame, value: Column) -> DataFrame:
+    """Each purchase with a non-null value (purchase_id, user_id, ts and
+    ``value``) paired with every view/click of its user in the 7 days
+    before it (touch_id, t_user_id, touch_ts, touch_type): EQUI on
+    user_id with the lookback as the residual predicate."""
+    touches = ev.filter(F.col("event_type").isin("view", "click")).select(
+        F.col("event_id").alias("touch_id"),
+        F.col("user_id").alias("t_user_id"),
+        F.col("ts").alias("touch_ts"),
+        F.col("event_type").alias("touch_type"),
+    )
+    purchases = ev.filter(
+        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
+    ).select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        "ts",
+        value,
+    )
+    return purchases.join(
+        touches,
+        (F.col("t_user_id") == F.col("user_id"))
+        & (F.col("touch_ts") < F.col("ts"))
+        & (F.col("touch_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
+    )
+
+
+@query(
+    "attribution_linear_touch",
+    oracle=f"""
+{TOUCH_CTES},
 joined AS (
     SELECT p.event_id AS purchase_id, p.user_id, p.value,
            t.event_id AS touch_id, t.event_type AS touch_type, t.ts AS touch_ts
@@ -874,27 +905,7 @@ def attribution_linear_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant 1/n swapped for pow(2, -age) weights — shape unchanged.
     Reference analog: the registry broadcast enrich of
     ``utils.rs:83-87`` widened to a value-splitting join."""
-    ev = load(spark, sf_dir, "events")
-    touches = ev.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("event_id").alias("touch_id"),
-        F.col("user_id").alias("t_user_id"),
-        F.col("ts").alias("touch_ts"),
-        F.col("event_type").alias("touch_type"),
-    )
-    purchases = ev.filter(
-        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-    ).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        "ts",
-        "value",
-    )
-    joined = purchases.join(
-        touches,
-        (F.col("t_user_id") == F.col("user_id"))
-        & (F.col("touch_ts") < F.col("ts"))
-        & (F.col("touch_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
-    )
+    joined = touch_pairs(load(spark, sf_dir, "events"), F.col("value"))
     w = Window.partitionBy("purchase_id").orderBy("touch_ts", "touch_id")
     wc = Window.partitionBy("purchase_id")
     ranked = joined.select(

@@ -384,6 +384,34 @@ def text_keyword_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- triangle counting (round 6) --------------------------------------------
 
 
+def co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-purchase graph as distinct (u, v) edges, u < v: parts
+    adjacent when they appear in the same order. One groupBy(order)
+    into a sorted per-order part array, then an in-row pair explosion
+    (fan-out bounded by order size); localCheckpointed, since every
+    consumer reads the edge list more than once."""
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    grp = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("ps")
+    )
+    return (
+        grp.select(
+            F.explode(
+                F.flatten(
+                    F.expr(
+                        "transform(ps, (x, i) -> transform("
+                        "slice(ps, i + 2, size(ps) - i - 1),"
+                        " y -> struct(x as u, y as v)))"
+                    )
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 @query(
     "graph_triangle_count",
     oracle="""
@@ -428,27 +456,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjudicated wedge-join decision above: WEDGE explosion is quadratic
     in oriented out-degree (~36M structs, CodegenFallback loses), while
     edge explosion is quadratic only in order size (a constant)."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    grp = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    edges = (
-        grp.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(ps, (x, i) -> transform("
-                        "slice(ps, i + 2, size(ps) - i - 1),"
-                        " y -> struct(x as u, y as v)))"
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    par = li.sparkSession.sparkContext.defaultParallelism
+    edges = co_purchase_edges(spark, sf_dir)
+    par = spark.sparkContext.defaultParallelism
     deg = (
         edges.select(F.col("u").alias("x"))
         .unionAll(edges.select(F.col("v").alias("x")))

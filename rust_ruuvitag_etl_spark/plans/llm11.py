@@ -22,13 +22,15 @@ correctness sample keeps the reference-parity surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tf
 from ..functions import vectors as vf
 from ..operators import dedup as dd
 from ..sources import load
+from ..streaming.pipeline import run_available_now
+from .llm4 import BM25_CTES
 from .registry import REGISTRY, query
 
 # --- k-means Lloyd -----------------------------------------------------
@@ -70,13 +72,9 @@ MMR_QUERY_ID = 0  # the deterministic query vector
 # lambda = 0.5, written as 0.5*rel - 0.5*maxsim (0.5 scaling is exact)
 
 
-def _kmeans_oracle() -> str:
-    """Unrolled Lloyd CTE: init = the K lowest vec_ids, then
-    ``LLOYD_ITERS`` × (nearest-centroid assign with (dist, cluster)
-    tie-break, floor-mean update). Integer throughout, so the oracle is
-    exact, not approximate."""
-    parts = [
-        f"""
+# Oracle CTEs of the integer Lloyd fold: qvs (micro-quantized vectors)
+# and c0 (the K lowest vec_ids as initial centroids).
+_KM_HEAD = f"""
 WITH qvs AS (
     SELECT vec_id,
            list_transform(embedding,
@@ -88,23 +86,37 @@ c0 AS (
            qv AS cv
     FROM qvs ORDER BY vec_id LIMIT {K_CLUSTERS}
 )"""
-    ]
-    prev = "c0"
-    for t in range(1, LLOYD_ITERS + 1):
-        parts.append(
-            f""",
+
+
+def _km_assign_ctes(t: int, cols: str) -> str:
+    """CTEs s{t} (each vector's squared L2 to every centroid of
+    c{t-1}) and a{t} (``cols`` of its nearest, ties to the lower
+    cluster id), each preceded by a comma."""
+    return f""",
 s{t} AS (
     SELECT v.vec_id, v.qv, c.cluster,
            list_sum(list_transform(range(1, {DIM} + 1),
                i -> (v.qv[i] - c.cv[i]) * (v.qv[i] - c.cv[i]))) AS d
-    FROM qvs v CROSS JOIN {prev} c
+    FROM qvs v CROSS JOIN c{t - 1} c
 ),
 a{t} AS (
-    SELECT vec_id, qv, cluster
+    SELECT {cols}
     FROM (SELECT *, row_number() OVER (
               PARTITION BY vec_id ORDER BY d, cluster) AS rn FROM s{t})
     WHERE rn = 1
-),
+)"""
+
+
+def _kmeans_oracle() -> str:
+    """Unrolled Lloyd CTE: init = the K lowest vec_ids, then
+    ``LLOYD_ITERS`` × (nearest-centroid assign with (dist, cluster)
+    tie-break, floor-mean update). Integer throughout, so the oracle is
+    exact, not approximate."""
+    parts = [_KM_HEAD]
+    for t in range(1, LLOYD_ITERS + 1):
+        parts.append(
+            _km_assign_ctes(t, "vec_id, qv, cluster")
+            + f""",
 g{t} AS (
     SELECT cluster, dims.i AS dim,
            CAST(floor(CAST(SUM(qv[dims.i]) AS DOUBLE) / COUNT(*))
@@ -117,7 +129,6 @@ c{t} AS (
     SELECT cluster, list(c ORDER BY dim) AS cv FROM g{t} GROUP BY cluster
 )"""
         )
-        prev = f"c{t}"
     parts.append(
         f"""
 SELECT cluster, CAST(dim AS BIGINT) AS dim, c, n FROM g{LLOYD_ITERS}
@@ -126,14 +137,27 @@ SELECT cluster, CAST(dim AS BIGINT) AS dim, c, n FROM g{LLOYD_ITERS}
     return "".join(parts)
 
 
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    em = load(spark, sf_dir, "embeddings")
+def _quantize(em: DataFrame) -> DataFrame:
+    """(vec_id, qv): embeddings (a table or a stream) in micro-units."""
     return em.select(
         "vec_id",
         F.transform(
             F.col("embedding"),
             lambda x: F.round(x.cast("double") * Q_SCALE).cast("long"),
         ).alias("qv"),
+    )
+
+
+def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _quantize(load(spark, sf_dir, "embeddings"))
+
+
+def _sq_dist() -> Column:
+    """Exact int64 squared L2 between the ``qv`` and ``cv`` arrays."""
+    return F.aggregate(
+        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
 
 
@@ -152,22 +176,50 @@ def _init_centroids(vecs: DataFrame) -> DataFrame:
 def _assign_int(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid under exact integer squared L2; ties break to
     the lowest cluster id (min over (d, cluster) structs). The centroid
-    side is K aggregate rows — broadcast, scan-local distance eval."""
-    d = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    side is K aggregate rows — broadcast, scan-local distance eval.
+    Output: vec_id, qv, cluster and the distance d to it."""
     return (
         vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", "qv", "cluster", d.alias("d"))
+        .select("vec_id", "qv", "cluster", _sq_dist().alias("d"))
         .groupBy("vec_id")
         .agg(
             F.min(F.struct("d", "cluster")).alias("m"),
             F.first("qv").alias("qv"),  # identical across the K copies
         )
-        .select("vec_id", "qv", F.col("m.cluster").alias("cluster"))
+        .select(
+            "vec_id", "qv", F.col("m.cluster").alias("cluster"),
+            F.col("m.d").alias("d"),
+        )
     )
+
+
+def _lloyd(vecs: DataFrame):
+    """The LLOYD_ITERS integer Lloyd steps from :func:`_init_centroids`:
+    yields each step's assignment, its per-(cluster, dim0) floor means
+    ``g`` (c, with the cluster size n) and the centroids ``g`` forms."""
+    cents = _init_centroids(vecs)
+    for _ in range(LLOYD_ITERS):
+        assigned = _assign_int(vecs, cents)
+        g = (
+            assigned.select(
+                "cluster", F.posexplode("qv").alias("dim0", "v")
+            )
+            .groupBy("cluster", "dim0")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+            .select(
+                "cluster",
+                "dim0",
+                F.floor(F.col("s").cast("double") / F.col("n")).alias("c"),
+                "n",
+            )
+        )
+        cents = g.groupBy("cluster").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim0", "c"))),
+                lambda x: x["c"],
+            ).alias("cv")
+        )
+        yield assigned, g, cents
 
 
 @query("cluster_kmeans_lloyd", oracle=_kmeans_oracle())
@@ -191,30 +243,7 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (standard Lloyd behavior). k and iters are module
     constants here so the oracle can unroll; production exposes them as
     arguments on the same fold."""
-    vecs = dd.spread(_quantized(spark, sf_dir))
-    cents = _init_centroids(vecs)
-    g = None
-    for _ in range(LLOYD_ITERS):
-        assigned = _assign_int(vecs, cents)
-        g = (
-            assigned.select(
-                "cluster", F.posexplode("qv").alias("dim0", "v")
-            )
-            .groupBy("cluster", "dim0")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select(
-                "cluster",
-                "dim0",
-                F.floor(F.col("s").cast("double") / F.col("n")).alias("c"),
-                "n",
-            )
-        )
-        cents = g.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim0", "c"))),
-                lambda x: x["c"],
-            ).alias("cv")
-        )
+    *_, (_, g, _) = _lloyd(dd.spread(_quantized(spark, sf_dir)))
     return g.select(
         "cluster",
         (F.col("dim0") + 1).cast("long").alias("dim"),
@@ -224,45 +253,11 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RRF_ORACLE = f"""
-WITH d AS (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-    FROM documents WHERE trim(text) <> ''
-),
-stats AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(len(toks) AS BIGINT)) AS DOUBLE) / COUNT(*) AS avgdl
-    FROM d
-),
-tf_t AS (
-    SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf_raw
-    FROM (SELECT doc_id, unnest(toks) AS token FROM d)
-    WHERE token IN ('data', 'join', 'filter')
-    GROUP BY doc_id, token
-),
-df_t AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf_t GROUP BY token),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM d),
-parts_a AS (
-    SELECT t.doc_id, t.token,
-           ln((CAST(s.n_docs AS DOUBLE) - d2.df + 0.5) / (d2.df + 0.5) + 1.0)
-           * (t.tf_raw * 2.2)
-           / (t.tf_raw + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl)) AS part
-    FROM tf_t t
-    JOIN df_t d2 ON d2.token = t.token
-    JOIN dl ON dl.doc_id = t.doc_id
-    CROSS JOIN stats s
-),
-scored_a AS (
-    SELECT doc_id,
-           COALESCE(MAX(CASE WHEN token = 'data' THEN part END), 0.0)
-           + COALESCE(MAX(CASE WHEN token = 'join' THEN part END), 0.0)
-           + COALESCE(MAX(CASE WHEN token = 'filter' THEN part END), 0.0)
-               AS score
-    FROM parts_a GROUP BY doc_id
-),
+WITH {BM25_CTES},
 top_a AS (
     SELECT doc_id,
            row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-    FROM scored_a QUALIFY rank <= {RRF_TOP}
+    FROM scored QUALIFY rank <= {RRF_TOP}
 ),
 parts_b AS (
     SELECT t.doc_id, t.token,
@@ -687,36 +682,11 @@ def _kmeans_inertia_oracle() -> str:
     Lloyd's descent lemma makes (near-)monotone. The monotone flag is
     computed from IDENTICAL integers in both engines, so it is
     hash-safe by construction; pytest asserts it is actually TRUE."""
-    parts = [
-        f"""
-WITH qvs AS (
-    SELECT vec_id,
-           list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * {Q_SCALE}) AS BIGINT)) AS qv
-    FROM embeddings
-),
-c0 AS (
-    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster,
-           qv AS cv
-    FROM qvs ORDER BY vec_id LIMIT {K_CLUSTERS}
-)"""
-    ]
-    prev = "c0"
+    parts = [_KM_HEAD]
     for t in range(1, LLOYD_ITERS + 1):
         parts.append(
-            f""",
-s{t} AS (
-    SELECT v.vec_id, v.qv, c.cluster,
-           list_sum(list_transform(range(1, {DIM} + 1),
-               i -> (v.qv[i] - c.cv[i]) * (v.qv[i] - c.cv[i]))) AS d
-    FROM qvs v CROSS JOIN {prev} c
-),
-a{t} AS (
-    SELECT vec_id, qv, cluster, d
-    FROM (SELECT *, row_number() OVER (
-              PARTITION BY vec_id ORDER BY d, cluster) AS rn FROM s{t})
-    WHERE rn = 1
-),
+            _km_assign_ctes(t, "vec_id, qv, cluster, d")
+            + f""",
 i{t} AS (SELECT CAST(SUM(d) AS BIGINT) AS inertia FROM a{t}),
 c{t} AS (
     SELECT cluster, list(c ORDER BY dim) AS cv
@@ -730,7 +700,6 @@ c{t} AS (
     ) GROUP BY cluster
 )"""
         )
-        prev = f"c{t}"
     iters = ", ".join(
         f"({t}, i{t}.inertia)" for t in range(1, LLOYD_ITERS + 1)
     )
@@ -766,45 +735,10 @@ def cluster_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated argmin shuffle; each inertia is a 1-row
     aggregate; the three 1-row aggregates cross-join into the
     constant-size output."""
-    vecs = dd.spread(_quantized(spark, sf_dir))
-    cents = _init_centroids(vecs)
-    inertias = []
-    for _ in range(LLOYD_ITERS):
-        d = F.aggregate(
-            F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        assigned = (
-            vecs.crossJoin(F.broadcast(cents))
-            .select("vec_id", "qv", "cluster", d.alias("d"))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct("d", "cluster")).alias("m"),
-                F.first("qv").alias("qv"),
-            )
-            .select(
-                "vec_id", "qv", F.col("m.cluster").alias("cluster"),
-                F.col("m.d").alias("d"),
-            )
-        )
-        inertias.append(assigned.agg(F.sum("d").alias("inertia")))
-        g = (
-            assigned.select("cluster", F.posexplode("qv").alias("dim0", "v"))
-            .groupBy("cluster", "dim0")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select(
-                "cluster",
-                "dim0",
-                F.floor(F.col("s").cast("double") / F.col("n")).alias("c"),
-            )
-        )
-        cents = g.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim0", "c"))),
-                lambda x: x["c"],
-            ).alias("cv")
-        )
+    inertias = [
+        assigned.agg(F.sum("d").alias("inertia"))
+        for assigned, _, _ in _lloyd(dd.spread(_quantized(spark, sf_dir)))
+    ]
     joined = inertias[0].select(F.col("inertia").alias("i1"))
     for t, df in enumerate(inertias[1:], start=2):
         joined = joined.crossJoin(
@@ -876,26 +810,7 @@ def streaming_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct vec_ids. Registered in this module (not
     streaming_batchck) so the driver's first-50 sample keeps its
     composition."""
-    vecs = dd.spread(_quantized(spark, sf_dir))
-    cents = _init_centroids(vecs)
-    for _ in range(LLOYD_ITERS):
-        assigned = _assign_int(vecs, cents)
-        g = (
-            assigned.select("cluster", F.posexplode("qv").alias("dim0", "v"))
-            .groupBy("cluster", "dim0")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select(
-                "cluster",
-                "dim0",
-                F.floor(F.col("s").cast("double") / F.col("n")).alias("c"),
-            )
-        )
-        cents = g.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim0", "c"))),
-                lambda x: x["c"],
-            ).alias("cv")
-        )
+    *_, (_, _, cents) = _lloyd(dd.spread(_quantized(spark, sf_dir)))
     # the static side of the stream-static join: k rows, trained once
     cents = cents.withColumn("jk", F.lit(1)).localCheckpoint(eager=True)
 
@@ -920,24 +835,10 @@ def streaming_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "embeddings.parquet")
             .parquet(sf_dir.rstrip("/"))
         )
-    stream = (
-        raw.select(
-            "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.round(x.cast("double") * Q_SCALE).cast("long"),
-            ).alias("qv"),
-        )
-        .withColumn("jk", F.lit(1))
-    )
-    d = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    stream = _quantize(raw).withColumn("jk", F.lit(1))
     assigned_stream = (
         stream.join(F.broadcast(cents), "jk")  # stream-static, k rows
-        .select("vec_id", "cluster", d.alias("d"))
+        .select("vec_id", "cluster", _sq_dist().alias("d"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("d", "cluster")).alias("m"))
         .select(
@@ -947,15 +848,7 @@ def streaming_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "ska_streaming_kmeans_assign"  # fixed: see streaming_batchck
-    q = (
-        assigned_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_available_now(assigned_stream, name, "complete")
 
 
 _L_DIVERSITY_ORACLE = """

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..functions import text as tf
 from ..operators import dedup as dd
 from ..sources import load
-from ._dedup_oracles import _BAND_SELECTS, _MINS
+from ._dedup_oracles import minhash_band_ctes
 from .registry import query
 
 # Deterministic takedown manifest: every 97th doc_id (~1% of the
@@ -46,21 +46,7 @@ _TAKEDOWN_MOD = 97
 
 _DELPROP_ORACLE = f"""
 WITH man AS (SELECT doc_id FROM documents WHERE doc_id % {_TAKEDOWN_MOD} = 0),
-toks AS (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-    FROM documents WHERE trim(text) <> ''
-),
-sh AS (
-    SELECT doc_id,
-           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-    FROM toks
-),
-h AS (SELECT doc_id, {tf.h60_sql('s')} AS h FROM sh),
-sig AS (SELECT doc_id, {_MINS} FROM h GROUP BY doc_id),
-buckets AS (
-    {_BAND_SELECTS}
-),
+{minhash_band_ctes('documents')},
 post AS (
     SELECT DISTINCT doc_id, token
     FROM (SELECT doc_id, unnest(t) AS token FROM toks)

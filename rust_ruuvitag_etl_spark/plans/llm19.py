@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
 from ..sources import load
+from .analytics2 import TOUCH_CTES, touch_pairs
 from .registry import query
 
 # --- CUSUM control chart -------------------------------------------------------
@@ -348,15 +349,8 @@ def eval_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- time-decay multi-touch attribution -----------------------------------------
 
-_DECAY_ATTR_ORACLE = """
-WITH touches AS (
-    SELECT event_id, user_id, ts, event_type
-    FROM events WHERE event_type IN ('view', 'click')
-),
-purchases AS (
-    SELECT event_id, user_id, ts, value
-    FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
+_DECAY_ATTR_ORACLE = f"""
+{TOUCH_CTES},
 joined AS (
     SELECT p.event_id AS purchase_id, p.user_id,
            CAST(ROUND(p.value * 100) AS BIGINT) AS v100,
@@ -403,26 +397,9 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join with the 7-day residual bounding per-purchase fan-out,
     per-purchase weight-sum and rank windows over the joined rows
     only."""
-    ev = load(spark, sf_dir, "events")
-    touches = ev.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("event_id").alias("touch_id"),
-        F.col("user_id").alias("t_user_id"),
-        F.col("ts").alias("touch_ts"),
-        F.col("event_type").alias("touch_type"),
-    )
-    purchases = ev.filter(
-        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-    ).select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        "ts",
+    joined = touch_pairs(
+        load(spark, sf_dir, "events"),
         F.round(F.col("value") * 100).cast("long").alias("v100"),
-    )
-    joined = purchases.join(
-        touches,
-        (F.col("t_user_id") == F.col("user_id"))
-        & (F.col("touch_ts") < F.col("ts"))
-        & (F.col("touch_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
     ).select(
         "purchase_id",
         "user_id",

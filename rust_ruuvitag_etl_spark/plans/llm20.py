@@ -25,6 +25,7 @@ from ..functions import text as tf
 from ..operators import dedup as dd
 from ..sources import load
 from ._dedup_oracles import _QUALITY_SQL
+from .graph import co_purchase_edges
 from .registry import query
 
 # --- lexical diversity ----------------------------------------------------------
@@ -286,26 +287,7 @@ def graph_degree_assortativity(
     degree join-back is two uniform equi-joins on node id; the moment
     aggregate is one row. The edge list localCheckpoints so the
     degree pass and the end-pair pass share one materialization."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    grp = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    edges = (
-        grp.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(ps, (x, i) -> transform("
-                        "slice(ps, i + 2, size(ps) - i - 1),"
-                        " y -> struct(x as u, y as v)))"
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = co_purchase_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("x"))
         .unionAll(edges.select(F.col("v").alias("x")))

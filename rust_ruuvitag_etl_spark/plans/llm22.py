@@ -201,6 +201,30 @@ def _media(ev: DataFrame, mid, bump: bool) -> DataFrame:
     )
 
 
+def band_candidates(feats: DataFrame, key0: str, key1: str) -> DataFrame:
+    """Distinct (id_a < id_b) media pairs sharing the band-0 key
+    ``key0`` or the band-1 key ``key1``: one band-key equi-join."""
+    bands = feats.select(
+        "media_id", F.lit(0).alias("band"), F.col(key0).alias("bk")
+    ).unionAll(
+        feats.select("media_id", F.lit(1).alias("band"), F.col(key1))
+    )
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bk") == F.col("b.bk"))
+            & (F.col("a.media_id") < F.col("b.media_id")),
+        )
+        .select(
+            F.col("a.media_id").alias("id_a"),
+            F.col("b.media_id").alias("id_b"),
+        )
+        .distinct()
+    )
+
+
 @query("dedup_image_bands", oracle=_IMG_DEDUP_ORACLE)
 def dedup_image_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs over REAL decoded BMPs: pack the
@@ -234,25 +258,7 @@ def dedup_image_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # can only add pre-verify candidates, never change the output.
     ch = _img_feats(ev).localCheckpoint(eager=True)
 
-    bands = ch.select(
-        "media_id", F.lit(0).alias("band"), F.col("bk0").alias("bk")
-    ).unionAll(
-        ch.select("media_id", F.lit(1).alias("band"), F.col("bk1"))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = band_candidates(ch, "bk0", "bk1")
     ca = ch.select(
         F.col("media_id").alias("id_a"), F.col("channels").alias("_ca")
     )

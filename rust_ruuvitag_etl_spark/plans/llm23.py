@@ -43,6 +43,7 @@ from ..operators import similarity as sim
 from ..operators.dedup import spread
 from ..sources import load
 from .llm import _SIM_ORACLE, _warehouse_dir, sf_slug
+from .llm22 import band_candidates
 from .registry import query
 
 # --- aHash perceptual image dedup ---------------------------------------------
@@ -280,25 +281,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # one decode; feeds bands + verify
     )
-    bands = feats.select(
-        "media_id", F.lit(0).alias("band"), F.col("b0").alias("bk")
-    ).unionAll(
-        feats.select("media_id", F.lit(1).alias("band"), F.col("b1"))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = band_candidates(feats, "b0", "b1")
     fa = feats.select(
         F.col("media_id").alias("id_a"),
         F.col("b0").alias("_b0a"),

@@ -57,7 +57,7 @@ from ..functions import text as tf
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..sources import load
-from ._dedup_oracles import BANDS, N_HASHES, ROWS_PER_BAND
+from ._dedup_oracles import BANDS, N_HASHES, _JACCARD_CTES, minhash_band_ctes
 from .llm12 import _SPLIT_EXPR_SQL, _TRAIN_LT, _VAL_LT, _bucket
 from .registry import query
 
@@ -67,23 +67,6 @@ _REFRESH_CENTROIDS = 8
 
 
 def _refresh_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN({tf.rehash_sql('h', i)}) AS m{i}" for i in range(N_HASHES)
-    )
-    band_selects = "\n    UNION ALL\n    ".join(
-        "SELECT doc_id, {b} AS band, {bh} AS bh FROM sig".format(
-            b=b,
-            bh=tf.h60_sql(
-                "concat_ws(',', "
-                + ", ".join(
-                    f"CAST(m{b * ROWS_PER_BAND + r} AS VARCHAR)"
-                    for r in range(ROWS_PER_BAND)
-                )
-                + ")"
-            ),
-        )
-        for b in range(BANDS)
-    )
     split_case = f"""CASE WHEN ({_SPLIT_EXPR_SQL}) < {_TRAIN_LT} THEN 'train'
                 WHEN ({_SPLIT_EXPR_SQL}) < {_VAL_LT} THEN 'validation'
                 ELSE 'test' END"""
@@ -111,21 +94,7 @@ corp AS (
     WHERE p.doc_id IN (SELECT doc_id FROM d1surv)
        OR p.doc_id IN (SELECT doc_id FROM d2)
 ),
-toks AS (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-    FROM corp WHERE trim(text) <> ''
-),
-sh AS (
-    SELECT doc_id,
-           unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-    FROM toks
-),
-h AS (SELECT doc_id, {tf.h60_sql('s')} AS h FROM sh),
-sig AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
-buckets AS (
-    {band_selects}
-),
+{minhash_band_ctes('corp')},
 cand AS (
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM buckets a
@@ -134,21 +103,7 @@ cand AS (
     JOIN d1surv s ON s.doc_id = a.doc_id
     JOIN d2 t ON t.doc_id = b.doc_id
 ),
-shl AS (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sarr
-    FROM toks
-),
-jac AS (
-    SELECT c.id_a, c.id_b,
-           ROUND(CAST(len(list_intersect(a.sarr, b.sarr)) AS DOUBLE)
-                 / (len(a.sarr) + len(b.sarr)
-                    - len(list_intersect(a.sarr, b.sarr))), 4) AS jaccard
-    FROM cand c
-    JOIN shl a ON a.doc_id = c.id_a
-    JOIN shl b ON b.doc_id = c.id_b
-),
+{_JACCARD_CTES},
 near AS (
     SELECT DISTINCT id_b AS doc_id FROM jac
     WHERE jaccard >= {_REFRESH_JACCARD}

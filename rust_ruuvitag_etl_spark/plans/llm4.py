@@ -142,10 +142,9 @@ def text_tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_bm25_ranking",
-    oracle="""
-WITH d AS (
+# BM25 (k1=1.2, b=0.75) per-doc scores for the query {data, join,
+# filter}: the oracle CTEs d .. scored, shared with retrieval_rrf_fusion.
+BM25_CTES = """d AS (
     SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
     FROM documents WHERE trim(text) <> ''
 ),
@@ -179,7 +178,14 @@ scored AS (
            + COALESCE(MAX(CASE WHEN token = 'filter' THEN part END), 0.0)
                AS score
     FROM parts GROUP BY doc_id
-)
+)"""
+
+
+@query(
+    "text_bm25_ranking",
+    oracle="WITH "
+    + BM25_CTES
+    + """
 SELECT doc_id, ROUND(score, 6) AS bm25,
        CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INTEGER) AS rank
 FROM scored

@@ -188,9 +188,7 @@ def training_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_incremental_delta",
-    oracle="""
+DELTA_DEDUP_ORACLE = """
 WITH fp AS (
     SELECT doc_id,
            md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS f
@@ -204,8 +202,33 @@ delta AS (SELECT doc_id, f FROM fp WHERE doc_id % 10 = 0)
 SELECT d.doc_id, e.canonical_id,
        (e.canonical_id IS NOT NULL) AS is_dup
 FROM delta d LEFT JOIN existing e USING (f)
-""",
-)
+"""
+
+
+def confirm_delta(corpus: DataFrame, delta: DataFrame) -> DataFrame:
+    """The exact confirm step of incremental dedup: each ``delta``
+    (doc_id, f) row with its canonical ``corpus`` doc_id — the lowest
+    doc_id sharing its fingerprint — or null, plus ``is_dup``. The delta
+    is the broadcast side of both joins; the corpus is never shuffled."""
+    matches = (
+        corpus.join(
+            F.broadcast(delta.select(F.col("doc_id").alias("_did"), "f")), "f"
+        )
+        .groupBy("_did")
+        .agg(F.min("doc_id").alias("canonical_id"))
+    )
+    return delta.join(
+        F.broadcast(matches.withColumnRenamed("_did", "doc_id")),
+        "doc_id",
+        "left",
+    ).select(
+        "doc_id",
+        "canonical_id",
+        F.col("canonical_id").isNotNull().alias("is_dup"),
+    )
+
+
+@query("dedup_incremental_delta", oracle=DELTA_DEDUP_ORACLE)
 def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL dedup — the re-crawl shape: a small delta batch
     (docs with ``doc_id % 10 == 0`` stand in for today's crawl) checked
@@ -225,19 +248,4 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     existing = fp.filter(F.col("doc_id") % 10 != 0)
     delta = fp.filter(F.col("doc_id") % 10 == 0)
-    matches = (
-        existing.join(
-            F.broadcast(delta.select(F.col("doc_id").alias("_did"), "f")), "f"
-        )
-        .groupBy("_did")
-        .agg(F.min("doc_id").alias("canonical_id"))
-    )
-    return delta.join(
-        F.broadcast(matches.withColumnRenamed("_did", "doc_id")),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id",
-        "canonical_id",
-        F.col("canonical_id").isNotNull().alias("is_dup"),
-    )
+    return confirm_delta(existing, delta)

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from ..operators import multimodal as mm
 from ..operators.dedup import spread
 from ..sources import load
+from ..streaming.pipeline import run_available_now
+from .llm5 import DELTA_DEDUP_ORACLE, confirm_delta
 from .registry import query
 
 # Segment width for "line"-level dedup. The driver corpus is
@@ -278,24 +280,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming near-dup twin ------------------------------------------------
 
 
-@query(
-    "streaming_dedup_delta",
-    oracle="""
-WITH fp AS (
-    SELECT doc_id,
-           md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS f
-    FROM documents
-),
-existing AS (
-    SELECT f, MIN(doc_id) AS canonical_id
-    FROM fp WHERE doc_id % 10 <> 0 GROUP BY f
-),
-delta AS (SELECT doc_id, f FROM fp WHERE doc_id % 10 = 0)
-SELECT d.doc_id, e.canonical_id,
-       (e.canonical_id IS NOT NULL) AS is_dup
-FROM delta d LEFT JOIN existing e USING (f)
-""",
-)
+@query("streaming_dedup_delta", oracle=DELTA_DEDUP_ORACLE)
 def streaming_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING twin of dedup_incremental_delta (plans/llm5.py) —
     the one LLM-pipeline operator family that had no streaming form in
@@ -341,15 +326,7 @@ def streaming_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("canonical_id").isNotNull().alias("is_dup"),
     )
     name = "sdd_streaming_dedup_delta"  # fixed: see streaming_windowed_means
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_available_now(joined, name, "append")
 
 
 # --- bloom-pruned incremental dedup ----------------------------------------
@@ -362,24 +339,7 @@ _BLOOM_BITS = _BLOOM_WORDS * 64
 _BLOOM_K = 3
 
 
-@query(
-    "dedup_bloom_delta",
-    oracle="""
-WITH fp AS (
-    SELECT doc_id,
-           md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS f
-    FROM documents
-),
-existing AS (
-    SELECT f, MIN(doc_id) AS canonical_id
-    FROM fp WHERE doc_id % 10 <> 0 GROUP BY f
-),
-delta AS (SELECT doc_id, f FROM fp WHERE doc_id % 10 = 0)
-SELECT d.doc_id, e.canonical_id,
-       (e.canonical_id IS NOT NULL) AS is_dup
-FROM delta d LEFT JOIN existing e USING (f)
-""",
-)
+@query("dedup_bloom_delta", oracle=DELTA_DEDUP_ORACLE)
 def dedup_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental dedup with the BLOOM-PRUNED corpus scan that
     dedup_incremental_delta's docstring promises for production — made
@@ -479,22 +439,7 @@ def dedup_bloom_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr(probe_ok))
         .select("doc_id", "f")
     )
-    matches = (
-        survivors.join(
-            F.broadcast(delta.select(F.col("doc_id").alias("_did"), "f")), "f"
-        )
-        .groupBy("_did")
-        .agg(F.min("doc_id").alias("canonical_id"))
-    )
-    return delta.join(
-        F.broadcast(matches.withColumnRenamed("_did", "doc_id")),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id",
-        "canonical_id",
-        F.col("canonical_id").isNotNull().alias("is_dup"),
-    )
+    return confirm_delta(survivors, delta)
 
 
 # --- real compressed codec: GIF --------------------------------------------

@@ -72,10 +72,11 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "scd2_user_event_segments",
-    oracle="""
-WITH ordered AS (
+# Gaps-and-islands over each user's time-ordered events: seg_no numbers
+# the runs of consecutive same-type events. The oracle CTEs and the Spark
+# build of the same numbering, shared by the SCD2 history and the
+# point-in-time join against it.
+_SEG_CTES = """WITH ordered AS (
     SELECT user_id, event_type, ts, event_id,
            LAG(event_type) OVER w AS prev_type
     FROM events
@@ -92,7 +93,36 @@ seg AS (
            SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
                           ROWS UNBOUNDED PRECEDING) AS seg_no
     FROM flagged
-),
+)"""
+
+
+def _segments(ev: DataFrame) -> DataFrame:
+    """events + ``chg`` (1 where the type differs from the previous
+    event's) + ``seg_no`` (its running sum); ties break by event_id."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    flagged = ev.select(
+        "user_id",
+        "event_type",
+        "ts",
+        "event_id",
+        F.when(
+            F.lag("event_type").over(w).isNull()
+            | (F.lag("event_type").over(w) != F.col("event_type")),
+            1,
+        )
+        .otherwise(0)
+        .alias("chg"),
+    )
+    return flagged.withColumn(
+        "seg_no",
+        F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
+
+@query(
+    "scd2_user_event_segments",
+    oracle=f"""
+{_SEG_CTES},
 spans AS (
     SELECT user_id, event_type, seg_no,
            MIN(ts) AS valid_from,
@@ -119,24 +149,7 @@ def scd2_user_event_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties break by event_id so segment boundaries are
     partition-order independent."""
     ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "event_type",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("event_type").over(w).isNull()
-            | (F.lag("event_type").over(w) != F.col("event_type")),
-            1,
-        )
-        .otherwise(0)
-        .alias("chg"),
-    )
-    seg = flagged.withColumn(
-        "seg_no",
-        F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    seg = _segments(ev)
     spans = seg.groupBy("user_id", "event_type", "seg_no").agg(
         F.min("ts").alias("valid_from"),
         F.count(F.lit(1)).alias("n_events"),
@@ -367,25 +380,8 @@ def ivm_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scd2_point_in_time_join",
-    oracle="""
-WITH ordered AS (
-    SELECT user_id, event_type, ts, event_id,
-           LAG(event_type) OVER w AS prev_type
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-flagged AS (
-    SELECT user_id, event_type, ts, event_id,
-           CASE WHEN prev_type IS NULL OR prev_type <> event_type
-                THEN 1 ELSE 0 END AS chg
-    FROM ordered
-),
-seg AS (
-    SELECT user_id, event_type, ts, event_id,
-           SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS seg_no
-    FROM flagged
-),
+    oracle=f"""
+{_SEG_CTES},
 spans AS (
     SELECT user_id, event_type, seg_no, MIN(ts) AS valid_from
     FROM seg GROUP BY user_id, event_type, seg_no
@@ -435,24 +431,7 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     its three window functions. Reference analog: the registry lookup
     of ``utils.rs:83-87``, made time-correct."""
     ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "event_type",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("event_type").over(w).isNull()
-            | (F.lag("event_type").over(w) != F.col("event_type")),
-            1,
-        )
-        .otherwise(0)
-        .alias("chg"),
-    )
-    seg = flagged.withColumn(
-        "seg_no",
-        F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    seg = _segments(ev)
     spans = seg.groupBy("user_id", "event_type", "seg_no").agg(
         F.min("ts").alias("valid_from")
     )

@@ -23,13 +23,13 @@ from .registry import query
 # --- shared building block: events as ruuvi-shaped readings ---------------
 
 
-def _readings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → (sensor=user_id, ts, metric=value, mc=event_id%256).
+def _readings(ev: DataFrame) -> DataFrame:
+    """events (a table or a stream) → (sensor=user_id, ts,
+    metric=value, mc=event_id%256).
 
     The value-IS-NOT-NULL filter is the B3 validation predicate; the
     event_id tie-breaker gives deterministic ordering everywhere.
     """
-    ev = load(spark, sf_dir, "events")
     return ev.filter(F.col("value").isNotNull()).select(
         "user_id",
         "ts",
@@ -65,15 +65,12 @@ FROM agg a LEFT JOIN customer c ON c.c_custkey = a.user_id
 """
 
 
-@query("ruuvi_flagship", oracle=FLAGSHIP_ORACLE)
-def ruuvi_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole reference dataflow (``/root/reference/src/main.rs:66-185``)
-    on events: validate → 30-min tumbling window per sensor → mean +
-    count + wrapped first/last movement delta (``utils.rs:37-95``) →
-    broadcast name enrichment with 'Unknown' default (``utils.rs:83-87``).
-
-    One shuffle (the window groupBy); enrichment is broadcast."""
-    r = _readings(spark, sf_dir)
+def flagship(ev: DataFrame, customer: DataFrame) -> DataFrame:
+    """The flagship dataflow over an events frame, batch or stream
+    (``streaming_ruuvi_flagship`` drains the same plan from a file
+    stream): readings → 30-min window aggregate → broadcast name
+    enrichment against ``customer``."""
+    r = _readings(ev)
     agg = (
         r.groupBy("user_id", F.window("ts", "30 minutes").alias("w"))
         .agg(
@@ -96,9 +93,7 @@ def ruuvi_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             "movement_delta",
         )
     )
-    cust = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_name")
-    )
+    cust = customer.select(F.col("c_custkey").alias("user_id"), F.col("c_name"))
     return agg.join(F.broadcast(cust), "user_id", "left").select(
         "user_id",
         "window_start",
@@ -107,6 +102,17 @@ def ruuvi_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "movement_delta",
         F.coalesce("c_name", F.lit("Unknown")).alias("name"),
     )
+
+
+@query("ruuvi_flagship", oracle=FLAGSHIP_ORACLE)
+def ruuvi_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The whole reference dataflow (``/root/reference/src/main.rs:66-185``)
+    on events: validate → 30-min tumbling window per sensor → mean +
+    count + wrapped first/last movement delta (``utils.rs:37-95``) →
+    broadcast name enrichment with 'Unknown' default (``utils.rs:83-87``).
+
+    One shuffle (the window groupBy); enrichment is broadcast."""
+    return flagship(load(spark, sf_dir, "events"), load(spark, sf_dir, "customer"))
 
 
 @query(
@@ -127,7 +133,7 @@ def ruuvi_window_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+A1+A2: tumbling 30-min window, per-sensor mean/min/max/count
     (reference ``utils.rs:49-80``; W2 normalized to event-time window
     start per SURVEY §4.2.3)."""
-    r = _readings(spark, sf_dir)
+    r = _readings(load(spark, sf_dir, "events"))
     return (
         r.groupBy("user_id", F.window("ts", "30 minutes").alias("w"))
         .agg(
@@ -168,7 +174,7 @@ def ruuvi_movement_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: order-deterministic first/last wrapping delta
     (``utils.rs:64-71`` wrapping_sub → pmod; §4.2.1-2: min_by/max_by on a
     unique order key replaces Rust insertion order)."""
-    r = _readings(spark, sf_dir)
+    r = _readings(load(spark, sf_dir, "events"))
     return (
         r.groupBy("user_id", F.window("ts", "30 minutes").alias("w"))
         .agg(
@@ -385,7 +391,7 @@ def ruuvi_movement_delta_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation — proving the imperative and algebraic forms agree."""
     import pandas as pd
 
-    r = _readings(spark, sf_dir).withColumn(
+    r = _readings(load(spark, sf_dir, "events")).withColumn(
         "window_start",
         F.timestamp_seconds(F.floor(F.unix_timestamp("ts") / 1800) * 1800),
     )

@@ -18,28 +18,18 @@ from pyspark.sql import functions as F
 
 from ..sources import load
 from ..sources.tables import events_read_schema, events_ts_expr
+from ..streaming.pipeline import interval_join_streams, run_available_now
 from .registry import query
-from .ruuvi import FLAGSHIP_ORACLE
-from .timeseries import SLIDING_WINDOW_ORACLE
-
-
-def _run_memory_sink(
-    spark: SparkSession, df: DataFrame, name: str, mode: str
-) -> DataFrame:
-    """Run ``df`` as an availableNow job into a memory sink named
-    ``name`` and return the result table. Every stateful operator
-    (windowed agg, dedup, session merge, stream-stream join) creates one
-    state store per shuffle partition, so the store count follows the
-    session (``session.size_shuffle_partitions``: one per task slot)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+from .ruuvi import FLAGSHIP_ORACLE, flagship
+from .timeseries import (
+    HW_CTES,
+    OHLC_ORACLE,
+    SESSION_ORACLE,
+    SLIDING_WINDOW_ORACLE,
+    ohlc_rollup,
+    sessions,
+    sliding_window_sums,
+)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,7 +92,7 @@ def streaming_windowed_means(spark: SparkSession, sf_dir: str) -> DataFrame:
             "samples",
         )
     )
-    return _run_memory_sink(spark, agg, name, "complete")
+    return run_available_now(agg, name, "complete")
 
 
 @query(
@@ -127,7 +117,7 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
     )
-    return _run_memory_sink(spark, dedup, name, "complete")
+    return run_available_now(dedup, name, "complete")
 
 
 @query(
@@ -187,7 +177,7 @@ def streaming_stateful_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     monitored = sensor_monitor_stream(readings)
     name = "ssm_streaming_stateful_monitor"  # fixed: see streaming_windowed_means
-    t = _run_memory_sink(spark, monitored, name, "update")
+    t = run_available_now(monitored, name, "update")
     w = Window.partitionBy("sensor_mac").orderBy(F.desc("total_readings"))
     return (
         t
@@ -205,87 +195,17 @@ def streaming_ruuvi_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min_by/max_by are algebraic, so they stream) → broadcast
     stream-static enrichment against the registry table with 'Unknown'
     default → sink. Diffed against the SAME oracle as the batch
-    ruuvi_flagship, so batch plan, streaming plan, and DuckDB all agree
-    on the reference's end-to-end semantics
-    (``/root/reference/src/main.rs:66-185``)."""
-    ev = _events_stream(spark, sf_dir)
-    readings = ev.filter(F.col("value").isNotNull()).select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.pmod(F.col("event_id"), F.lit(256)).cast("int").alias("mc"),
-    )
-    agg = (
-        readings.groupBy("user_id", F.window("ts", "30 minutes").alias("w"))
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-            F.count(F.lit(1)).alias("samples"),
-            F.pmod(
-                F.max_by("mc", "event_id") - F.min_by("mc", "event_id"), F.lit(256)
-            )
-            .cast("int")
-            .alias("movement_delta"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("window_start"),
-            "avg_value",
-            "samples",
-            "movement_delta",
-        )
-    )
-    names = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_name").alias("_nm")
-    )
-    enriched = agg.join(F.broadcast(names), "user_id", "left").select(
-        "user_id",
-        "window_start",
-        "avg_value",
-        "samples",
-        "movement_delta",
-        F.coalesce("_nm", F.lit("Unknown")).alias("name"),
+    ruuvi_flagship and built by the same ``ruuvi.flagship`` plan, so
+    batch plan, streaming plan, and DuckDB all agree on the reference's
+    end-to-end semantics (``/root/reference/src/main.rs:66-185``)."""
+    enriched = flagship(
+        _events_stream(spark, sf_dir), load(spark, sf_dir, "customer")
     )
     name = "srf_streaming_ruuvi_flagship"  # fixed: see streaming_windowed_means
-    return _run_memory_sink(spark, enriched, name, "complete")
+    return run_available_now(enriched, name, "complete")
 
 
-@query(
-    "streaming_session_windows",
-    oracle="""
-WITH ordered AS (
-    SELECT user_id, ts, event_id,
-           LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-    FROM events
-),
-flagged AS (
-    SELECT user_id, ts, event_id,
-           -- strict >: Spark MERGES an event arriving exactly at
-           -- prev_ts + gap into the same session (measured and pinned
-           -- by tests/test_streaming.py::TestSessionBoundary), so a
-           -- new session opens only when the gap EXCEEDS the duration
-           CASE WHEN prev_ts IS NULL
-                     OR date_diff('millisecond', prev_ts, ts) > 300000
-                THEN 1 ELSE 0 END AS new_session
-    FROM ordered
-),
-numbered AS (
-    SELECT user_id, ts, event_id,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-    FROM flagged
-)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 5 MINUTES AS session_end,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM numbered
-GROUP BY user_id, session_no
-""",
-)
+@query("streaming_session_windows", oracle=SESSION_ORACLE)
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows executed by Structured Streaming: 5-minute-gap
     sessions merge in streaming state across micro-batches (the hardest
@@ -295,18 +215,27 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. Third stream↔batch agreement proof alongside the tumbling
     window and the interval join."""
     name = "ssw_streaming_session_windows"  # fixed: see streaming_windowed_means
-    agg = (
-        _events_stream(spark, sf_dir)
-        .groupBy("user_id", F.session_window("ts", "5 minutes").alias("s"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
+    agg = sessions(_events_stream(spark, sf_dir))
+    return run_available_now(agg, name, "complete")
+
+
+def _purchase_view_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """(purchase_id, view_id): each purchase stream row joined to the
+    same user's view stream rows of the preceding hour, under 2-hour
+    watermarks on both sides (``interval_join_streams``)."""
+
+    def typed(event_type: str, id_alias: str) -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select("user_id", "ts", F.col("event_id").alias(id_alias))
         )
-    )
-    return _run_memory_sink(spark, agg, name, "complete")
+
+    return interval_join_streams(
+        typed("purchase", "purchase_id"), typed("view", "view_id"),
+        key="user_id", ts_col="ts", max_gap="1 hour", watermark="2 hours",
+        how=how,
+    ).select("purchase_id", "view_id")
 
 
 @query(
@@ -331,24 +260,9 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer. The strongest stateful-streaming parity check the engine
     exposes: two unsynchronized sources, keyed state, and a range
     predicate in one query."""
-    from ..streaming.pipeline import interval_join_streams
-
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", F.col("event_id").alias("purchase_id"))
-    )
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", "ts", F.col("event_id").alias("view_id"))
-    )
-    joined = interval_join_streams(
-        purchases, views, key="user_id", ts_col="ts",
-        max_gap="1 hour", watermark="2 hours",
-    ).select("purchase_id", "view_id")
     name = "sij_streaming_interval_join"  # fixed: see streaming_windowed_means
-    return _run_memory_sink(spark, joined, name, "append")
+    joined = _purchase_view_join(spark, sf_dir, "inner")
+    return run_available_now(joined, name, "append")
 
 
 @query(
@@ -399,24 +313,8 @@ def streaming_interval_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: identical state bounds to the inner twin — dual
     watermarks evict both stores; the outer path adds only a
     matched-bit per buffered left row."""
-    from ..streaming.pipeline import interval_join_streams
-
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", F.col("event_id").alias("purchase_id"))
-    )
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", "ts", F.col("event_id").alias("view_id"))
-    )
-    joined = interval_join_streams(
-        purchases, views, key="user_id", ts_col="ts",
-        max_gap="1 hour", watermark="2 hours", how="left_outer",
-    ).select("purchase_id", "view_id")
-    name = "sijl_streaming_interval_join_left"
-    return _run_memory_sink(spark, joined, name, "append")
+    joined = _purchase_view_join(spark, sf_dir, "left_outer")
+    return run_available_now(joined, "sijl_streaming_interval_join_left", "append")
 
 
 @query("streaming_sliding_window", oracle=SLIDING_WINDOW_ORACLE)
@@ -430,21 +328,8 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin `sliding_window_user_value`, proving batch and streaming
     window assignment agree row-for-row."""
     name = "ssl_streaming_sliding_window"  # fixed: see streaming_windowed_means
-    agg = (
-        _events_stream(spark, sf_dir)
-        .groupBy(
-            "user_id", F.window("ts", "30 minutes", "15 minutes").alias("w")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            "user_id", F.col("w.start").alias("window_start"), "n", "sum_value"
-        )
-    )
-    return _run_memory_sink(spark, agg, name, "complete")
+    agg = sliding_window_sums(_events_stream(spark, sf_dir))
+    return run_available_now(agg, name, "complete")
 
 
 @query(
@@ -479,72 +364,27 @@ def streaming_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("total_value"), F.asc("user_id"))
         .limit(10)
     )
-    return _run_memory_sink(spark, agg, name, "complete")
+    return run_available_now(agg, name, "complete")
 
 
-@query(
-    "streaming_ohlc_rollup",
-    oracle="""
-WITH ranked AS (
-    SELECT event_type,
-           date_trunc('hour', ts) AS bucket,
-           value, ts, event_id,
-           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                              ORDER BY ts, event_id) AS rn_open,
-           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                              ORDER BY ts DESC, event_id DESC) AS rn_close
-    FROM events
-)
-SELECT event_type, bucket,
-       MAX(CASE WHEN rn_open = 1 THEN value END) AS open,
-       MAX(value) AS high,
-       MIN(value) AS low,
-       MAX(CASE WHEN rn_close = 1 THEN value END) AS close,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS volume
-FROM ranked
-GROUP BY event_type, bucket
-""",
-)
+@query("streaming_ohlc_rollup", oracle=OHLC_ORACLE)
 def streaming_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The OHLC downsample (plans/analytics.py) executed as a Structured
-    Streaming CONTINUOUS AGGREGATE — the hypertable-rollup /
-    materialized-view pattern: event-time 1-hour tumbling windows whose
-    open/close ride min_by/max_by on the (ts, event_id) struct INSIDE
-    streaming state, so the rollup needs no sort and no retraction
-    regardless of event order across micro-batches; volume accumulates
-    in exact decimal. availableNow drains the bounded source and the
-    final state is diffed against the batch gaps-free SQL oracle —
-    identical answer to the batch plan, row for row. At scale the same
-    query runs unbounded with a watermark to expire closed windows
+    """The OHLC downsample (``timeseries.ohlc_rollup``, the plan of
+    ``timeseries_ohlc_downsample``) executed as a Structured Streaming
+    CONTINUOUS AGGREGATE — the hypertable-rollup / materialized-view
+    pattern: per (type, hour bucket) the open/close ride min_by/max_by
+    on the (ts, event_id) struct INSIDE streaming state, so the rollup
+    needs no sort and no retraction regardless of event order across
+    micro-batches; volume accumulates in exact decimal. Complete mode
+    accepts the batch ``date_trunc`` grouping as is; availableNow
+    drains the bounded source and the final state is diffed against
+    the batch oracle — identical answer to the batch plan, row for row.
+    An unbounded run would group by ``window(ts, '1 hour')`` under a
+    watermark instead, so closed hours leave the state store
     (streaming/pipeline.py shows the watermark discipline)."""
     name = "sor_streaming_ohlc_rollup"  # fixed: see streaming_windowed_means
-    order = F.struct(F.col("ts"), F.col("event_id"))
-    agg = (
-        _events_stream(spark, sf_dir)
-        .groupBy("event_type", F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.min_by("value", order).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", order).alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("volume"),
-        )
-        .select(
-            "event_type",
-            F.col("w.start").alias("bucket"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_events",
-            "volume",
-        )
-    )
-    return _run_memory_sink(spark, agg, name, "complete")
+    agg = ohlc_rollup(_events_stream(spark, sf_dir))
+    return run_available_now(agg, name, "complete")
 
 
 _EWMA_LAGS = ", ".join(
@@ -595,7 +435,7 @@ def streaming_ewma_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "ts", "value"
     )
     name = "sem_streaming_ewma_monitor"
-    return _run_memory_sink(spark, ewma_stream(ev), name, "append")
+    return run_available_now(ewma_stream(ev), name, "append")
 
 
 _LATE_DELAY_MIN = 10
@@ -743,7 +583,7 @@ def streaming_late_data_discard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "sld_streaming_late_data_discard"
-    t = _run_memory_sink(spark, agg, name, "append")
+    t = run_available_now(agg, name, "append")
     # The memory-sink table owns the results; the staged files are
     # fully consumed once the availableNow job terminates.
     shutil.rmtree(root, ignore_errors=True)
@@ -784,7 +624,7 @@ def streaming_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day_bitmap")
     )
     name = "sbr_streaming_bitmap_rollup"
-    return _run_memory_sink(spark, agg, name, "complete").select(
+    return run_available_now(agg, name, "complete").select(
         "user_id",
         "month",
         "day_bitmap",
@@ -824,7 +664,7 @@ def streaming_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "event_id", "value"
     )
     name = "ssm_streaming_stateful_topk"  # fixed: see streaming_windowed_means
-    t = _run_memory_sink(spark, topk_stream(readings), name, "update")
+    t = run_available_now(topk_stream(readings), name, "update")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
     return (
         t
@@ -836,39 +676,10 @@ def streaming_stateful_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_holt_winters",
-    oracle="""
-WITH RECURSIVE
-b AS (
-    SELECT event_type, date_trunc('hour', ts) AS bts,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS y
-    FROM events GROUP BY 1, 2
-),
-o AS (
-    SELECT event_type, bts, y,
-           ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bts) AS i
-    FROM b
-),
-r AS (
-    SELECT event_type, i, bts, y,
-           y AS level, CAST(0 AS BIGINT) AS trend,
-           [CAST(0 AS BIGINT) for x in range(24)] AS sea
-    FROM o WHERE i = 1
-    UNION ALL
-    SELECT o.event_type, o.i, o.bts, o.y,
-           CAST(FLOOR((o.y - r.sea[1] + r.level + r.trend) / 2.0)
-                AS BIGINT),
-           CAST(FLOOR((CAST(FLOOR((o.y - r.sea[1] + r.level + r.trend)
-                                  / 2.0) AS BIGINT)
-                       - r.level + r.trend) / 2.0) AS BIGINT),
-           r.sea[2:24] ||
-             [CAST(FLOOR((o.y
-                          - CAST(FLOOR((o.y - r.sea[1] + r.level + r.trend)
-                                       / 2.0) AS BIGINT)
-                          + r.sea[1]) / 2.0) AS BIGINT)]
-    FROM r JOIN o ON o.event_type = r.event_type AND o.i = r.i + 1
-)
+    oracle=HW_CTES
+    + """
 SELECT event_type,
-       CAST(epoch(bts) AS BIGINT) AS bucket_ts,
+       CAST(epoch(bucket_ts) AS BIGINT) AS bucket_ts,
        y, CAST(level + trend + sea[1] AS BIGINT) AS fc
 FROM r
 """,
@@ -898,7 +709,7 @@ def streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
     )
     name = "shw_streaming_holt_winters"  # fixed: see streaming_windowed_means
-    return _run_memory_sink(spark, hw_stream(ev), name, "append")
+    return run_available_now(hw_stream(ev), name, "append")
 
 
 from ..streaming.stateful import (  # noqa: E402  (module tail: keeps the
@@ -963,7 +774,7 @@ def streaming_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import cusum_stream
 
     name = "sca_streaming_cusum_alarm"  # fixed: see streaming_windowed_means
-    t = _run_memory_sink(spark, cusum_stream(events), name, "update")
+    t = run_available_now(cusum_stream(events), name, "update")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (
         t.withColumn("_rn", F.row_number().over(w))

@@ -72,9 +72,7 @@ def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sessionize_events",
-    oracle="""
+SESSION_ORACLE = """
 WITH ordered AS (
     SELECT user_id, ts, event_id,
            LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -104,14 +102,13 @@ SELECT user_id,
        CAST(COUNT(*) AS BIGINT) AS n_events
 FROM numbered
 GROUP BY user_id, session_no
-""",
-)
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization: 5-minute-gap session windows per user via
-    the native session_window operator (one shuffle; state-free in
-    batch). Oracle is the classic gaps-and-islands SQL; Spark's
-    session_window end = last event + gap, mirrored in the oracle."""
-    ev = load(spark, sf_dir, "events")
+"""
+
+
+def sessions(ev: DataFrame) -> DataFrame:
+    """5-minute-gap session windows per user over an events frame,
+    batch or stream (``streaming_session_windows`` drains the same plan
+    from a file stream)."""
     return (
         ev.groupBy("user_id", F.session_window("ts", "5 minutes").alias("s"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -122,6 +119,15 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
+
+
+@query("sessionize_events", oracle=SESSION_ORACLE)
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch sessionization: 5-minute-gap session windows per user via
+    the native session_window operator (one shuffle; state-free in
+    batch). Oracle is the classic gaps-and-islands SQL; Spark's
+    session_window end = last event + gap, mirrored in the oracle."""
+    return sessions(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -163,17 +169,60 @@ GROUP BY user_id, window_start
 """
 
 
-@query("sliding_window_user_value", oracle=SLIDING_WINDOW_ORACLE)
-def sliding_window_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding (hopping) event-time window, 30 min wide sliding by
-    15 min: every event lands in exactly two windows (W1 generalized —
-    the reference only tumbles, ``/root/reference/src/main.rs:54``).
-    Spark expands the window assignment in-row (a narrow explode of 2
-    struct values), then one shuffle keyed by (user, window_start); the
-    oracle states the same assignment arithmetic with an explicit
-    unnest of the two bucket starts. Sums run in decimal so window
-    totals are partition-order independent."""
-    ev = load(spark, sf_dir, "events")
+OHLC_ORACLE = """
+WITH ranked AS (
+    SELECT event_type,
+           date_trunc('hour', ts) AS bucket,
+           value, ts, event_id,
+           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+                              ORDER BY ts, event_id) AS rn_open,
+           ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+                              ORDER BY ts DESC, event_id DESC) AS rn_close
+    FROM events
+)
+SELECT event_type, bucket,
+       MAX(CASE WHEN rn_open = 1 THEN value END) AS open,
+       MAX(value) AS high,
+       MIN(value) AS low,
+       MAX(CASE WHEN rn_close = 1 THEN value END) AS close,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS volume
+FROM ranked
+GROUP BY event_type, bucket
+"""
+
+
+def ohlc_rollup(ev: DataFrame) -> DataFrame:
+    """Per (event_type, hour): open/high/low/close, count and a
+    decimal-exact volume over an events frame, batch or stream
+    (``timeseries_ohlc_downsample`` and ``streaming_ohlc_rollup``)."""
+    order = F.struct(F.col("ts"), F.col("event_id"))
+    return (
+        ev.select(
+            "event_type",
+            F.date_trunc("hour", "ts").alias("bucket"),
+            "value",
+            "ts",
+            "event_id",
+        )
+        .groupBy("event_type", "bucket")
+        .agg(
+            F.min_by("value", order).alias("open"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.max_by("value", order).alias("close"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("double")
+            .alias("volume"),
+        )
+    )
+
+
+def sliding_window_sums(ev: DataFrame) -> DataFrame:
+    """Per-user event count and decimal-exact value sum in 30-minute
+    windows sliding by 15 minutes, over an events frame, batch or
+    stream (``streaming_sliding_window`` drains the same plan)."""
     return (
         ev.groupBy(
             "user_id", F.window("ts", "30 minutes", "15 minutes").alias("w")
@@ -190,6 +239,19 @@ def sliding_window_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
+
+
+@query("sliding_window_user_value", oracle=SLIDING_WINDOW_ORACLE)
+def sliding_window_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding (hopping) event-time window, 30 min wide sliding by
+    15 min: every event lands in exactly two windows (W1 generalized —
+    the reference only tumbles, ``/root/reference/src/main.rs:54``).
+    Spark expands the window assignment in-row (a narrow explode of 2
+    struct values), then one shuffle keyed by (user, window_start); the
+    oracle states the same assignment arithmetic with an explicit
+    unnest of the two bucket starts. Sums run in decimal so window
+    totals are partition-order independent."""
+    return sliding_window_sums(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -517,7 +579,10 @@ def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_HW_ORACLE = """
+# The exact integer Holt-Winters fold as a recursive CTE over the hourly
+# series; r carries (level, trend, sea) per hour. Shared by the batch and
+# the streaming oracle.
+HW_CTES = """
 WITH RECURSIVE
 b AS (
     SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
@@ -549,6 +614,8 @@ r AS (
                           + r.sea[1]) / 2.0) AS BIGINT)]
     FROM r JOIN o ON o.event_type = r.event_type AND o.i = r.i + 1
 )
+"""
+_HW_ORACLE = HW_CTES + """
 SELECT event_type, bucket_ts,
        ROUND(CAST(y AS DOUBLE) / 1000000, 6) AS actual,
        ROUND(CAST(level + trend + sea[1] AS DOUBLE) / 1000000, 6)

@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.ruuvi_pipeline import METRIC_COLS
-from ..functions import ruuvi as rf
+from ..operators.ruuvi_pipeline import window_aggregate
 
 
 def read_readings_stream(
@@ -42,38 +41,12 @@ def read_readings_stream(
     )
 
 
-def windowed_averages_stream(
-    readings: DataFrame,
-    window: str = "30 minutes",
-    watermark: str = "10 minutes",
-    key: str = "sensor_mac",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """W1 upgraded: event-time tumbling window with watermark. Append
-    mode emits each window once it is watermark-complete — the streaming
-    twin of operators.ruuvi_pipeline.window_aggregate (A1/A2/A3 included;
-    min_by/max_by keep the delta deterministic in state)."""
-    rounds = {c: 2 for c in METRIC_COLS[:3]} | {c: 3 for c in METRIC_COLS[3:]}
-    present = [c for c in rounds if c in readings.columns]
-    aggs = [F.round(F.avg(c), rounds[c]).alias(c) for c in present]
-    if "movement_counter" in readings.columns:
-        aggs.append(
-            rf.wrapped_delta(
-                F.max_by("movement_counter", F.col(ts_col)),
-                F.min_by("movement_counter", F.col(ts_col)),
-            ).alias("movement_delta")
-        )
-    aggs.append(F.count(F.lit(1)).cast("int").alias("samples"))
-    agg = (
-        readings.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key), F.window(F.col(ts_col), window).alias("w"))
-        .agg(*aggs)
-    )
-    return agg.select(
-        F.col(key), F.col("w.end").alias("time"), *present,
-        *(["movement_delta"] if "movement_counter" in readings.columns else []),
-        "samples",
-    )
+def windowed_averages_stream(readings: DataFrame) -> DataFrame:
+    """W1 upgraded: :func:`operators.ruuvi_pipeline.window_aggregate`
+    over the stream with a 10-minute event-time watermark. Append mode
+    emits each window once it is watermark-complete; min_by/max_by keep
+    the movement delta deterministic in state."""
+    return window_aggregate(readings.withWatermark("ts", "10 minutes"))
 
 
 def dedup_stream(
@@ -151,18 +124,22 @@ def write_parquet_sink(
     return writer.start()
 
 
-def run_available_now(df: DataFrame, query_name: str) -> list:
-    """Drain a bounded stream into memory and return collected rows —
-    the test harness path (availableNow + memory sink)."""
+def run_available_now(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Drain a bounded stream with an availableNow trigger into the
+    memory sink ``name`` (output mode ``mode``) and return the result
+    table. Every stateful operator (windowed agg, dedup, session merge,
+    stream-stream join) creates one state store per shuffle partition,
+    so the store count follows the session
+    (``session.size_shuffle_partitions``: one per task slot)."""
     q = (
         df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
+        .queryName(name)
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return df.sparkSession.sql(f"SELECT * FROM {query_name}").collect()
+    return df.sparkSession.table(name)
 
 
 _DURATION_UNITS = {

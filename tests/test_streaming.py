@@ -43,7 +43,7 @@ class TestBatchStreamingParity:
     def test_windowed_averages_match_batch(self, spark, readings_dir):
         stream = sp.read_readings_stream(spark, readings_dir, READINGS_SCHEMA)
         agg = sp.windowed_averages_stream(stream)
-        got = _strip(sp.run_available_now(agg, "stream_win"))
+        got = _strip(sp.run_available_now(agg, "stream_win", "append").collect())
         batch = rp.window_aggregate(
             spark.createDataFrame(readings_rows(), READINGS_SCHEMA)
         ).collect()
@@ -80,7 +80,9 @@ class TestStreamingDedup:
             stream = sp.read_readings_stream(
                 spark, d, "sensor_mac string, scan_id long, ts timestamp, temperature double"
             )
-            out = sp.run_available_now(sp.dedup_stream(stream), "stream_dedup")
+            out = sp.run_available_now(
+                sp.dedup_stream(stream), "stream_dedup", "append"
+            ).collect()
             assert len(out) == 2  # one per (mac, scan)
             kept = {(r["sensor_mac"], r["scan_id"]) for r in out}
             assert kept == {("M1", 1), ("M1", 2)}
@@ -97,7 +99,8 @@ class TestWindows:
                     stream, window="30 minutes", slide="10 minutes"
                 ),
                 "stream_slide",
-            )
+                "append",
+            ).collect()
         )
         # Each sensor-01 window-0 reading lands in 3 overlapping windows.
         w = [r for r in out if r["sensor_mac"] == "AA:BB:CC:DD:EE:01"]
@@ -110,7 +113,8 @@ class TestWindows:
             sp.run_available_now(
                 sp.session_windows_stream(stream, gap="6 minutes", key="sensor_mac"),
                 "stream_sess",
-            )
+                "append",
+            ).collect()
         )
         by_key = {}
         for r in out:
@@ -203,7 +207,7 @@ class TestStreamStreamIntervalJoin:
             key="user_id",
             ts_col="ts",
         ).select("purchase_id", "view_id")
-        rows = sp.run_available_now(joined, "ssj_out")
+        rows = sp.run_available_now(joined, "ssj_out", "append").collect()
         got = {(r["purchase_id"], r["view_id"]) for r in rows}
 
         bp = batch_ev.filter(F.col("event_type") == "purchase").select(

@@ -48,10 +48,10 @@ class TestAsofJoin:
         assert len(got) == 4  # every left row survives
 
     def test_forward_inclusive(self, spark):
-        from rust_ruuvitag_etl_spark.operators.asof import asof_join_forward
-
         trades, quotes = self._frames(spark)
-        out = asof_join_forward(trades, quotes, key="sym", right_value_cols=("px",))
+        out = asof_join(
+            trades, quotes, key="sym", right_value_cols=("px",), forward=True
+        )
         got = {r["trade_id"]: r["px_next"] for r in out.collect()}
         assert got[100] == 10.5  # equal-ts quote wins (inclusive >=)
         assert got[101] is None  # no quote after 10:00:30
